@@ -664,3 +664,24 @@ def test_ivf_derived_centroids_recall_two_corpus_sizes(spark):
         exact = {i for _, i in by_dist[:10]}
         recall = len(got & exact) / 10
         assert recall >= 0.6, f"n={n} k={k_cent} probe={n_probe} recall={recall}"
+
+
+def test_collect_train_sample_leaves_unset_arrow_key_unset(spark):
+    """The Arrow collect sets the key for the call only: a session that
+    never set it (a vanilla SparkSession) still has it unset after."""
+    from tfm_semisup_spark.operators.similarity import collect_train_sample
+
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    prev = spark.conf.get(key, None)
+    df = spark.createDataFrame(
+        [(i, [float(i), 1.0]) for i in range(5)], "id long, v array<double>"
+    )
+    try:
+        spark.conf.unset(key)
+        assert spark.conf.get(key, None) is None
+        sample = collect_train_sample(df, "id", "v", 3)
+        assert sample.shape == (3, 2)
+        assert spark.conf.get(key, None) is None
+    finally:
+        if prev is not None:
+            spark.conf.set(key, prev)

@@ -1,33 +1,43 @@
 """Tri-Training (Zhou & Li 2005) tests: bookkeeping invariants,
 determinism, the no-posterior-needed property (LinearSVC works), the
-majority-vote contract, and persistence."""
+majority-vote contract, persistence, and the Pipeline/CV stage
+contract."""
 
 from __future__ import annotations
 
 import pytest
+from pyspark.ml import Pipeline
 from pyspark.ml.classification import DecisionTreeClassifier, LinearSVC
 from pyspark.sql import functions as F
 
 from tfm_semisup_spark.featurization import ArrayToVector
 from tfm_semisup_spark.io import load_table
+from tfm_semisup_spark.operators.evaluation import cross_validate
 from tfm_semisup_spark.operators.tri_training import TriTraining, TriTrainingModel
-from tfm_semisup_spark.operators.unlabeled import DeterministicLabelMasker
+from tfm_semisup_spark.operators.unlabeled import (
+    DeterministicLabelMasker,
+    UnlabeledTransformer,
+)
 
 SF = "/root/testdata/sf0.001"
 
 
 @pytest.fixture(scope="module")
-def masked(spark):
+def points(spark):
     emb = load_table(spark, SF, "embeddings")
     df = ArrayToVector(inputCol="embedding", outputCol="features").transform(emb)
-    pts = df.select(
+    return df.select(
         "vec_id",
         "features",
         F.when(F.col("label") == 1, 1.0).otherwise(0.0).alias("label"),
     )
+
+
+@pytest.fixture(scope="module")
+def masked(points):
     return DeterministicLabelMasker(
         percentageLabeled=0.3, idCol="vec_id", seed=11
-    ).transform(pts).cache()
+    ).transform(points).cache()
 
 
 @pytest.fixture(scope="module")
@@ -114,3 +124,20 @@ def test_save_load_roundtrip(fitted, masked, tmp_path):
         for r in loaded.transform(masked.select("vec_id", "features")).collect()
     )
     assert a == b
+
+
+def test_cross_validate_pipeline_stage(points):
+    """TriTraining is an Estimator: it runs as a Pipeline stage after the
+    label masking, under k-fold CV like the reference's SSC families,
+    and its copy keeps every Param, seed included."""
+    tt = TriTraining(baseClassifier=DecisionTreeClassifier(seed=5), maxIter=2, seed=7)
+    pipe = Pipeline(
+        stages=[UnlabeledTransformer(percentageLabeled=0.3, seed=11), tt]
+    )
+    cv = cross_validate(points, pipe, k=2, id_col="vec_id")
+    s = cv.ss_summary
+    assert s.labeled_initial > 0 and s.unlabeled_initial > 0
+    assert 1 <= s.iterations <= 2
+    assert cv.metrics.n_rows == points.count()
+    assert 0.0 <= cv.metrics.accuracy <= 1.0
+    assert tt.copy().getOrDefault("seed") == 7

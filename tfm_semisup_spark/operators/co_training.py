@@ -15,8 +15,9 @@ disjoint feature-column views over one shared pool (VERDICT r5 #7).
 Same promotion criteria as SelfTraining (threshold / kBest; in kBest
 the per-iteration budget comes from the TOTAL unlabeled count,
 ``CoTraining.scala:199``, and applies to each view). Same physical
-re-engineering: isnan complementary-filter split, localCheckpoint per
-iteration, arithmetic pool-size bookkeeping, codegen'd probMax.
+re-engineering, through the same ``_SSCParams`` steps: isnan
+complementary-filter split, localCheckpoint per iteration, arithmetic
+pool-size bookkeeping, codegen'd probMax.
 """
 
 from __future__ import annotations
@@ -28,14 +29,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from tfm_semisup_spark.operators.lineage import release
-from tfm_semisup_spark.operators.results import SemiSupervisedSummary
 from tfm_semisup_spark.operators.self_training import (
     SelfTrainingModel,
     _SSCParams,
-    kbest_order,
-    require_probabilistic,
+    posterior,
 )
-from tfm_semisup_spark.functions.vector import prob_max
 
 _SPLIT_SEED = 8  # reference: `CoTraining.scala:137,140`
 
@@ -76,59 +74,16 @@ class CoTraining(Estimator, _SSCParams):
         viewSplit: str = "instances",
     ):
         super().__init__()
-        self.baseClassifier = baseClassifier
-        self._setDefault(
+        self._init_ssc(
             threshold=0.7,
             maxIter=3,
             criterion="threshold",
             kBest=1.0,
-            labelSelectionCol="labelSelection",
-            featuresCol="features",
-            labelCol="label",
-            checkpointDir="",
             viewSplit="instances",
         )
-        kwargs = dict(self._input_kwargs)
-        kwargs.pop("baseClassifier", None)
-        self._set(**kwargs)
-        self.last_fit_summary: SemiSupervisedSummary | None = None
-
-    def copy(self, extra=None):
-        new = CoTraining(baseClassifier=self.baseClassifier)
-        return self._copyValues(new, extra)
-
-    def _score(self, model, pool: DataFrame) -> DataFrame:
-        feats = self.getOrDefault(self.featuresCol)
-        prob_col = model.getProbabilityCol() if hasattr(model, "getProbabilityCol") else "probability"
-        return self._truncate_lineage(
-            model.transform(pool)
-            .withColumn("probMax", prob_max(prob_col))
-            .select(feats, "prediction", "probMax")
-        )
-
-    def _promote(self, preds: DataFrame, k: int, n_pool: int):
-        """Split one view's scored pool into (promoted, rest, n_promoted)."""
-        criterion = self.getOrDefault(self.criterion)
-        feats = self.getOrDefault(self.featuresCol)
-        label = self.getOrDefault(self.labelCol)
-        if criterion == "threshold":
-            confident = F.col("probMax") > self.getOrDefault(self.threshold)
-            promoted = preds.where(confident)
-            rest = preds.where(~confident)
-            n_promoted = promoted.count()
-        else:
-            promoted = preds.orderBy(*kbest_order(feats)).limit(k)
-            rest = preds.exceptAll(promoted)
-            n_promoted = min(k, n_pool)
-        as_labeled = promoted.select(feats, F.col("prediction").alias(label))
-        as_unlabeled = rest.select(feats, F.col("prediction").alias(label))
-        return as_labeled, as_unlabeled, n_promoted
 
     def _fit(self, dataset: DataFrame) -> SelfTrainingModel:
-        require_probabilistic(self.baseClassifier)
-        criterion = self.getOrDefault(self.criterion)
-        if criterion not in ("threshold", "kBest"):
-            raise ValueError(f"unknown criterion {criterion!r}")
+        self._check_criterion()
         view_split = self.getOrDefault(self.viewSplit)
         if view_split not in ("instances", "features"):
             raise ValueError(f"unknown viewSplit {view_split!r}")
@@ -136,25 +91,8 @@ class CoTraining(Estimator, _SSCParams):
             return self._fit_feature_split(dataset)
         base = self.baseClassifier
         max_iter = self.getOrDefault(self.maxIter)
-        sel = self.getOrDefault(self.labelSelectionCol)
-        feats = self.getOrDefault(self.featuresCol)
-        label = self.getOrDefault(self.labelCol)
 
-        counts = {
-            row["unlabeled"]: row["n"]
-            for row in dataset.groupBy(F.isnan(sel).alias("unlabeled"))
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        n_lab_ini = counts.get(False, 0)
-        n_unlab_ini = counts.get(True, 0)
-
-        labeled = dataset.where(~F.isnan(sel)).select(
-            feats, F.col(label).cast("double").alias(label)
-        )
-        unlabeled = dataset.where(F.isnan(sel)).select(
-            feats, F.col(label).cast("double").alias(label)
-        )
+        labeled, unlabeled, n_lab_ini, n_unlab_ini = self._split_pools(dataset)
         lab1, lab2 = labeled.randomSplit([0.5, 0.5], seed=_SPLIT_SEED)
         unlab1, unlab2 = unlabeled.randomSplit([0.5, 0.5], seed=_SPLIT_SEED)
         # checkpoint ALL four views before counting: the counts then scan
@@ -172,11 +110,8 @@ class CoTraining(Estimator, _SSCParams):
         model1 = base.fit(lab1)
         model2 = base.fit(lab2)
         it = 1
-
-        k = 0
-        if criterion == "kBest" and max_iter > 1:
-            # budget from the TOTAL unlabeled pool (`CoTraining.scala:199`)
-            k = int(round(self.getOrDefault(self.kBest) * n_unlab_ini / (max_iter - 1)))
+        # budget from the TOTAL unlabeled pool (`CoTraining.scala:199`)
+        k = self._kbest_budget(n_unlab_ini)
 
         # pool_src_{1,2}: the checkpoint each view's `unlabX` lazily
         # reads from; freed once the round's scoring re-materializes it
@@ -203,19 +138,14 @@ class CoTraining(Estimator, _SSCParams):
             n_lab1 += n_promo2
             n_lab2 += n_promo1
 
-            if n_unlab1 > 0 and n_unlab2 > 0 and it < max_iter:
+            if n_unlab1 > 0 and n_unlab2 > 0:
                 model1 = base.fit(lab1)
                 model2 = base.fit(lab2)
                 it += 1
 
-        summary = SemiSupervisedSummary(
-            labeled_initial=n_lab_ini,
-            unlabeled_initial=n_unlab_ini,
-            labeled_final=n_lab1 + n_lab2,
-            unlabeled_final=n_unlab1 + n_unlab2,
-            iterations=it,
+        summary = self._summarize(
+            n_lab_ini, n_unlab_ini, n_lab1 + n_lab2, n_unlab1 + n_unlab2, it
         )
-        self.last_fit_summary = summary
         # final model: fit on the union of both views' pools
         # (`CoTraining.scala:251`)
         final_model = base.fit(lab1.unionAll(lab2))
@@ -247,18 +177,10 @@ class CoTraining(Estimator, _SSCParams):
         base = self.baseClassifier
         criterion = self.getOrDefault(self.criterion)
         max_iter = self.getOrDefault(self.maxIter)
-        sel = self.getOrDefault(self.labelSelectionCol)
         feats = self.getOrDefault(self.featuresCol)
         label = self.getOrDefault(self.labelCol)
 
-        counts = {
-            row["unlabeled"]: row["n"]
-            for row in dataset.groupBy(F.isnan(sel).alias("unlabeled"))
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        n_lab_ini = counts.get(False, 0)
-        n_unlab_ini = counts.get(True, 0)
+        labeled, unlabeled, n_lab_ini, n_unlab_ini = self._split_pools(dataset)
 
         head = dataset.select(feats).head()
         if head is None:
@@ -271,16 +193,14 @@ class CoTraining(Estimator, _SSCParams):
         half = dim // 2
         s1 = VectorSlicer(inputCol=feats, outputCol="__v1", indices=list(range(half)))
         s2 = VectorSlicer(inputCol=feats, outputCol="__v2", indices=list(range(half, dim)))
-        ds = s2.transform(s1.transform(dataset))
 
-        labeled = self._truncate_lineage(
-            ds.where(~F.isnan(sel)).select(
-                feats, "__v1", "__v2", F.col(label).cast("double").alias(label)
+        def views(pool: DataFrame, *cols) -> DataFrame:
+            return self._truncate_lineage(
+                s2.transform(s1.transform(pool)).select(feats, "__v1", "__v2", *cols)
             )
-        )
-        unlabeled = self._truncate_lineage(
-            ds.where(F.isnan(sel)).select(feats, "__v1", "__v2")
-        )
+
+        labeled = views(labeled, label)
+        unlabeled = views(unlabeled)
         n_lab, n_unlab = n_lab_ini, n_unlab_ini
 
         base1 = base.copy({base.featuresCol: "__v1"})
@@ -288,22 +208,17 @@ class CoTraining(Estimator, _SSCParams):
         model1 = base1.fit(labeled)
         model2 = base2.fit(labeled)
         it = 1
-
-        k = 0
-        if criterion == "kBest" and max_iter > 1:
-            k = int(round(self.getOrDefault(self.kBest) * n_unlab_ini / (max_iter - 1)))
+        k = self._kbest_budget(n_unlab_ini)
 
         pool_src = unlabeled
         while it < max_iter and n_unlab > 0:
-            p1 = model1.getProbabilityCol() if hasattr(model1, "getProbabilityCol") else "probability"
             scored = model1.transform(unlabeled).select(
                 feats,
                 "__v1",
                 "__v2",
                 F.col("prediction").alias("__pred1"),
-                prob_max(p1).alias("__pm1"),
+                posterior(model1).alias("__pm1"),
             )
-            p2 = model2.getProbabilityCol() if hasattr(model2, "getProbabilityCol") else "probability"
             scored = self._truncate_lineage(
                 model2.transform(scored).select(
                     feats,
@@ -312,7 +227,7 @@ class CoTraining(Estimator, _SSCParams):
                     "__pred1",
                     "__pm1",
                     F.col("prediction").alias("__pred2"),
-                    prob_max(p2).alias("__pm2"),
+                    posterior(model2).alias("__pm2"),
                 )
             )
             release(pool_src)
@@ -361,19 +276,12 @@ class CoTraining(Estimator, _SSCParams):
             n_unlab -= n_promoted
             n_lab += n_promoted
 
-            if n_unlab > 0 and it < max_iter:
+            if n_unlab > 0:
                 model1 = base1.fit(labeled)
                 model2 = base2.fit(labeled)
                 it += 1
 
-        summary = SemiSupervisedSummary(
-            labeled_initial=n_lab_ini,
-            unlabeled_initial=n_unlab_ini,
-            labeled_final=n_lab,
-            unlabeled_final=n_unlab,
-            iterations=it,
-        )
-        self.last_fit_summary = summary
+        summary = self._summarize(n_lab_ini, n_unlab_ini, n_lab, n_unlab, it)
         final_model = base.fit(labeled.select(feats, label))
         release(pool_src)
         release(labeled)

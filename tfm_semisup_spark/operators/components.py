@@ -145,6 +145,15 @@ def connected_components(
     covers diameter ~2^25), raises if not converged (never silently
     wrong). Both paths produce identical labels (min id reachable) —
     property-tested against each other.
+
+    ``pairs_materialized=True`` (the caller passes a checkpoint scan)
+    takes a fast path that compares the RAW pair-row count — before
+    dedup and symmetrization, duplicates and both orientations counted
+    — against ``small_graph_max_edges``. The raw count is never below
+    the deduped edge count, so the fast path only ever sends a graph
+    the general path would also solve driver-side; a raw count over
+    the bound falls through to the general path, which re-decides on
+    the deduped edge set.
     """
     global last_convergence_rounds
 

@@ -144,6 +144,7 @@ def build_ssl_grid(
     criterion x percentage x (threshold|kBest) x classifier."""
     if family not in FAMILIES:
         raise ValueError(f"family must be one of {FAMILIES}")
+    ssc = {"selfTraining": SelfTraining, "coTraining": CoTraining}.get(family)
     cells: list[GridCell] = []
     for criterion in criteria:
         values = (thresholds or [0.7]) if criterion == "threshold" else (kbests or [1.0])
@@ -151,24 +152,16 @@ def build_ssl_grid(
             for value in values:
                 for clf_name, make_clf in classifiers.items():
                     base = make_clf()
-                    if family == "selfTraining":
-                        est: Estimator = SelfTraining(
-                            baseClassifier=base,
-                            criterion=criterion,
-                            threshold=value,
-                            kBest=value,
-                            maxIter=max_iter,
-                        )
-                    elif family == "coTraining":
-                        est = CoTraining(
-                            baseClassifier=base,
-                            criterion=criterion,
-                            threshold=value,
-                            kBest=value,
-                            maxIter=max_iter,
-                        )
+                    if ssc is None:
+                        est: Estimator = Supervised(baseClassifier=base)
                     else:
-                        est = Supervised(baseClassifier=base)
+                        est = ssc(
+                            baseClassifier=base,
+                            criterion=criterion,
+                            threshold=value,
+                            kBest=value,
+                            maxIter=max_iter,
+                        )
                     cells.append(
                         GridCell(clf_name, criterion, pct, value, est)
                     )

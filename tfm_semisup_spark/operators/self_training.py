@@ -35,10 +35,13 @@ reference's mutable SemiSupervisedDataResults side-channel).
 
 from __future__ import annotations
 
+import os
+
 from pyspark import keyword_only
 from pyspark.ml import Estimator, Model
 from pyspark.ml.param import Param, Params, TypeConverters
-from pyspark.sql import DataFrame
+from pyspark.ml.util import DefaultParamsReader, DefaultParamsWriter, MLWriter
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tfm_semisup_spark.functions.vector import prob_max
@@ -78,7 +81,18 @@ def require_probabilistic(classifier) -> None:
         )
 
 
+def posterior(model):
+    """Max class posterior (probMax) of the rows ``model`` scores."""
+    return prob_max(
+        model.getProbabilityCol() if hasattr(model, "getProbabilityCol") else "probability"
+    )
+
+
 class _SSCParams(Params):
+    """Params and pseudo-labelling steps shared by the SSC estimators
+    (SelfTraining, CoTraining, Supervised, TriTraining). Each estimator
+    keeps its own loop; the steps every loop takes live here once."""
+
     threshold = Param(
         Params._dummy(),
         "threshold",
@@ -115,6 +129,47 @@ class _SSCParams(Params):
         TypeConverters.toString,
     )
 
+    # -- construction ---------------------------------------------------
+
+    def _init_ssc(self, **defaults) -> None:
+        """Constructor body: the shared column defaults plus the
+        estimator's own, then the keyword arguments its
+        ``@keyword_only __init__`` received (``baseClassifier`` is a
+        plain attribute, not a Param)."""
+        kwargs = dict(self._input_kwargs)
+        self.baseClassifier = kwargs.pop("baseClassifier", None)
+        self._setDefault(
+            labelSelectionCol="labelSelection",
+            featuresCol="features",
+            labelCol="label",
+            checkpointDir="",
+            **defaults,
+        )
+        self._set(**kwargs)
+        self.last_fit_summary: SemiSupervisedSummary | None = None
+
+    def copy(self, extra=None):
+        new = type(self)(baseClassifier=self.baseClassifier)
+        return self._copyValues(new, extra)
+
+    def _check_criterion(self) -> None:
+        """The probabilistic-classifier bound and a known criterion."""
+        require_probabilistic(self.baseClassifier)
+        criterion = self.getOrDefault(self.criterion)
+        if criterion not in CRITERIA:
+            raise ValueError(f"criterion must be one of {CRITERIA}, got {criterion!r}")
+
+    def _summarize(
+        self, n_lab_ini: int, n_unlab_ini: int, n_lab: int, n_unlab: int, iterations: int
+    ) -> SemiSupervisedSummary:
+        """The fit's pool bookkeeping, also kept as ``last_fit_summary``."""
+        self.last_fit_summary = SemiSupervisedSummary(
+            n_lab_ini, n_unlab_ini, n_lab, n_unlab, iterations
+        )
+        return self.last_fit_summary
+
+    # -- pseudo-labelling steps ------------------------------------------
+
     def _truncate_lineage(self, df: DataFrame) -> DataFrame:
         """Lineage truncation per iteration (SURVEY §4: the one custom
         physical concern). localCheckpoint is fast but pins blocks to
@@ -126,52 +181,150 @@ class _SSCParams(Params):
 
         return truncate(df, self.getOrDefault(self.checkpointDir) or None)
 
+    def _split_pools(self, dataset: DataFrame):
+        """(labeled, unlabeled, n_labeled, n_unlabeled): complementary
+        ``isnan`` filters on the masked-label column, both projected to
+        (features, label as double), and ONE grouped count pass for both
+        sizes — vs the reference's filter + full-dataset exceptAll and
+        separate count jobs (``SelfTraining.scala:129-140``)."""
+        sel = self.getOrDefault(self.labelSelectionCol)
+        feats = self.getOrDefault(self.featuresCol)
+        label = self.getOrDefault(self.labelCol)
+        counts = {
+            row["unlabeled"]: row["n"]
+            for row in dataset.groupBy(F.isnan(sel).alias("unlabeled"))
+            .agg(F.count(F.lit(1)).alias("n"))
+            .collect()
+        }
+        cols = [feats, F.col(label).cast("double").alias(label)]
+        labeled = dataset.where(~F.isnan(sel)).select(*cols)
+        unlabeled = dataset.where(F.isnan(sel)).select(*cols)
+        return labeled, unlabeled, counts.get(False, 0), counts.get(True, 0)
 
-class SelfTrainingModel(Model):
+    def _score(self, model, pool: DataFrame) -> DataFrame:
+        """Score a pool into (features, prediction, probMax), truncated
+        so each round's plan starts from materialized data, not the
+        whole history."""
+        feats = self.getOrDefault(self.featuresCol)
+        return self._truncate_lineage(
+            model.transform(pool)
+            .withColumn("probMax", posterior(model))
+            .select(feats, "prediction", "probMax")
+        )
+
+    def _kbest_budget(self, n_unlabeled: int) -> int:
+        """Rows promoted per round under kBest, fixed up front from the
+        initial unlabeled count (``SelfTraining.scala:173``,
+        ``CoTraining.scala:199``); 0 under threshold or maxIter <= 1."""
+        max_iter = self.getOrDefault(self.maxIter)
+        if self.getOrDefault(self.criterion) != "kBest" or max_iter <= 1:
+            return 0
+        return int(round(self.getOrDefault(self.kBest) * n_unlabeled / (max_iter - 1)))
+
+    def _promote(self, preds: DataFrame, k: int, n_pool: int):
+        """Split a scored pool into (promoted, rest, n_promoted), both
+        frames as (features, label = prediction). threshold:
+        ``probMax > threshold`` (``SelfTraining.scala:146-170``), one
+        count job. kBest: the global top k in ``kbest_order``
+        (``:172-196``); rest is ``exceptAll`` because its multiset
+        semantics are load-bearing, and the count needs no job."""
+        feats = self.getOrDefault(self.featuresCol)
+        label = self.getOrDefault(self.labelCol)
+        if self.getOrDefault(self.criterion) == "threshold":
+            confident = F.col("probMax") > self.getOrDefault(self.threshold)
+            promoted = preds.where(confident)
+            rest = preds.where(~confident)
+            n_promoted = promoted.count()
+        else:
+            promoted = preds.orderBy(*kbest_order(feats)).limit(k)
+            rest = preds.exceptAll(promoted)
+            n_promoted = min(k, n_pool)
+        as_label = F.col("prediction").alias(label)
+        return promoted.select(feats, as_label), rest.select(feats, as_label), n_promoted
+
+
+class _SSCModelWriter(MLWriter):
+    def __init__(self, instance: "_SSCModel"):
+        super().__init__()
+        self.instance = instance
+
+    def saveImpl(self, path: str) -> None:
+        from dataclasses import asdict
+
+        models = self.instance._base_models()
+        for i, m in enumerate(models):
+            m.save(os.path.join(path, f"base{i}"))
+        DefaultParamsWriter.saveMetadata(
+            self.instance,
+            path,
+            self.sparkSession,
+            extraMetadata={
+                "base_classes": [f"{type(m).__module__}.{type(m).__name__}" for m in models],
+                "ss_summary": asdict(self.instance.ss_summary),
+            },
+        )
+
+
+class _SSCModel(Model):
+    """A fitted SSC model: its base model(s) plus the fit's pool
+    bookkeeping as ``ss_summary`` (replacing the reference's mutable
+    SemiSupervisedDataResults side-channel).
+
+    Persistence (the reference has none; models only lived inside
+    notebook sessions) uses MLlib's layout and goes through Spark's
+    filesystem layer, so any Hadoop URI works (file://, hdfs://,
+    s3a://): ``<path>/metadata`` (DefaultParamsWriter JSON plus the
+    summary and each base model's class) and ``<path>/base<i>`` (each
+    base model's own writer). ``save`` overwrites an existing path."""
+
+    def __init__(self, ss_summary: SemiSupervisedSummary | None = None):
+        super().__init__()
+        self.ss_summary = ss_summary or SemiSupervisedSummary()
+
+    def _base_models(self) -> list:
+        raise NotImplementedError
+
+    @classmethod
+    def _from_base_models(cls, models: list, ss_summary: SemiSupervisedSummary):
+        raise NotImplementedError
+
+    def copy(self, extra=None):
+        return self._from_base_models(list(self._base_models()), self.ss_summary)
+
+    def save(self, path: str) -> None:
+        _SSCModelWriter(self).overwrite().save(path)
+
+    @classmethod
+    def load(cls, path: str):
+        import importlib
+
+        meta = DefaultParamsReader.loadMetadata(
+            path, SparkSession.active(), f"{cls.__module__}.{cls.__name__}"
+        )
+        models = []
+        for i, qualname in enumerate(meta["base_classes"]):
+            module, cls_name = qualname.rsplit(".", 1)
+            base_cls = getattr(importlib.import_module(module), cls_name)
+            models.append(base_cls.load(os.path.join(path, f"base{i}")))
+        return cls._from_base_models(models, SemiSupervisedSummary(**meta["ss_summary"]))
+
+
+class SelfTrainingModel(_SSCModel):
     """Wrapper over the final fitted base model; transform delegates."""
 
     def __init__(self, base_model=None, ss_summary: SemiSupervisedSummary | None = None):
-        super().__init__()
+        super().__init__(ss_summary)
         self.base_model = base_model
-        self.ss_summary = ss_summary or SemiSupervisedSummary()
 
     def _transform(self, dataset: DataFrame) -> DataFrame:
         return self.base_model.transform(dataset)
 
-    def copy(self, extra=None):
-        return SelfTrainingModel(self.base_model, self.ss_summary)
+    def _base_models(self) -> list:
+        return [self.base_model]
 
-    # -- persistence (the reference has none; models only lived inside
-    # notebook sessions). Layout: <path>/base (base model's own writer)
-    # + <path>/ss_metadata.json (summary + base class for reload). -----
-
-    def save(self, path: str) -> None:
-        import json
-        import os
-        from dataclasses import asdict
-
-        os.makedirs(path, exist_ok=True)
-        self.base_model.write().overwrite().save(os.path.join(path, "base"))
-        meta = {
-            "base_class": f"{type(self.base_model).__module__}."
-            f"{type(self.base_model).__name__}",
-            "ss_summary": asdict(self.ss_summary),
-        }
-        with open(os.path.join(path, "ss_metadata.json"), "w") as f:
-            json.dump(meta, f)
-
-    @staticmethod
-    def load(path: str) -> "SelfTrainingModel":
-        import importlib
-        import json
-        import os
-
-        with open(os.path.join(path, "ss_metadata.json")) as f:
-            meta = json.load(f)
-        module, cls_name = meta["base_class"].rsplit(".", 1)
-        cls = getattr(importlib.import_module(module), cls_name)
-        base = cls.load(os.path.join(path, "base"))
-        return SelfTrainingModel(base, SemiSupervisedSummary(**meta["ss_summary"]))
+    @classmethod
+    def _from_base_models(cls, models, ss_summary):
+        return cls(models[0], ss_summary)
 
 
 class SelfTraining(Estimator, _SSCParams):
@@ -196,66 +349,12 @@ class SelfTraining(Estimator, _SSCParams):
         checkpointDir: str = "",
     ):
         super().__init__()
-        self.baseClassifier = baseClassifier
-        self._setDefault(
-            threshold=0.7,
-            maxIter=7,
-            criterion="threshold",
-            kBest=1.0,
-            labelSelectionCol="labelSelection",
-            featuresCol="features",
-            labelCol="label",
-            checkpointDir="",
-        )
-        kwargs = dict(self._input_kwargs)
-        kwargs.pop("baseClassifier", None)
-        self._set(**kwargs)
-        self.last_fit_summary: SemiSupervisedSummary | None = None
-
-    def copy(self, extra=None):
-        new = SelfTraining(baseClassifier=self.baseClassifier)
-        return self._copyValues(new, extra)
-
-    # -- pool helpers -------------------------------------------------
-
-    def _split_pools(self, dataset: DataFrame):
-        """Complementary isnan filters + ONE count pass (vs the
-        reference's exceptAll + two count jobs)."""
-        sel = self.getOrDefault(self.labelSelectionCol)
-        feats = self.getOrDefault(self.featuresCol)
-        label = self.getOrDefault(self.labelCol)
-        counts = {
-            row["unlabeled"]: row["n"]
-            for row in dataset.groupBy(F.isnan(sel).alias("unlabeled"))
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        labeled = dataset.where(~F.isnan(sel)).select(feats, F.col(label).cast("double").alias(label))
-        unlabeled = dataset.where(F.isnan(sel)).select(feats, F.col(label).cast("double").alias(label))
-        return labeled, unlabeled, counts.get(False, 0), counts.get(True, 0)
-
-    def _predict_pool(self, model, unlabeled: DataFrame) -> DataFrame:
-        """Score the unlabeled pool; checkpoint so each iteration's plan
-        starts from materialized data, not the whole history."""
-        feats = self.getOrDefault(self.featuresCol)
-        prob_col = model.getProbabilityCol() if hasattr(model, "getProbabilityCol") else "probability"
-        return self._truncate_lineage(
-            model.transform(unlabeled)
-            .withColumn("probMax", prob_max(prob_col))
-            .select(feats, "prediction", "probMax")
-        )
-
-    # -- fit ----------------------------------------------------------
+        self._init_ssc(threshold=0.7, maxIter=7, criterion="threshold", kBest=1.0)
 
     def _fit(self, dataset: DataFrame) -> SelfTrainingModel:
-        require_probabilistic(self.baseClassifier)
-        criterion = self.getOrDefault(self.criterion)
-        if criterion not in CRITERIA:
-            raise ValueError(f"criterion must be one of {CRITERIA}, got {criterion!r}")
+        self._check_criterion()
         base = self.baseClassifier
         max_iter = self.getOrDefault(self.maxIter)
-        feats = self.getOrDefault(self.featuresCol)
-        label = self.getOrDefault(self.labelCol)
 
         labeled, unlabeled, n_lab, n_unlab = self._split_pools(dataset)
         labeled = self._truncate_lineage(labeled)
@@ -263,57 +362,29 @@ class SelfTraining(Estimator, _SSCParams):
 
         model = base.fit(labeled)
         it = 1
-
-        if criterion == "kBest":
-            # promotion budget per iteration, fixed up front
-            # (`SelfTraining.scala:173`)
-            k = int(round(self.getOrDefault(self.kBest) * n_unlab / (max_iter - 1))) if max_iter > 1 else 0
+        k = self._kbest_budget(n_unlab)
 
         prev_preds = None
         while it < max_iter and n_unlab > 0:
-            preds = self._predict_pool(model, unlabeled)
+            preds = self._score(model, unlabeled)
             # `unlabeled` (a lazy select over the previous round's preds
             # checkpoint) was just re-materialized into `preds`; the old
             # blocks are now unreachable — free them before the fit.
             release(prev_preds)
             prev_preds = preds
-            if criterion == "threshold":
-                t = self.getOrDefault(self.threshold)
-                confident = F.col("probMax") > t
-                promoted = preds.where(confident)
-                rest = preds.where(~confident)
-                n_promoted = promoted.count()
-            else:
-                top_k = preds.orderBy(*kbest_order(feats)).limit(k)
-                rest = preds.exceptAll(top_k)
-                promoted = top_k
-                n_promoted = min(k, n_unlab)
-
-            grown = self._truncate_lineage(
-                labeled.unionAll(
-                    promoted.select(feats, F.col("prediction").alias(label))
-                )
-            )
+            promoted, unlabeled, n_promoted = self._promote(preds, k, n_unlab)
+            grown = self._truncate_lineage(labeled.unionAll(promoted))
             release(labeled)
             labeled = grown
-            unlabeled = rest.select(feats, F.col("prediction").alias(label))
             n_lab += n_promoted
             n_unlab -= n_promoted
 
             model = base.fit(labeled)
-            if n_unlab > 0 and it < max_iter:
-                it += 1
-            else:
+            if n_unlab == 0:
                 break
+            it += 1
 
         release(prev_preds)
         release(labeled)
-        summary = SemiSupervisedSummary(
-            labeled_initial=n_lab_ini,
-            unlabeled_initial=n_unlab_ini,
-            labeled_final=n_lab,
-            unlabeled_final=n_unlab,
-            iterations=it,
-        )
-        self.last_fit_summary = summary
+        summary = self._summarize(n_lab_ini, n_unlab_ini, n_lab, n_unlab, it)
         return SelfTrainingModel(model, summary)

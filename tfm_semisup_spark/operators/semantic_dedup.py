@@ -670,8 +670,9 @@ def semantic_dedup(
                 max_pair_cluster_size,
             )
         ids = assigned.select("id", "sem_cluster")
-    # only nodes WITH a near-dup edge; pairs is a checkpoint scan in
-    # every branch, so components can count/collect it directly (r15)
+    # only nodes WITH a near-dup edge; pairs is a checkpoint scan or a
+    # trivial empty local frame, so components can count/collect it
+    # directly (r15)
     comp = connected_components(pairs, pairs_materialized=True)
     # materialize the final per-row verdicts, then release every
     # intermediate checkpoint (assignment, pair list) eagerly

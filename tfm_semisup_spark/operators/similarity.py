@@ -194,7 +194,10 @@ def collect_train_sample(
         spark.conf.set(key, "true")
         pdf = sel.toPandas()
     finally:
-        if prev is not None:
+        # leave the session conf as found, including a key never set
+        if prev is None:
+            spark.conf.unset(key)
+        else:
             spark.conf.set(key, prev)
     pdf = pdf.sort_values(["__h", "__id"], kind="stable").head(max_train_rows)
     vals = pdf["__v"].to_numpy()

@@ -12,9 +12,7 @@ from __future__ import annotations
 from pyspark import keyword_only
 from pyspark.ml import Estimator
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from tfm_semisup_spark.operators.results import SemiSupervisedSummary
 from tfm_semisup_spark.operators.self_training import SelfTrainingModel, _SSCParams
 
 
@@ -29,43 +27,9 @@ class Supervised(Estimator, _SSCParams):
         labelCol: str = "label",
     ):
         super().__init__()
-        self.baseClassifier = baseClassifier
-        self._setDefault(
-            labelSelectionCol="labelSelection",
-            featuresCol="features",
-            labelCol="label",
-            checkpointDir="",
-        )
-        kwargs = dict(self._input_kwargs)
-        kwargs.pop("baseClassifier", None)
-        self._set(**kwargs)
-        self.last_fit_summary: SemiSupervisedSummary | None = None
-
-    def copy(self, extra=None):
-        new = Supervised(baseClassifier=self.baseClassifier)
-        return self._copyValues(new, extra)
+        self._init_ssc()
 
     def _fit(self, dataset: DataFrame) -> SelfTrainingModel:
-        sel = self.getOrDefault(self.labelSelectionCol)
-        feats = self.getOrDefault(self.featuresCol)
-        label = self.getOrDefault(self.labelCol)
-        counts = {
-            row["unlabeled"]: row["n"]
-            for row in dataset.groupBy(F.isnan(sel).alias("unlabeled"))
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        n_lab = counts.get(False, 0)
-        n_unlab = counts.get(True, 0)
-        labeled = dataset.where(~F.isnan(sel)).select(
-            feats, F.col(label).cast("double").alias(label)
-        )
-        summary = SemiSupervisedSummary(
-            labeled_initial=n_lab,
-            unlabeled_initial=n_unlab,
-            labeled_final=n_lab,
-            unlabeled_final=n_unlab,
-            iterations=0,
-        )
-        self.last_fit_summary = summary
+        labeled, _, n_lab, n_unlab = self._split_pools(dataset)
+        summary = self._summarize(n_lab, n_unlab, n_lab, n_unlab, 0)
         return SelfTrainingModel(self.baseClassifier.fit(labeled), summary)

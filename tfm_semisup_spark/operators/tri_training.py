@@ -45,14 +45,14 @@ from __future__ import annotations
 import math
 
 from pyspark import keyword_only
-from pyspark.ml import Model
+from pyspark.ml import Estimator
 from pyspark.ml.functions import vector_to_array
+from pyspark.ml.param import Param, Params, TypeConverters
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from tfm_semisup_spark.operators.lineage import release
-from tfm_semisup_spark.operators.results import SemiSupervisedSummary
-from tfm_semisup_spark.operators.self_training import _SSCParams
+from tfm_semisup_spark.operators.self_training import _SSCModel, _SSCParams
 
 #: deterministic stand-in for bootstrap sampling: keep rows whose
 #: content hash lands under 632/1000 (a bootstrap's expected unique
@@ -60,13 +60,12 @@ from tfm_semisup_spark.operators.self_training import _SSCParams
 _BOOT_PERMILLE = 632
 
 
-class TriTrainingModel(Model):
+class TriTrainingModel(_SSCModel):
     """Majority vote over the three fitted base models."""
 
-    def __init__(self, models=None, ss_summary: SemiSupervisedSummary | None = None):
-        super().__init__()
+    def __init__(self, models=None, ss_summary=None):
+        super().__init__(ss_summary)
         self.models = models or []
-        self.ss_summary = ss_summary or SemiSupervisedSummary()
 
     def _transform(self, dataset: DataFrame) -> DataFrame:
         out = dataset
@@ -83,43 +82,25 @@ class TriTrainingModel(Model):
         )  # covers p0==p1, p0==p2 (p0 wins those anyway) and all-distinct
         return out.withColumn("prediction", vote).drop("__p0", "__p1", "__p2")
 
-    def copy(self, extra=None):
-        return TriTrainingModel(list(self.models), self.ss_summary)
+    def _base_models(self) -> list:
+        return self.models
 
-    def save(self, path: str) -> None:
-        import json
-        import os
-        from dataclasses import asdict
-
-        os.makedirs(path, exist_ok=True)
-        classes = []
-        for i, m in enumerate(self.models):
-            m.write().overwrite().save(os.path.join(path, f"base{i}"))
-            classes.append(f"{type(m).__module__}.{type(m).__name__}")
-        meta = {"base_classes": classes, "ss_summary": asdict(self.ss_summary)}
-        with open(os.path.join(path, "ss_metadata.json"), "w") as f:
-            json.dump(meta, f)
-
-    @staticmethod
-    def load(path: str) -> "TriTrainingModel":
-        import importlib
-        import json
-        import os
-
-        with open(os.path.join(path, "ss_metadata.json")) as f:
-            meta = json.load(f)
-        models = []
-        for i, qualname in enumerate(meta["base_classes"]):
-            module, cls_name = qualname.rsplit(".", 1)
-            cls = getattr(importlib.import_module(module), cls_name)
-            models.append(cls.load(os.path.join(path, f"base{i}")))
-        return TriTrainingModel(models, SemiSupervisedSummary(**meta["ss_summary"]))
+    @classmethod
+    def _from_base_models(cls, models, ss_summary):
+        return cls(models, ss_summary)
 
 
-class TriTraining(_SSCParams):
+class TriTraining(Estimator, _SSCParams):
     """Zhou & Li 2005 defaults: maxIter bounds the outer rounds (the
     paper runs to stability; 10 is far past convergence on the test
     fixtures). ``seed`` diversifies the three hash-subsamples."""
+
+    seed = Param(
+        Params._dummy(),
+        "seed",
+        "salt of the three hash-subsamples and of the candidate order",
+        TypeConverters.toInt,
+    )
 
     @keyword_only
     def __init__(
@@ -134,24 +115,7 @@ class TriTraining(_SSCParams):
         seed: int = 13,
     ):
         super().__init__()
-        self.baseClassifier = baseClassifier
-        self.seed = seed
-        self._setDefault(
-            maxIter=10,
-            labelSelectionCol="labelSelection",
-            featuresCol="features",
-            labelCol="label",
-            checkpointDir="",
-        )
-        kwargs = dict(self._input_kwargs)
-        kwargs.pop("baseClassifier", None)
-        kwargs.pop("seed", None)
-        self._set(**kwargs)
-        self.last_fit_summary: SemiSupervisedSummary | None = None
-
-    def copy(self, extra=None):
-        new = TriTraining(baseClassifier=self.baseClassifier, seed=self.seed)
-        return self._copyValues(new, extra)
+        self._init_ssc(maxIter=10, seed=13)
 
     # -- helpers -------------------------------------------------------
 
@@ -169,34 +133,22 @@ class TriTraining(_SSCParams):
             )
         return self._truncate_lineage(out.select(*extra_cols, "__p0", "__p1", "__p2"))
 
-    def fit(self, dataset: DataFrame) -> TriTrainingModel:
+    def _fit(self, dataset: DataFrame) -> TriTrainingModel:
         base = self.baseClassifier
         max_iter = self.getOrDefault(self.maxIter)
-        sel = self.getOrDefault(self.labelSelectionCol)
         feats = self.getOrDefault(self.featuresCol)
         label = self.getOrDefault(self.labelCol)
+        seed = self.getOrDefault(self.seed)
 
-        counts = {
-            row["unlabeled"]: row["n"]
-            for row in dataset.groupBy(F.isnan(sel).alias("unlabeled"))
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        n_lab_ini = counts.get(False, 0)
-        n_unlab_ini = counts.get(True, 0)
-
-        labeled = self._truncate_lineage(
-            dataset.where(~F.isnan(sel)).select(
-                feats, F.col(label).cast("double").alias(label)
-            )
-        )
-        unlabeled = self._truncate_lineage(dataset.where(F.isnan(sel)).select(feats))
+        labeled, unlabeled, n_lab_ini, n_unlab_ini = self._split_pools(dataset)
+        labeled = self._truncate_lineage(labeled)
+        unlabeled = self._truncate_lineage(unlabeled.select(feats))
 
         # diversified deterministic subsamples (bootstrap stand-in)
         models = []
         for i in range(3):
             sub = labeled.where(
-                F.pmod(self._content_hash(self.seed + i), F.lit(1000))
+                F.pmod(self._content_hash(seed + i), F.lit(1000))
                 < _BOOT_PERMILLE
             )
             models.append(base.fit(sub))
@@ -269,7 +221,7 @@ class TriTraining(_SSCParams):
                 cand = unlab_scored.where(F.col(f"__p{j}") == F.col(f"__p{k}"))
                 if take < n_cand:
                     cand = cand.orderBy(
-                        F.pmod(self._content_hash(self.seed + 100 + i), F.lit(1 << 31))
+                        F.pmod(self._content_hash(seed + 100 + i), F.lit(1 << 31))
                     ).limit(take)
                 pseudo = cand.select(feats, F.col(f"__p{j}").alias(label))
                 new_models[i] = base.fit(labeled.unionAll(pseudo))
@@ -288,14 +240,13 @@ class TriTraining(_SSCParams):
         # augmented training set (L ∪ L_i) any classifier ended on,
         # which keeps labeled_final + unlabeled_final == total.
         max_accept = max(n_last_accept)
-        summary = SemiSupervisedSummary(
-            labeled_initial=n_lab_ini,
-            unlabeled_initial=n_unlab_ini,
-            labeled_final=n_lab_ini + max_accept,
-            unlabeled_final=n_unlab_ini - max_accept,
-            iterations=it,
+        summary = self._summarize(
+            n_lab_ini,
+            n_unlab_ini,
+            n_lab_ini + max_accept,
+            n_unlab_ini - max_accept,
+            it,
         )
-        self.last_fit_summary = summary
         release(labeled)
         release(unlabeled)
         return TriTrainingModel(models, summary)
