@@ -1,5 +1,8 @@
 from __future__ import annotations
 
+import itertools
+import time
+
 import pytest
 
 from tfm_semisup_spark.session import get_spark
@@ -19,3 +22,29 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def spark_jobs(spark):
+    """``spark_jobs(action) -> int``: Spark jobs ``action()`` runs, read
+    from the status tracker under a job group of its own once the
+    listener bus has caught up."""
+    sc = spark.sparkContext
+    groups = itertools.count()
+
+    def count(action) -> int:
+        group = f"counted-jobs-{next(groups)}"
+        sc.setJobGroup(group, "counted action")
+        try:
+            action()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        tracker = sc.statusTracker()
+        seen, stable, deadline = -1, 0, time.time() + 30
+        while stable < 3 and time.time() < deadline:
+            time.sleep(0.2)
+            n = len(tracker.getJobIdsForGroup(group))
+            stable, seen = (stable + 1 if n == seen else 0), n
+        return seen
+
+    return count

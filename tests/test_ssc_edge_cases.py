@@ -151,35 +151,14 @@ def test_model_persistence(spark, masked, tmp_path, monkeypatch, family, uri):
     assert orig == back
 
 
-def _fit_jobs(spark, est, df) -> int:
-    """Spark jobs one ``fit`` runs, read from the status tracker under a
-    job group of its own once the listener bus has caught up."""
-    import time
-
-    sc = spark.sparkContext
-    group = f"ssc-fit-jobs-{est.uid}"
-    sc.setJobGroup(group, "pinned SSC fit")
-    try:
-        est.fit(df)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    tracker = sc.statusTracker()
-    seen, stable, deadline = -1, 0, time.time() + 30
-    while stable < 3 and time.time() < deadline:
-        time.sleep(0.2)
-        n = len(tracker.getJobIdsForGroup(group))
-        stable, seen = (stable + 1 if n == seen else 0), n
-    return seen
-
-
 #: Spark jobs of one fit on ``pinned_input``, per estimator setting
 FIT_JOBS = {
-    "self_threshold": 27,
-    "self_kbest": 38,
-    "co_instances": 52,
-    "co_features": 24,
-    "supervised": 12,
-    "tri": 102,
+    "self_threshold": 23,
+    "self_kbest": 36,
+    "co_instances": 39,
+    "co_features": 23,
+    "supervised": 11,
+    "tri": 87,
 }
 
 
@@ -220,9 +199,113 @@ def pinned_input(masked):
 
 
 @pytest.mark.parametrize("case", sorted(FIT_JOBS))
-def test_fit_job_count_pinned(spark, pinned_input, case):
+def test_fit_job_count_pinned(spark_jobs, pinned_input, case):
     """Each SSC estimator's ``fit`` on a fixed masked input runs a pinned
     number of Spark jobs. At this size a fit's time follows its job
     count, so a change to the eager job cascade shows up here first."""
     est = _pinned_estimator(case)
-    assert _fit_jobs(spark, est, pinned_input) == FIT_JOBS[case]
+    assert spark_jobs(lambda: est.fit(pinned_input)) == FIT_JOBS[case]
+
+
+@pytest.mark.parametrize("case", sorted(FIT_JOBS))
+def test_fit_summary_same_under_both_checkpoints(pinned_input, tmp_path, case):
+    """The pool bookkeeping, counted inside the fit's checkpoint jobs,
+    is the same under localCheckpoint and under a reliable
+    ``Dataset.checkpoint`` (checkpointDir), and matches explicit
+    count() cross-checks on the same input."""
+    local = _pinned_estimator(case)
+    local.fit(pinned_input)
+    reliable = _pinned_estimator(case)
+    reliable.set(reliable.checkpointDir, (tmp_path / "ckpt").as_uri())
+    reliable.fit(pinned_input)
+    s = local.last_fit_summary
+    assert reliable.last_fit_summary == s
+    unlabeled = F.isnan("labelSelection")
+    n_lab = pinned_input.where(~unlabeled).count()
+    n_unlab = pinned_input.where(unlabeled).count()
+    assert (s.labeled_initial, s.unlabeled_initial) == (n_lab, n_unlab)
+    assert s.labeled_final + s.unlabeled_final == n_lab + n_unlab
+    assert s.labeled_final >= s.labeled_initial
+
+
+@pytest.mark.parametrize("case", sorted(FIT_JOBS))
+def test_fit_with_empty_unlabeled_pool(masked, case):
+    """percentageLabeled=1.0 leaves the unlabeled pool empty: every
+    estimator fits on the labeled rows alone and promotes nothing."""
+    all_labeled = DeterministicLabelMasker(
+        percentageLabeled=1.0, idCol="vec_id", seed=11
+    ).transform(masked.drop("labelSelection"))
+    s = _pinned_estimator(case).fit(all_labeled).ss_summary
+    n = all_labeled.count()
+    assert (s.labeled_initial, s.unlabeled_initial) == (n, 0)
+    assert (s.labeled_final, s.unlabeled_final) == (n, 0)
+
+
+def test_split_pools_zero_partition_input(spark, masked):
+    """A zero-partition input yields two empty pools, not a hang or a
+    missing metrics row."""
+    empty = spark.createDataFrame(spark.sparkContext.emptyRDD(), masked.schema)
+    assert empty.rdd.getNumPartitions() == 0
+    labeled, unlabeled, n_lab, n_unlab = SelfTraining()._split_pools(empty)
+    assert (n_lab, n_unlab) == (0, 0)
+    assert labeled.count() == unlabeled.count() == 0
+
+
+@pytest.mark.parametrize("reliable", [False, True], ids=["local", "reliable"])
+def test_truncate_counting_matches_count(masked, tmp_path, reliable):
+    """Counts observed inside the checkpoint job equal count() over the
+    checkpointed frame, for either checkpoint kind."""
+    from tfm_semisup_spark.operators.lineage import truncate_counting
+
+    ckpt_dir = (tmp_path / "ckpt").as_uri() if reliable else None
+    conds = {
+        "unlabeled": F.isnan("labelSelection"),
+        "positive": F.col("label") > 0.5,
+        "never": F.lit(False),
+    }
+    out, n = truncate_counting(masked, "masked input", ckpt_dir, **conds)
+    assert n == {
+        "rows": out.count(),
+        **{key: out.where(cond).count() for key, cond in conds.items()},
+    }
+
+
+def test_truncate_counting_leaves_session_serializable(masked):
+    """Counting must not give the session state that tasks cannot
+    serialize: a random forest keeps its training summary, which holds
+    the session, and its transform UDF ships that to every task. (An
+    ``Observation`` breaks exactly this with "Task not serializable".)"""
+    from pyspark.ml.classification import RandomForestClassifier
+
+    from tfm_semisup_spark.operators.lineage import release, truncate_counting
+
+    pool, n = truncate_counting(masked, "masked input", positive=F.col("label") > 0.5)
+    model = RandomForestClassifier(numTrees=3, seed=5).fit(pool)
+    preds = model.transform(pool).select("prediction").collect()
+    assert len(preds) == n["rows"]
+    release(pool)
+
+
+@pytest.mark.parametrize(
+    "metrics",
+    [None, {"rows": 3}, {"rows": 3, "x": None}, {"rows": 3, "x": 4}, {"rows": 3, "x": -1}],
+    ids=["no_row", "missing", "null", "above_rows", "negative"],
+)
+def test_check_counts_rejects_bad_rows(metrics):
+    """An absent observed row, an absent or null count, or a count
+    outside [0, rows] raises, naming the frame."""
+    from tfm_semisup_spark.operators.lineage import check_counts
+
+    with pytest.raises(RuntimeError, match="scored pool: observed"):
+        check_counts("scored pool", metrics, ["x"])
+
+
+@pytest.mark.parametrize(
+    "kbest,n_unlabeled,max_iter,budget", [(1.0, 5, 3, 3), (0.5, 346, 3, 87)]
+)
+def test_kbest_budget_rounds_half_up(kbest, n_unlabeled, max_iter, budget):
+    """round(kBest * |U| / (maxIter - 1)) is Scala's half-up math.round
+    (``SelfTraining.scala:173``): 2.5 -> 3 and 86.5 -> 87, where
+    Python's round would give 2 and 86."""
+    st = SelfTraining(criterion="kBest", kBest=kbest, maxIter=max_iter)
+    assert st._kbest_budget(n_unlabeled) == budget

@@ -105,8 +105,9 @@ def test_self_training_kbest(labeled_points):
     )
     model = st.fit(data)
     s = model.ss_summary
-    # per-iteration budget k = round(0.5 * U / 2); after ≤2 promotions
-    expected_k = round(0.5 * s.unlabeled_initial / 2)
+    # per-iteration budget k = round(0.5 * U / 2), rounded half up like
+    # the reference's Scala math.round; after ≤2 promotions
+    expected_k = math.floor(0.5 * s.unlabeled_initial / 2 + 0.5)
     assert s.labeled_final - s.labeled_initial <= 2 * expected_k
     assert s.labeled_final > s.labeled_initial
 

@@ -93,19 +93,21 @@ class CoTraining(Estimator, _SSCParams):
         max_iter = self.getOrDefault(self.maxIter)
 
         labeled, unlabeled, n_lab_ini, n_unlab_ini = self._split_pools(dataset)
-        lab1, lab2 = labeled.randomSplit([0.5, 0.5], seed=_SPLIT_SEED)
-        unlab1, unlab2 = unlabeled.randomSplit([0.5, 0.5], seed=_SPLIT_SEED)
-        # checkpoint ALL four views before counting: the counts then scan
-        # materialized data instead of re-running the upstream
-        # featurization once per count() action
-        lab1 = self._truncate_lineage(lab1)
-        lab2 = self._truncate_lineage(lab2)
-        unlab1 = self._truncate_lineage(unlab1)
-        unlab2 = self._truncate_lineage(unlab2)
-        n_unlab1 = unlab1.count()
-        n_unlab2 = unlab2.count()
-        n_lab1 = lab1.count()
-        n_lab2 = lab2.count()
+        # checkpoint each of the four views once, counting its rows
+        # inside that checkpoint job
+        views = [
+            self._truncate_counting(view, name)
+            for view, name in zip(
+                labeled.randomSplit([0.5, 0.5], seed=_SPLIT_SEED)
+                + unlabeled.randomSplit([0.5, 0.5], seed=_SPLIT_SEED),
+                ("labeled view 1", "labeled view 2", "unlabeled view 1", "unlabeled view 2"),
+            )
+        ]
+        (lab1, n_lab1), (lab2, n_lab2), (unlab1, n_unlab1), (unlab2, n_unlab2) = [
+            (view, n["rows"]) for view, n in views
+        ]
+        # the views are materialized: free the pools' shared checkpoint
+        release(labeled)
 
         model1 = base.fit(lab1)
         model2 = base.fit(lab2)
@@ -118,13 +120,13 @@ class CoTraining(Estimator, _SSCParams):
         # into predsX (operators/lineage.py:release)
         pool_src1, pool_src2 = unlab1, unlab2
         while it < max_iter and n_unlab1 > 0 and n_unlab2 > 0:
-            preds1 = self._score(model1, unlab1)
-            preds2 = self._score(model2, unlab2)
+            preds1, n_conf1 = self._score(model1, unlab1)
+            preds2, n_conf2 = self._score(model2, unlab2)
             release(pool_src1)
             release(pool_src2)
             pool_src1, pool_src2 = preds1, preds2
-            promo1, unlab1, n_promo1 = self._promote(preds1, k, n_unlab1)
-            promo2, unlab2, n_promo2 = self._promote(preds2, k, n_unlab2)
+            promo1, unlab1, n_promo1 = self._promote(preds1, n_conf1, k, n_unlab1)
+            promo2, unlab2, n_promo2 = self._promote(preds2, n_conf2, k, n_unlab2)
 
             # cross-teaching: view 1 learns from view 2's confident labels
             # and vice versa (`CoTraining.scala:172-173`)
@@ -199,8 +201,10 @@ class CoTraining(Estimator, _SSCParams):
                 s2.transform(s1.transform(pool)).select(feats, "__v1", "__v2", *cols)
             )
 
+        pools = labeled  # a filter over the pools' shared checkpoint
         labeled = views(labeled, label)
         unlabeled = views(unlabeled)
+        release(pools)
         n_lab, n_unlab = n_lab_ini, n_unlab_ini
 
         base1 = base.copy({base.featuresCol: "__v1"})
@@ -209,6 +213,8 @@ class CoTraining(Estimator, _SSCParams):
         model2 = base2.fit(labeled)
         it = 1
         k = self._kbest_budget(n_unlab_ini)
+        t = self.getOrDefault(self.threshold)
+        either = (F.col("__pm1") > t) | (F.col("__pm2") > t)
 
         pool_src = unlabeled
         while it < max_iter and n_unlab > 0:
@@ -219,7 +225,9 @@ class CoTraining(Estimator, _SSCParams):
                 F.col("prediction").alias("__pred1"),
                 posterior(model1).alias("__pm1"),
             )
-            scored = self._truncate_lineage(
+            # the threshold branch's promoted count comes out of this
+            # checkpoint job
+            scored, n = self._truncate_counting(
                 model2.transform(scored).select(
                     feats,
                     "__v1",
@@ -228,14 +236,14 @@ class CoTraining(Estimator, _SSCParams):
                     "__pm1",
                     F.col("prediction").alias("__pred2"),
                     posterior(model2).alias("__pm2"),
-                )
+                ),
+                "scored pool",
+                confident=either,
             )
             release(pool_src)
             pool_src = scored
 
             if criterion == "threshold":
-                t = self.getOrDefault(self.threshold)
-                either = (F.col("__pm1") > t) | (F.col("__pm2") > t)
                 # view 1 supplies the label iff it is confident AND
                 # (better than view 2 OR view 2 is not confident)
                 winner = F.when(
@@ -245,7 +253,7 @@ class CoTraining(Estimator, _SSCParams):
                 ).otherwise(F.col("__pred2"))
                 promoted = scored.where(either)
                 rest = scored.where(~either)
-                n_promoted = promoted.count()
+                n_promoted = n["confident"]
             else:
                 # the better-posterior view supplies the pseudo-label
                 winner = F.when(

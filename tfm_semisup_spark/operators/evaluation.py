@@ -36,6 +36,7 @@ from pyspark.ml import Pipeline
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from tfm_semisup_spark.operators.lineage import release
 from tfm_semisup_spark.operators.results import SemiSupervisedSummary
 
 KFOLD_SEED = 8  # reference: `FunctionsSemiSupervised.scala:273`
@@ -253,6 +254,8 @@ def cross_validate(
         model = pipeline.fit(train)
         per_fold.append(evaluate_predictions(model.transform(test)))
         summaries.append(_find_ss_summary(model))
+    # free the fold checkpoint now, not at the next driver GC
+    release(folded)
 
     avg = ClassificationMetrics(
         accuracy=sum(m.accuracy for m in per_fold) / k,

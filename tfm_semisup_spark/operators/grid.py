@@ -31,6 +31,7 @@ from pyspark.sql.types import (
 
 from tfm_semisup_spark.operators.co_training import CoTraining
 from tfm_semisup_spark.operators.evaluation import cross_validate
+from tfm_semisup_spark.operators.lineage import release
 from tfm_semisup_spark.operators.self_training import SelfTraining
 from tfm_semisup_spark.operators.supervised import Supervised
 from tfm_semisup_spark.operators.unlabeled import UnlabeledTransformer
@@ -281,6 +282,10 @@ def run_holdout_baselines(
                     float(m.f1_label1),
                 )
             )
+        release(subset)
+    # free the split checkpoints now, not at the next driver GC
+    release(train)
+    release(test)
     return spark.createDataFrame(rows, HOLDOUT_SCHEMA)
 
 

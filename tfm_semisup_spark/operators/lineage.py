@@ -2,7 +2,7 @@
 
 Iterative algorithms (SelfTraining/CoTraining rounds, connected-
 components label propagation) re-derive a DataFrame from its previous
-version each round. Two physical concerns follow:
+version each round. Three physical concerns follow:
 
 1. **Truncation** — without it the plan (and the recomputation cost of
    any action) grows with the round count. ``truncate`` materializes
@@ -22,6 +22,27 @@ version each round. Two physical concerns follow:
    checkpoint's backing RDD as soon as the next round's checkpoint is
    materialized.
 
+3. **Counting** — an iterative operator usually needs the size of
+   the frame it just truncated (a pool, the confident part of a
+   scored pool). A ``count()`` after the checkpoint is a second job
+   over the same blocks. ``truncate_counting`` instead observes the
+   counts (``DataFrame.observe``) on the frame it checkpoints, so they
+   are aggregated inside the checkpoint job and cost no job of their
+   own. Each count is exact: the observe node is the top of the
+   checkpointed plan, with no exchange above it, so it runs in the
+   job's result stage, and Spark applies a result-stage accumulator
+   update once per partition (a retried or speculative task does not
+   count twice). The metrics are read synchronously from the observed
+   frame's own query execution, which is the one Spark's checkpoint
+   action runs. The name-keyed ``observe`` is used, not an
+   ``Observation``: the first ``Observation`` gives the session a
+   non-serializable ObservationManager, and every later task that
+   captures the session (an MLlib model that keeps its training
+   summary, e.g. a random forest) then fails with "Task not
+   serializable". A missing metrics row, or a count outside
+   [0, rows], raises ``RuntimeError`` naming the frame; unlike
+   ``release`` below, the py4j read of the metrics is not best-effort.
+
 ``release`` reaches through the analyzed plan (``LogicalRDD``) to the
 backing RDD via py4j — a private-API touch, so it is strictly
 best-effort: any failure degrades to the old behavior (blocks freed at
@@ -31,7 +52,13 @@ way; a released DataFrame must simply not be read again.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import json
+import uuid
+
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
+
+ROWS = "rows"
 
 
 def truncate(
@@ -54,6 +81,43 @@ def truncate(
             sc.setCheckpointDir(checkpoint_dir)
         return df.checkpoint(eager=eager)
     return df.localCheckpoint(eager=eager)
+
+
+def truncate_counting(
+    df: DataFrame, name: str, checkpoint_dir: str | None = None, **conditions: Column
+) -> tuple[DataFrame, dict[str, int]]:
+    """Eager ``truncate`` of ``df`` that also counts, in the same job,
+    its rows (key ``rows``) and the rows satisfying each boolean
+    condition (a null condition does not count). Returns the
+    checkpointed frame and ``{key: count}``; ``name`` labels the frame
+    in the errors raised when the counts are missing or out of range.
+    The metrics row is read through the observed frame's query
+    execution via py4j."""
+    key = f"truncate_counting_{uuid.uuid4().hex}"
+    observed = df.observe(
+        key,
+        F.count(F.lit(1)).alias(ROWS),
+        *[F.count(F.when(cond, 1)).alias(k) for k, cond in conditions.items()],
+    )
+    out = truncate(observed, checkpoint_dir)
+    found = observed._jdf.queryExecution().observedMetrics().get(key)
+    metrics = None if found.isEmpty() else json.loads(found.get().json())
+    return out, check_counts(name, metrics, list(conditions))
+
+
+def check_counts(name: str, metrics: dict | None, keys: list[str]) -> dict[str, int]:
+    """``{rows, *keys: count}`` from the observed metrics row of
+    ``name`` (None: no row), each count checked against the frame's
+    row count."""
+    keys = [ROWS, *keys]
+    missing = [k for k in keys if (metrics or {}).get(k) is None]
+    if missing:
+        raise RuntimeError(f"{name}: observed metrics row lacks {missing}")
+    rows = metrics[ROWS]
+    bad = {k: metrics[k] for k in keys if not 0 <= metrics[k] <= rows}
+    if bad:
+        raise RuntimeError(f"{name}: observed counts {bad} outside [0, {rows}] rows")
+    return {k: int(metrics[k]) for k in keys}
 
 
 def release(df: DataFrame | None) -> None:

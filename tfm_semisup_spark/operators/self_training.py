@@ -16,15 +16,18 @@ Deliberate re-engineering vs the reference (SURVEY.md §4):
   exceptAll shuffle of the whole dataset is pure waste. ``exceptAll``
   is kept only where multiset semantics are load-bearing: the kBest
   "rest = predictions − top-k" (`:178`).
-- one ``groupBy(condition).count()`` pass per iteration instead of the
-  reference's 2-4 separate ``count()`` actions (`:133-140,156-157`);
+- no ``count()`` job at all instead of the reference's 2-4 per
+  iteration (`:133-140,156-157`): the pool sizes and each round's
+  confident-row count are observed metrics of the checkpoint jobs that
+  materialize those frames anyway (``lineage.truncate_counting``);
   pool sizes are then maintained arithmetically.
-- ``localCheckpoint`` on each iteration's predictions and on the grown
-  labeled pool: the reference's plan grows every iteration
-  (union-of-unions re-evaluated at each action; its cache() calls are
-  immediately undone by unpersist, `:143-144,167-168`). Checkpointing
-  truncates lineage — the one genuinely custom physical concern in the
-  rebuild, and what makes 100+ iterations viable on a cluster.
+- ``localCheckpoint`` on the projected input pool, on each iteration's
+  predictions and on the grown labeled pool: the reference's plan
+  grows every iteration (union-of-unions re-evaluated at each action;
+  its cache() calls are immediately undone by unpersist,
+  `:143-144,167-168`). Checkpointing truncates lineage — the one
+  genuinely custom physical concern in the rebuild, and what makes
+  100+ iterations viable on a cluster.
 - max posterior via ``array_max(vector_to_array(probability))`` instead
   of a UDF (`:128`) — stays inside whole-stage codegen.
 
@@ -35,6 +38,7 @@ reference's mutable SemiSupervisedDataResults side-channel).
 
 from __future__ import annotations
 
+import math
 import os
 
 from pyspark import keyword_only
@@ -45,7 +49,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tfm_semisup_spark.functions.vector import prob_max
-from tfm_semisup_spark.operators.lineage import release
+from tfm_semisup_spark.operators.lineage import release, truncate_counting
 from tfm_semisup_spark.operators.results import SemiSupervisedSummary
 
 CRITERIA = ("threshold", "kBest")
@@ -181,60 +185,85 @@ class _SSCParams(Params):
 
         return truncate(df, self.getOrDefault(self.checkpointDir) or None)
 
+    def _truncate_counting(self, df: DataFrame, name: str, **conditions):
+        """``_truncate_lineage`` that also counts the rows satisfying
+        each condition inside the checkpoint job
+        (operators/lineage.py:truncate_counting)."""
+        return truncate_counting(
+            df, name, self.getOrDefault(self.checkpointDir) or None, **conditions
+        )
+
     def _split_pools(self, dataset: DataFrame):
-        """(labeled, unlabeled, n_labeled, n_unlabeled): complementary
-        ``isnan`` filters on the masked-label column, both projected to
-        (features, label as double), and ONE grouped count pass for both
-        sizes — vs the reference's filter + full-dataset exceptAll and
-        separate count jobs (``SelfTraining.scala:129-140``)."""
+        """(labeled, unlabeled, n_labeled, n_unlabeled): the input
+        projected to (features, label as double, isnan flag of the
+        masked-label column) is checkpointed ONCE, and both pool sizes
+        are counted inside that checkpoint job; the pools are
+        complementary filters on the flag over the checkpoint — vs the
+        reference's filter + full-dataset exceptAll and separate count
+        jobs (``SelfTraining.scala:129-140``). The pools share the
+        checkpoint: ``release`` of either frees it, so release only
+        once neither is read again."""
         sel = self.getOrDefault(self.labelSelectionCol)
         feats = self.getOrDefault(self.featuresCol)
         label = self.getOrDefault(self.labelCol)
-        counts = {
-            row["unlabeled"]: row["n"]
-            for row in dataset.groupBy(F.isnan(sel).alias("unlabeled"))
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        cols = [feats, F.col(label).cast("double").alias(label)]
-        labeled = dataset.where(~F.isnan(sel)).select(*cols)
-        unlabeled = dataset.where(F.isnan(sel)).select(*cols)
-        return labeled, unlabeled, counts.get(False, 0), counts.get(True, 0)
+        flag = F.col("__unlabeled")
+        pool, n = self._truncate_counting(
+            dataset.select(
+                feats,
+                F.col(label).cast("double").alias(label),
+                F.isnan(sel).alias("__unlabeled"),
+            ),
+            "labeled/unlabeled pool",
+            labeled=~flag,
+            unlabeled=flag,
+        )
+        labeled = pool.where(~flag).select(feats, label)
+        unlabeled = pool.where(flag).select(feats, label)
+        return labeled, unlabeled, n["labeled"], n["unlabeled"]
 
-    def _score(self, model, pool: DataFrame) -> DataFrame:
-        """Score a pool into (features, prediction, probMax), truncated
-        so each round's plan starts from materialized data, not the
-        whole history."""
+    def _score(self, model, pool: DataFrame):
+        """(preds, n_confident): the pool scored into (features,
+        prediction, probMax), truncated so each round's plan starts
+        from materialized data, not the whole history, and the number
+        of its rows with ``probMax > threshold``, counted inside that
+        checkpoint job."""
         feats = self.getOrDefault(self.featuresCol)
-        return self._truncate_lineage(
+        preds, n = self._truncate_counting(
             model.transform(pool)
             .withColumn("probMax", posterior(model))
-            .select(feats, "prediction", "probMax")
+            .select(feats, "prediction", "probMax"),
+            "scored pool",
+            confident=F.col("probMax") > self.getOrDefault(self.threshold),
         )
+        return preds, n["confident"]
 
     def _kbest_budget(self, n_unlabeled: int) -> int:
         """Rows promoted per round under kBest, fixed up front from the
-        initial unlabeled count (``SelfTraining.scala:173``,
-        ``CoTraining.scala:199``); 0 under threshold or maxIter <= 1."""
+        initial unlabeled count: ``round(kBest * U / (maxIter - 1))``
+        (``SelfTraining.scala:173``, ``CoTraining.scala:199``) with
+        Scala's half-up ``math.round``; 0 under threshold or
+        maxIter <= 1."""
         max_iter = self.getOrDefault(self.maxIter)
         if self.getOrDefault(self.criterion) != "kBest" or max_iter <= 1:
             return 0
-        return int(round(self.getOrDefault(self.kBest) * n_unlabeled / (max_iter - 1)))
+        per_round = self.getOrDefault(self.kBest) * n_unlabeled / (max_iter - 1)
+        return math.floor(per_round + 0.5)  # Python's round rounds half to even
 
-    def _promote(self, preds: DataFrame, k: int, n_pool: int):
+    def _promote(self, preds: DataFrame, n_confident: int, k: int, n_pool: int):
         """Split a scored pool into (promoted, rest, n_promoted), both
-        frames as (features, label = prediction). threshold:
-        ``probMax > threshold`` (``SelfTraining.scala:146-170``), one
-        count job. kBest: the global top k in ``kbest_order``
-        (``:172-196``); rest is ``exceptAll`` because its multiset
-        semantics are load-bearing, and the count needs no job."""
+        frames as (features, label = prediction); no Spark job. threshold:
+        ``probMax > threshold`` (``SelfTraining.scala:146-170``), whose
+        size ``_score`` already counted (``n_confident``). kBest: the
+        global top k in ``kbest_order`` (``:172-196``), min(k, pool)
+        rows; rest is ``exceptAll`` because its multiset semantics are
+        load-bearing."""
         feats = self.getOrDefault(self.featuresCol)
         label = self.getOrDefault(self.labelCol)
         if self.getOrDefault(self.criterion) == "threshold":
             confident = F.col("probMax") > self.getOrDefault(self.threshold)
             promoted = preds.where(confident)
             rest = preds.where(~confident)
-            n_promoted = promoted.count()
+            n_promoted = n_confident
         else:
             promoted = preds.orderBy(*kbest_order(feats)).limit(k)
             rest = preds.exceptAll(promoted)
@@ -357,7 +386,6 @@ class SelfTraining(Estimator, _SSCParams):
         max_iter = self.getOrDefault(self.maxIter)
 
         labeled, unlabeled, n_lab, n_unlab = self._split_pools(dataset)
-        labeled = self._truncate_lineage(labeled)
         n_lab_ini, n_unlab_ini = n_lab, n_unlab
 
         model = base.fit(labeled)
@@ -366,13 +394,15 @@ class SelfTraining(Estimator, _SSCParams):
 
         prev_preds = None
         while it < max_iter and n_unlab > 0:
-            preds = self._score(model, unlabeled)
+            preds, n_confident = self._score(model, unlabeled)
             # `unlabeled` (a lazy select over the previous round's preds
             # checkpoint) was just re-materialized into `preds`; the old
             # blocks are now unreachable — free them before the fit.
             release(prev_preds)
             prev_preds = preds
-            promoted, unlabeled, n_promoted = self._promote(preds, k, n_unlab)
+            promoted, unlabeled, n_promoted = self._promote(
+                preds, n_confident, k, n_unlab
+            )
             grown = self._truncate_lineage(labeled.unionAll(promoted))
             release(labeled)
             labeled = grown

@@ -4,7 +4,10 @@ Drops unlabeled rows and fits the base classifier on the rest. The
 reference computes the labeled set as ``isNaN filter + exceptAll`` —
 a full shuffle where a complementary filter is semantically identical
 (the split key IS the sentinel column; SURVEY.md §4) — so here it is a
-single pushdown-friendly filter.
+filter over the checkpoint ``_split_pools`` takes of the projected
+input, whose job also counts both pools. The base classifier fits on
+that materialized pool rather than re-running the featurization and
+masking pipeline in each of its own jobs.
 """
 
 from __future__ import annotations
@@ -13,6 +16,7 @@ from pyspark import keyword_only
 from pyspark.ml import Estimator
 from pyspark.sql import DataFrame
 
+from tfm_semisup_spark.operators.lineage import release
 from tfm_semisup_spark.operators.self_training import SelfTrainingModel, _SSCParams
 
 
@@ -32,4 +36,6 @@ class Supervised(Estimator, _SSCParams):
     def _fit(self, dataset: DataFrame) -> SelfTrainingModel:
         labeled, _, n_lab, n_unlab = self._split_pools(dataset)
         summary = self._summarize(n_lab, n_unlab, n_lab, n_unlab, 0)
-        return SelfTrainingModel(self.baseClassifier.fit(labeled), summary)
+        model = self.baseClassifier.fit(labeled)
+        release(labeled)
+        return SelfTrainingModel(model, summary)

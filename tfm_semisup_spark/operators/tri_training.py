@@ -33,10 +33,13 @@ Physical shape (the repo's iterative-fit discipline):
 - per round, the unlabeled pool is scored ONCE by all three models
   into one checkpointed frame (three narrow model scans fused into a
   single pass over U, not 6 per-pair scans); same for the labeled
-  pool — all three pairwise error rates come out of ONE aggregate job;
-- candidate counts are maintained from that same aggregate (no extra
-  count() actions); pools are localCheckpoint-truncated and superseded
-  blocks released eagerly (O(1) lineage at any round count);
+  pool;
+- all three pairwise agreement/error counts, and the three candidate
+  counts, are observed metrics of those two checkpoint jobs
+  (``lineage.truncate_counting``): no aggregate or count() job of
+  their own. The pools are filters over the one checkpoint
+  ``_split_pools`` takes; superseded blocks are released eagerly
+  (O(1) lineage at any round count);
 - the only driver-side state is the 3-element (e'_i, l'_i) bookkeeping.
 """
 
@@ -123,15 +126,19 @@ class TriTraining(Estimator, _SSCParams):
         feats = self.getOrDefault(self.featuresCol)
         return F.xxhash64(vector_to_array(F.col(feats)), F.lit(salt))
 
-    def _score_all(self, models, pool: DataFrame, extra_cols) -> DataFrame:
-        """One pass: pool + __p0/__p1/__p2 prediction columns."""
+    def _score_all(self, models, pool: DataFrame, extra_cols, name: str, **conditions):
+        """One pass: pool + __p0/__p1/__p2 prediction columns,
+        checkpointed, and the rows satisfying each condition counted
+        inside that checkpoint job."""
         out = pool
         for i, m in enumerate(models):
             scored = m.transform(out)
             out = scored.select(
                 *[F.col(c) for c in out.columns], F.col("prediction").alias(f"__p{i}")
             )
-        return self._truncate_lineage(out.select(*extra_cols, "__p0", "__p1", "__p2"))
+        return self._truncate_counting(
+            out.select(*extra_cols, "__p0", "__p1", "__p2"), name, **conditions
+        )
 
     def _fit(self, dataset: DataFrame) -> TriTrainingModel:
         base = self.baseClassifier
@@ -141,8 +148,11 @@ class TriTraining(Estimator, _SSCParams):
         seed = self.getOrDefault(self.seed)
 
         labeled, unlabeled, n_lab_ini, n_unlab_ini = self._split_pools(dataset)
-        labeled = self._truncate_lineage(labeled)
-        unlabeled = self._truncate_lineage(unlabeled.select(feats))
+        unlabeled = unlabeled.select(feats)
+        pairs = ((1, 2), (0, 2), (0, 1))
+
+        def agree(j, k):
+            return F.col(f"__p{j}") == F.col(f"__p{k}")
 
         # diversified deterministic subsamples (bootstrap stand-in)
         models = []
@@ -159,49 +169,40 @@ class TriTraining(Estimator, _SSCParams):
         n_last_accept = [0, 0, 0]
         while it < max_iter:
             it += 1
-            lab_scored = self._score_all(models, labeled, [label])
-            # ONE aggregate: for each pair (j,k), rows where they agree
-            # and how many of those miss the true label
-            agg = lab_scored.agg(
-                *[
-                    F.sum(
-                        F.when(F.col(f"__p{j}") == F.col(f"__p{k}"), 1).otherwise(0)
-                    ).alias(f"agree_{j}{k}")
-                    for j, k in ((1, 2), (0, 2), (0, 1))
-                ],
-                *[
-                    F.sum(
-                        F.when(
-                            (F.col(f"__p{j}") == F.col(f"__p{k}"))
-                            & (F.col(f"__p{j}") != F.col(label)),
-                            1,
-                        ).otherwise(0)
-                    ).alias(f"err_{j}{k}")
-                    for j, k in ((1, 2), (0, 2), (0, 1))
-                ],
-            ).collect()[0]
+            # for each pair (j,k): labeled rows where they agree and how
+            # many of those miss the true label
+            lab_scored, agg = self._score_all(
+                models,
+                labeled,
+                [label],
+                "labeled pool scored by the three models",
+                **{f"agree_{j}{k}": agree(j, k) for j, k in pairs},
+                **{
+                    f"err_{j}{k}": agree(j, k) & (F.col(f"__p{j}") != F.col(label))
+                    for j, k in pairs
+                },
+            )
             release(lab_scored)
 
-            unlab_scored = self._score_all(models, unlabeled, [feats])
-            cand_counts = unlab_scored.agg(
-                *[
-                    F.sum(
-                        F.when(F.col(f"__p{j}") == F.col(f"__p{k}"), 1).otherwise(0)
-                    ).alias(f"cand_{i}")
-                    for i, (j, k) in enumerate(((1, 2), (0, 2), (0, 1)))
-                ]
-            ).collect()[0]
+            # candidates for classifier i: unlabeled rows its peers agree on
+            unlab_scored, cand_counts = self._score_all(
+                models,
+                unlabeled,
+                [feats],
+                "unlabeled pool scored by the three models",
+                **{f"cand_{i}": agree(j, k) for i, (j, k) in enumerate(pairs)},
+            )
 
             updated = False
             new_models = list(models)
-            for i, (j, k) in enumerate(((1, 2), (0, 2), (0, 1))):
-                agree = agg[f"agree_{j}{k}"] or 0
-                if agree == 0:
+            for i, (j, k) in enumerate(pairs):
+                n_agree = agg[f"agree_{j}{k}"]
+                if n_agree == 0:
                     continue
-                e_i = (agg[f"err_{j}{k}"] or 0) / agree
+                e_i = agg[f"err_{j}{k}"] / n_agree
                 if e_i >= e_prev[i]:
                     continue
-                n_cand = cand_counts[f"cand_{i}"] or 0
+                n_cand = cand_counts[f"cand_{i}"]
                 if n_cand == 0:
                     continue
                 li = l_prev[i]
@@ -218,7 +219,7 @@ class TriTraining(Estimator, _SSCParams):
                             take = None
                 if take is None or take <= 0:
                     continue
-                cand = unlab_scored.where(F.col(f"__p{j}") == F.col(f"__p{k}"))
+                cand = unlab_scored.where(agree(j, k))
                 if take < n_cand:
                     cand = cand.orderBy(
                         F.pmod(self._content_hash(seed + 100 + i), F.lit(1 << 31))
@@ -247,6 +248,5 @@ class TriTraining(Estimator, _SSCParams):
             n_unlab_ini - max_accept,
             it,
         )
-        release(labeled)
-        release(unlabeled)
+        release(labeled)  # the pools share one checkpoint
         return TriTrainingModel(models, summary)
