@@ -9,11 +9,15 @@ Usage:
     PYTHONPATH=. python scripts/driver_sim.py sf0.01 name1 name2 ...
 
 Exit code 0 iff zero mismatches. Rows-only queries are run (rows
-counted) but not compared; pass names to restrict the sweep.
+counted) but not compared; each ``rows-only:`` line carries a short
+sha256 of the entry's normalized, sorted rows, so row identity between
+two code versions is a diff of two outputs. Pass names to restrict the
+sweep.
 """
 
 from __future__ import annotations
 
+import hashlib
 import math
 import sys
 
@@ -104,7 +108,8 @@ def main() -> int:
                 if srows != srows2:
                     bad.append((name, "nondeterministic"))
                     continue
-            print(f"rows-only: {name} ({len(srows)} rows)")
+            digest = hashlib.sha256(repr(srows).encode()).hexdigest()[:16]
+            print(f"rows-only: {name} ({len(srows)} rows) sha256={digest}")
             continue
         # vacuity guard (VERDICT r12 #5): 0==0 rows hash-matches
         # trivially — an empty oracled result is a failure unless the

@@ -95,10 +95,8 @@ def test_lloyd_sorted_update_is_bit_equal_to_masked_form():
     the same array the mask built)."""
     import numpy as np
 
-    from tfm_semisup_spark.operators.similarity import (
-        _LLOYD_BLOCK_ELEMS,
-        _lloyd,
-    )
+    from tfm_semisup_spark.functions.vector import _SQ_DISTS_BLOCK_ELEMS
+    from tfm_semisup_spark.operators.similarity import _lloyd
 
     def lloyd_masked(points, k, seed, iters=25):
         rng = np.random.RandomState(seed)
@@ -111,7 +109,7 @@ def test_lloyd_sorted_update_is_bit_equal_to_masked_form():
                 [centroids] * (k // centroids.shape[0] + 1)
             )[:k]
         dim = points.shape[1]
-        step = max(1, _LLOYD_BLOCK_ELEMS // max(1, n * dim))
+        step = max(1, _SQ_DISTS_BLOCK_ELEMS // max(1, n * dim))
         for _ in range(iters):
             d2 = np.empty((n, k), dtype=np.float64)
             for s in range(0, k, step):

@@ -15,10 +15,8 @@ def test_lloyd_early_exit_is_bit_equal_to_full_iterations():
     remaining iterations are no-ops."""
     import numpy as np
 
-    from tfm_semisup_spark.operators.similarity import (
-        _LLOYD_BLOCK_ELEMS,
-        _lloyd,
-    )
+    from tfm_semisup_spark.functions.vector import _SQ_DISTS_BLOCK_ELEMS
+    from tfm_semisup_spark.operators.similarity import _lloyd
 
     def lloyd_full(points, k, seed, iters=25):
         rng = np.random.RandomState(seed)
@@ -29,7 +27,7 @@ def test_lloyd_early_exit_is_bit_equal_to_full_iterations():
                 [centroids] * (k // centroids.shape[0] + 1)
             )[:k]
         dim = points.shape[1]
-        step = max(1, _LLOYD_BLOCK_ELEMS // max(1, n * dim))
+        step = max(1, _SQ_DISTS_BLOCK_ELEMS // max(1, n * dim))
         for _ in range(iters):
             d2 = np.empty((n, k), dtype=np.float64)
             for s in range(0, k, step):
@@ -80,46 +78,59 @@ def test_pairs_kernel_matches_join_dot_form(spark):
     """The Arrow pair kernel (_pairs_kernel) emits EXACTLY the
     (doc_a, doc_b, cos_sim) rows of the cell self-join + flat codegen
     dot it replaced — including bit-equal cos values (same
-    left-associative float64 sum), on clusters big enough to salt."""
+    left-associative float64 sum), on clusters big enough to salt.
+    The shared numpy dot (pair_dot) also equals dot_fixed bit for bit,
+    unrounded, at dims 7, 64 and 3."""
     import numpy as np
 
-    from tfm_semisup_spark.functions.vector import dot_fixed
+    from tfm_semisup_spark.functions.vector import dot_fixed, pair_dot
     from tfm_semisup_spark.operators.semantic_dedup import (
         _pairs_kernel,
         with_salted_cells,
     )
 
     rng = np.random.RandomState(3)
-    dim = 7
-    rows = []
-    for i in range(400):
-        v = rng.rand(dim) - 0.3
-        n = np.sqrt((v * v).sum())
-        rows.append((int(i), int(i % 3), (v / n).tolist()))
-    unit = spark.createDataFrame(rows, "id long, c int, u array<double>")
-    celled = with_salted_cells(unit, max_pair_cluster_size=50)
-    thr = 0.2
-    kernel = sorted(
-        _pairs_kernel(celled, thr, dim)
-        .select("doc_a", "doc_b", F.round("cos", 6).alias("cos_sim"))
-        .collect()
-    )
-    a = celled.select(F.col("id").alias("doc_a"), "cell", F.col("u").alias("ua"))
-    b = celled.select(
-        F.col("id").alias("doc_b"),
-        F.col("cell").alias("cell_b"),
-        F.col("u").alias("ub"),
-    )
-    cos = dot_fixed("ua", "ub", dim)
-    join = sorted(
-        a.join(b, (a["cell"] == b["cell_b"]) & (a["doc_a"] < b["doc_b"]))
-        .withColumn("cos_sim", cos)
-        .where(F.col("cos_sim") >= thr)
-        .select("doc_a", "doc_b", F.round("cos_sim", 6).alias("cos_sim"))
-        .collect()
-    )
-    assert len(join) > 0
-    assert kernel == join
+    for dim in (7, 64, 3):
+        rows = []
+        for i in range(400):
+            v = rng.rand(dim) - 0.3
+            n = np.sqrt((v * v).sum())
+            rows.append((int(i), int(i % 3), (v / n).tolist()))
+        unit = spark.createDataFrame(rows, "id long, c int, u array<double>")
+        celled = with_salted_cells(unit, max_pair_cluster_size=50)
+        thr = 0.2
+        kernel = sorted(
+            _pairs_kernel(celled, thr, dim)
+            .select("doc_a", "doc_b", F.round("cos", 6).alias("cos_sim"))
+            .collect()
+        )
+        a = celled.select(
+            F.col("id").alias("doc_a"), "cell", F.col("u").alias("ua")
+        )
+        b = celled.select(
+            F.col("id").alias("doc_b"),
+            F.col("cell").alias("cell_b"),
+            F.col("u").alias("ub"),
+        )
+        cos = dot_fixed("ua", "ub", dim)
+        join = sorted(
+            a.join(b, (a["cell"] == b["cell_b"]) & (a["doc_a"] < b["doc_b"]))
+            .withColumn("cos_sim", cos)
+            .where(F.col("cos_sim") >= thr)
+            .select("doc_a", "doc_b", F.round("cos_sim", 6).alias("cos_sim"))
+            .collect()
+        )
+        assert len(join) > 0, dim
+        assert kernel == join, dim
+
+        U = np.asarray([r[2] for r in rows])
+        ia, ib = np.arange(0, 200), np.arange(399, 199, -1)
+        pairs = spark.createDataFrame(
+            [(rows[x][2], rows[y][2]) for x, y in zip(ia, ib)],
+            "ua array<double>, ub array<double>",
+        )
+        spark_dots = [r[0] for r in pairs.select(dot_fixed("ua", "ub", dim)).collect()]
+        assert pair_dot(U, U, dim, ia, ib).tolist() == spark_dots, dim
 
 
 def test_cell_pair_blocks_cover_all_pairs():

@@ -8,6 +8,7 @@ from __future__ import annotations
 import math
 import random
 
+import pytest
 from pyspark.sql import functions as F
 
 from tfm_semisup_spark.io import load_table
@@ -199,6 +200,22 @@ def test_empty_input_yields_empty_pairs_not_typeerror(spark):
     out = semantic_dup_pairs(empty, threshold=0.9)
     assert out.count() == 0
     assert set(out.columns) == {"doc_a", "doc_b", "cos_sim"}
+
+
+@pytest.mark.parametrize(
+    "kwargs", [{}, {"dim": 4}, {"approx_n": 0}], ids=["plain", "dim", "approx_n"]
+)
+def test_semantic_dedup_empty_input_yields_empty_verdicts(spark, kwargs):
+    """An empty corpus returns the empty (id, sem_cluster, component,
+    keep) frame with the schema a non-empty run has, instead of failing
+    while padding a (0, 0) training sample."""
+    empty = spark.createDataFrame([], "vec_id long, embedding array<float>")
+    out = semantic_dedup(empty, **kwargs)
+    assert out.collect() == []
+    df, _ = _planted(spark, n_base=6, dup_groups=1)
+    assert out.schema.simpleString() == (
+        semantic_dedup(df, num_clusters=2).schema.simpleString()
+    )
 
 
 def test_mllib_assignment_branch_contract(spark):

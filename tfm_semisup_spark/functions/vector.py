@@ -18,6 +18,22 @@ Embedding similarity has two forms, both JVM-side:
   right form for the 100 TB scan. Summation order is identical to the
   fold (left-to-right by index), so results are bit-equal and oracle
   parity is unaffected.
+
+The numpy forms serve the Arrow kernels (SemDeDup, the IVF/PQ tiers,
+the ANN hard-negative band) and keep the same bit-equality contract:
+
+- ``sq_dists``: row-to-centroid squared distances in centroid blocks
+  whose temporary stays under ``_SQ_DISTS_BLOCK_ELEMS`` elements;
+  bit-equal to the naive (rows x k x dim) broadcast, which a 10k-row
+  Arrow batch would make 1.3 GB deep at k=256, dim 64.
+- ``pair_dot``: row-pair dots accumulated one dimension at a time,
+  left to right, in float64 — the Add chain ``dot_fixed`` compiles,
+  term for term.
+- ``row_norms``: float64 row L2 norms (``l2_norm``'s numpy twin).
+- ``map_vector_batches``: the ``mapInPandas`` plumbing every kernel
+  shares — array columns stacked to float64 matrices, the output
+  schema derived from the input fields, typed empty frames
+  (``empty_frame``).
 """
 
 from __future__ import annotations
@@ -159,3 +175,130 @@ def cosine_paired(
     sqrt-of-sum-of-squares values feed the same final divide, and both
     dot forms fold left-to-right by index."""
     return dot_fixed(a, b, dim) / (_as_col(norm_a) * _as_col(norm_b))
+
+
+# ---------------------------------------------------------------------------
+# numpy forms for the Arrow kernels
+# ---------------------------------------------------------------------------
+
+#: element budget of one (rows x centroid-block x dim) float64 temporary
+#: inside ``sq_dists`` — ~128 MB. Blocking over centroids computes the
+#: IDENTICAL per-(row, centroid) values as the full broadcast (no
+#: reduction crosses a block), so assignments and trained centroids are
+#: bit-equal to the unblocked form.
+_SQ_DISTS_BLOCK_ELEMS = 16_777_216
+
+
+def sq_dists(points, centroids, out=None, bufs=None):
+    """(n, k) float64 squared euclidean distances from each row of
+    ``points`` (n, dim) to each row of ``centroids`` (k, dim).
+
+    Centroids are taken in blocks sized so the (n x block x dim)
+    temporary stays under ``_SQ_DISTS_BLOCK_ELEMS`` elements whenever
+    one row block (n x dim) fits it. Each cell is the same contiguous
+    last-axis sum of squared differences as
+    ``((points[:, None] - centroids[None]) ** 2).sum(axis=2)``, so the
+    values are bit-equal to it. ``out`` receives the result (e.g. a
+    row slice of a caller-owned matrix); ``bufs`` is a dict that keeps
+    the block buffer across calls (one Lloyd thread's iterations) —
+    the tail block reuses a prefix of it."""
+    import numpy as np
+
+    n, dim = points.shape
+    k = centroids.shape[0]
+    if out is None:
+        out = np.empty((n, k), dtype=np.float64)
+    step = max(1, _SQ_DISTS_BLOCK_ELEMS // max(1, n * dim))
+    size = n * min(step, k) * dim
+    flat = None if bufs is None else bufs.get("diff")
+    if flat is None or flat.size < size:
+        flat = np.empty(size, dtype=np.float64)
+        if bufs is not None:
+            bufs["diff"] = flat
+    for s in range(0, k, step):
+        block = centroids[s : s + step]
+        w = block.shape[0]
+        diff = flat[: n * w * dim].reshape(n, w, dim)
+        np.subtract(points[:, None, :], block[None, :, :], out=diff)
+        np.multiply(diff, diff, out=diff)
+        out[:, s : s + w] = diff.sum(axis=2)
+    return out
+
+
+def pair_dot(a, b, dim: int, ia=None, ib=None):
+    """Dot products of rows ``a[ia]`` and ``b[ib]`` (index arrays; None
+    takes every row in order), accumulated one dimension at a time:
+    ``acc = a0*b0; acc += a1*b1; ...`` in float64. That is the
+    left-associative Add chain ``dot_fixed`` compiles, term for term,
+    so the values are bit-equal to it. Only (pairs,) columns are
+    gathered, never a pairs x dim matrix."""
+    ia = slice(None) if ia is None else ia
+    ib = slice(None) if ib is None else ib
+    acc = a[ia, 0] * b[ib, 0]
+    for d in range(1, dim):
+        acc += a[ia, d] * b[ib, d]
+    return acc
+
+
+def row_norms(m):
+    """float64 L2 norm of each row of ``m``."""
+    import numpy as np
+
+    return np.sqrt((m * m).sum(axis=1))
+
+
+def stack_f64(col):
+    """An Arrow-batch list column (pandas Series of arrays) as an
+    (n, dim) float64 matrix."""
+    import numpy as np
+
+    return np.stack(col.to_numpy()).astype(np.float64, copy=False)
+
+
+def empty_frame(ddl: str):
+    """Empty pandas frame typed for the DDL schema ``ddl``: list
+    columns are object-typed, so Arrow converts an empty batch without
+    inferring float64 for them."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    return to_arrow_schema(StructType.fromDDL(ddl)).empty_table().to_pandas()
+
+
+def map_vector_batches(df, vec_cols, kernel, new_fields: str, drop=()):
+    """``mapInPandas`` over ``df`` for a numpy vector kernel.
+
+    Per non-empty Arrow batch, each column in ``vec_cols`` is stacked to
+    a float64 matrix and ``kernel(*matrices)`` returns ``(mask, new)``:
+    ``mask`` (a boolean row mask, or None for every row) selects the
+    input rows that are emitted, and ``new`` maps each name in
+    ``new_fields`` to its values for those rows — a numpy array, or a
+    list for an array column (emitted object-typed, so a batch the mask
+    empties still converts to a list column). The output schema is the
+    input fields minus ``drop``, then ``new_fields`` (a DDL string);
+    empty batches emit a typed empty frame."""
+    import numpy as np
+    import pandas as pd
+
+    kept = [f for f in df.schema.fields if f.name not in drop]
+    keep = [f.name for f in kept]
+    schema = ", ".join(
+        [f"{f.name} {f.dataType.simpleString()}" for f in kept] + [new_fields]
+    )
+    empty = empty_frame(schema)
+
+    def batches(it):
+        for pdf in it:
+            if len(pdf) == 0:
+                yield empty
+                continue
+            mask, new = kernel(*(stack_f64(pdf[c]) for c in vec_cols))
+            rows = pdf[keep] if mask is None else pdf.loc[mask, keep]
+            yield rows.reset_index(drop=True).assign(
+                **{
+                    name: v if isinstance(v, np.ndarray) else pd.Series(v, dtype=object)
+                    for name, v in new.items()
+                }
+            )
+
+    return df.mapInPandas(batches, schema=schema)

@@ -207,11 +207,15 @@ def connected_components(
     # labels are monotonically non-increasing per node, so the total is
     # a strictly decreasing progress measure: unchanged sum <=> fixed
     # point. decimal(38,0) keeps the sum exact for any int64 ids/count.
-    # NOTE: riding the sum on the checkpoint job via Observation would
-    # save one job per round, but a localCheckpoint of an observed plan
-    # leaks the non-serializable ObservationManager into later jobs'
-    # closures ("Task not serializable" in unrelated MLlib fits) — so
-    # the sum stays a separate tiny aggregate over the fresh blocks.
+    # NOTE: riding the sum on the checkpoint job would save one job per
+    # round. It must not use an ``Observation``: the first one gives the
+    # session a non-serializable ObservationManager, and later tasks
+    # that capture the session fail with "Task not serializable"
+    # (unrelated MLlib fits — see lineage.py). An observed
+    # localCheckpoint itself is safe: the name-keyed ``df.observe`` that
+    # lineage.truncate_counting reads does not touch the manager. Until
+    # the sum moves there, it stays a separate tiny aggregate over the
+    # fresh blocks.
     _sum = F.sum(F.col("label").cast("decimal(38,0)"))
 
     labels = nodes.select(F.col("u").alias("node"), F.col("u").alias("label"))

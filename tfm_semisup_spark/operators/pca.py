@@ -35,6 +35,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from tfm_semisup_spark.functions.vector import stack_f64
+
 #: fixed-point scale for the deterministic integer moments
 _Q_BITS = 20
 _Q = 1 << _Q_BITS
@@ -49,7 +51,7 @@ def _moment_kernel(dim: int):
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            x = np.stack(pdf.iloc[:, 0].to_numpy()).astype(np.float64)
+            x = stack_f64(pdf.iloc[:, 0])
             xq = np.rint(x * _Q).astype(np.int64)
             xxt = xq.T @ xq  # int64 exact
             sx = xq.sum(axis=0)

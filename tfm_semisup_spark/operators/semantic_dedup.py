@@ -14,11 +14,13 @@ Spark-first shape (every stage bounded / bucketed):
    hash-selected bounded sample (identical pattern to PQ codebook
    training, ``build_pq_index``): at 100 TB the driver sees at most
    ``max_train_rows`` vectors.
-2. **assignment** is ONE columnar projection — squared distance to
-   each broadcast-literal centroid via ``F.transform`` + argmin; no
-   shuffle, no Python.
-3. **within-cluster pairs**: self-join ON the cluster id (shuffle
-   keyed by cluster — candidate count is Σ|cluster|², never N²).
+2. **assignment** is ONE narrow Arrow kernel (``mapInPandas``) fused
+   with L2 normalization: numpy argmins the blocked squared distances
+   to the centroid matrix shipped in the closure (``sq_dists`` in
+   ``functions/vector.py``); no shuffle.
+3. **within-cluster pairs**: one ``applyInPandas`` kernel per cluster
+   cell (shuffle keyed by cluster — candidate count is Σ|cluster|²,
+   never N²) scores every i < j pair with the shared float64 dot.
    ``num_clusters`` DERIVES from the corpus size when not given
    (~N / TARGET_CLUSTER_SIZE, floor 16 — the SemDeDup paper runs
    O(100k) clusters at web scale), so the expected candidate volume
@@ -44,6 +46,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from tfm_semisup_spark.functions.vector import (
+    empty_frame,
+    map_vector_batches,
+    pair_dot,
+    row_norms,
+    sq_dists,
+    stack_f64,
+)
 from tfm_semisup_spark.operators.components import connected_components
 
 
@@ -80,12 +90,12 @@ def assign_clusters_mllib(
     """DISTRIBUTED train+assign for cluster counts past
     DRIVER_TRAIN_MAX_CLUSTERS: pyspark.ml KMeans (map-side partial
     aggregation per iteration — the corpus never concentrates
-    anywhere), assignment via model.transform. The literal-array
-    ``assign_clusters`` projection is the faster path for SMALL k
-    (pure codegen, no ml Vector conversion) but its expression size
-    grows k×dim — past a few thousand centroids the JVM-side model
-    broadcast is the only shape that scales. Same output contract:
-    input columns + ``out_col`` int cluster id, seeded deterministic."""
+    anywhere), assignment via model.transform. Driver-side Lloyd's
+    costs sample x k x dim per iteration, so past that many clusters
+    training has to be distributed; the Arrow ``assign_clusters``
+    kernel stays the path for driver-trained centroids. Same output
+    contract: input columns + ``out_col`` int cluster id, seeded
+    deterministic."""
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
@@ -159,33 +169,24 @@ def assign_clusters(
     out_col: str = "sem_cluster",
 ) -> DataFrame:
     """Nearest-centroid assignment as one vectorized Arrow pass
-    (mapInPandas): numpy broadcasts the (batch x k x dim) distance
-    tensor and argmins it — the same sanctioned kernel boundary as
-    build_pq_index's encode, and for the same measured reason: the
-    previous literal-array + transform/zip_with projection evaluated
-    INTERPRETED (HOFs are excluded from whole-stage codegen) and
-    re-evaluated the array cast once per centroid reference, ~k*dim*2
-    interpreted ops per row. Narrow op: no shuffle, parallelism =
-    input partitions; the centroid matrix ships inside the closure
-    (tiny). Deterministic: numpy argmin takes the first minimum,
-    matching the old fold's first-occurrence semantics."""
+    (mapInPandas): numpy argmins the blocked squared distances to the
+    centroid matrix (``sq_dists``) — the same sanctioned kernel
+    boundary as build_pq_index's encode, and for the same measured
+    reason: the previous literal-array + transform/zip_with projection
+    evaluated INTERPRETED (HOFs are excluded from whole-stage codegen)
+    and re-evaluated the array cast once per centroid reference,
+    ~k*dim*2 interpreted ops per row. Narrow op: no shuffle,
+    parallelism = input partitions; the centroid matrix ships inside
+    the closure (tiny). Deterministic: numpy argmin takes the first
+    minimum, matching the old fold's first-occurrence semantics."""
     import numpy as np
 
     cent = np.asarray(centroids, dtype=np.float64)
-    fields = embeddings.schema.fields
-    out_schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in fields)
-    out_schema += f", {out_col} int"
 
-    def assign_batches(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                yield pdf.assign(**{out_col: pdf.index.astype("int32")})
-                continue
-            V = np.stack(pdf[array_col].to_numpy()).astype(np.float64)
-            d2 = ((V[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
-            yield pdf.assign(**{out_col: d2.argmin(axis=1).astype("int32")})
+    def kernel(V):
+        return None, {out_col: sq_dists(V, cent).argmin(axis=1).astype("int32")}
 
-    return embeddings.mapInPandas(assign_batches, schema=out_schema)
+    return map_vector_batches(embeddings, [array_col], kernel, f"{out_col} int")
 
 
 def unit_normalize(
@@ -207,33 +208,16 @@ def unit_normalize(
     per row (measured: ~1.3 s for 2000 x 64-dim rows on one split;
     at corpus scale this is the dominant cost of the scan).
     Deterministic under any partitioning: all math is row-local."""
-    import numpy as np
 
-    fields = [f for f in embeddings.schema.fields if f.name != array_col]
-    out_schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in fields)
-    out_schema += f"{', ' if fields else ''}{out_col} array<double>"
-    keep = [f.name for f in fields]
+    def kernel(V):
+        n = row_norms(V)
+        mask = n > 0
+        U = V[mask] / n[mask][:, None]
+        return mask, {out_col: [row.tolist() for row in U]}
 
-    def normalize_batches(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                yield pdf[keep].assign(**{out_col: pd.Series([], dtype=object)})
-                continue
-            V = np.stack(pdf[array_col].to_numpy()).astype(np.float64)
-            n = np.sqrt((V * V).sum(axis=1))
-            mask = n > 0
-            U = V[mask] / n[mask][:, None]
-            out = pdf.loc[mask, keep].reset_index(drop=True)
-            # dtype=object keeps the column a LIST column even when the
-            # mask drops every row — a bare empty list infers float64
-            # and Arrow refuses the list<double> conversion
-            yield out.assign(
-                **{out_col: pd.Series([row.tolist() for row in U], dtype=object)}
-            )
-
-    return embeddings.mapInPandas(normalize_batches, schema=out_schema)
+    return map_vector_batches(
+        embeddings, [array_col], kernel, f"{out_col} array<double>", drop=[array_col]
+    )
 
 
 def assign_and_unit(
@@ -255,44 +239,19 @@ def assign_and_unit(
     import numpy as np
 
     cent = np.asarray(centroids, dtype=np.float64)
-    id_type = dict(
-        (f.name, f.dataType.simpleString()) for f in embeddings.schema.fields
-    )[id_col]
-    out_schema = f"id {id_type}, sem_cluster int, u array<double>"
     narrow = embeddings.select(
         F.col(id_col).alias("id"), F.col(array_col).cast("array<double>").alias("v")
     )
 
-    def batches(it):
-        import pandas as pd
+    def kernel(V):
+        n = row_norms(V)
+        u = [(V[i] / n[i]).tolist() if n[i] > 0 else None for i in range(len(n))]
+        cl = sq_dists(V, cent).argmin(axis=1).astype("int32")
+        return None, {"sem_cluster": cl, "u": u}
 
-        for pdf in it:
-            if len(pdf) == 0:
-                yield pd.DataFrame(
-                    {
-                        "id": pdf["id"],
-                        "sem_cluster": pd.Series([], dtype="int32"),
-                        "u": pd.Series([], dtype=object),
-                    }
-                )
-                continue
-            V = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-            d2 = ((V[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
-            cl = d2.argmin(axis=1).astype("int32")
-            n = np.sqrt((V * V).sum(axis=1))
-            u = [
-                (V[i] / n[i]).tolist() if n[i] > 0 else None
-                for i in range(len(n))
-            ]
-            yield pd.DataFrame(
-                {
-                    "id": pdf["id"].reset_index(drop=True),
-                    "sem_cluster": cl,
-                    "u": pd.Series(u, dtype=object),
-                }
-            )
-
-    return narrow.mapInPandas(batches, schema=out_schema)
+    return map_vector_batches(
+        narrow, ["v"], kernel, "sem_cluster int, u array<double>", drop=["v"]
+    )
 
 
 def probe_buckets(
@@ -304,8 +263,8 @@ def probe_buckets(
 ) -> DataFrame:
     """Top-``n_probe`` nearest centroids per row as an ``array<int>``
     column — the multi-probe sibling of ``assign_clusters``, one
-    vectorized Arrow pass over the same (batch x k x dim) distance
-    tensor. Replaces the r10 probe-list stage of the ANN hard-negative
+    vectorized Arrow pass over the same blocked squared distances.
+    Replaces the r10 probe-list stage of the ANN hard-negative
     miner (anchors x broadcast centroid-table cross join + interpreted
     zip_with distance + window rank): same candidate buckets, no
     interpreted per-centroid expression, no window shuffle, no k-row
@@ -316,23 +275,15 @@ def probe_buckets(
 
     cent = np.asarray(centroids, dtype=np.float64)
     m = max(1, min(int(n_probe), len(cent)))
-    fields = embeddings.schema.fields
-    out_schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in fields)
-    out_schema += f", {out_col} array<int>"
 
-    def probe_batches(batches):
-        import pandas as pd
+    def kernel(V):
+        d2 = sq_dists(V, cent)
+        order = np.argsort(d2, axis=1, kind="stable")[:, :m].astype("int32")
+        return None, {out_col: [row.tolist() for row in order]}
 
-        for pdf in batches:
-            if len(pdf) == 0:
-                yield pdf.assign(**{out_col: pd.Series([], dtype=object)})
-                continue
-            V = np.stack(pdf[array_col].to_numpy()).astype(np.float64)
-            d2 = ((V[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
-            order = np.argsort(d2, axis=1, kind="stable")[:, :m].astype("int32")
-            yield pdf.assign(**{out_col: [row.tolist() for row in order]})
-
-    return embeddings.mapInPandas(probe_batches, schema=out_schema)
+    return map_vector_batches(
+        embeddings, [array_col], kernel, f"{out_col} array<int>"
+    )
 
 
 def with_salted_cells(
@@ -402,8 +353,7 @@ def _pairs_kernel(
 
     BIT-EQUAL to the join + ``dot_fixed`` form: rows are sorted by id
     (so emitted pairs carry doc_a < doc_b exactly like the join
-    predicate), and the dot accumulates per DIMENSION —
-    ``acc = u[:,0]·v[:,0]; acc += u[:,d]·v[:,d]`` — which is the same
+    predicate), and ``pair_dot`` accumulates per DIMENSION — the same
     left-associative float64 sum the flat codegen expression computes,
     term by term. The threshold compares the raw double exactly as the
     join's WHERE did; rounding stays in Spark on the surviving rows.
@@ -419,26 +369,17 @@ def _pairs_kernel(
         F.col("cell")[celled.schema["cell"].dataType.names[0]].alias("__c"),
         F.col("cell")["__salt"].alias("__s"),
     )
+    schema = "doc_a long, doc_b long, cos double"
+    empty = empty_frame(schema)
 
     def one_cell(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        m = len(pdf)
-        if m < 2:
-            return pd.DataFrame(
-                {
-                    "doc_a": pd.Series([], dtype="int64"),
-                    "doc_b": pd.Series([], dtype="int64"),
-                    "cos": pd.Series([], dtype="float64"),
-                }
-            )
         ids = pdf["id"].to_numpy()
         order = np.argsort(ids, kind="stable")
         ids = ids[order]
-        U = np.stack(pdf["u"].to_numpy())[order].astype(np.float64)
+        U = stack_f64(pdf["u"])[order]
         outs = []
-        for ia, ib in _cell_pair_blocks(m):
-            acc = U[ia, 0] * U[ib, 0]
-            for d in range(1, dim):
-                acc += U[ia, d] * U[ib, d]
+        for ia, ib in _cell_pair_blocks(len(pdf)):
+            acc = pair_dot(U, U, dim, ia, ib)
             keep = acc >= threshold
             if keep.any():
                 outs.append(
@@ -450,19 +391,9 @@ def _pairs_kernel(
                         }
                     )
                 )
-        if not outs:
-            return pd.DataFrame(
-                {
-                    "doc_a": pd.Series([], dtype="int64"),
-                    "doc_b": pd.Series([], dtype="int64"),
-                    "cos": pd.Series([], dtype="float64"),
-                }
-            )
-        return pd.concat(outs, ignore_index=True)
+        return pd.concat(outs, ignore_index=True) if outs else empty
 
-    return flat.groupBy("__c", "__s").applyInPandas(
-        one_cell, schema="doc_a long, doc_b long, cos double"
-    )
+    return flat.groupBy("__c", "__s").applyInPandas(one_cell, schema=schema)
 
 
 def semantic_dup_pairs(
@@ -475,8 +406,8 @@ def semantic_dup_pairs(
     max_pair_cluster_size: int = 10_000,
 ) -> DataFrame:
     """(doc_a, doc_b, cos_sim) for same-cluster pairs with cosine ≥
-    threshold, a < b. Vectors are L2-normalized in the projection, so
-    the join predicate is one dot product on the pair.
+    threshold, a < b. Vectors are L2-normalized first, so the pair
+    predicate is one dot product.
 
     Zero-norm embeddings carry no direction, so cosine to them is
     undefined: they are EXCLUDED from the pair tier explicitly (the
@@ -485,15 +416,15 @@ def semantic_dup_pairs(
     with keep=true.
 
     Clusters larger than ``max_pair_cluster_size`` are salted into
-    bounded cells (``with_salted_cells``) so no single join key goes
+    bounded cells (``with_salted_cells``) so no single cell goes
     quadratic.
 
     The normalized projection is materialized (localCheckpoint) before
-    the self-join: both join sides and every downstream consumer then
-    scan (id, cluster, unit-vector) rows instead of re-evaluating —
-    and re-CODEGENING — the wide centroid-literal assignment
-    expression per side (measured at sf0.1: pairs 12.3s -> ~1s)."""
-    from tfm_semisup_spark.operators.lineage import truncate
+    the pair tier, so the cluster-size aggregate and the pair kernel
+    scan (id, cluster, unit-vector) rows instead of re-running the
+    upstream assignment per consumer (measured at sf0.1: pairs 12.3s
+    -> ~1s)."""
+    from tfm_semisup_spark.operators.lineage import release, truncate
 
     if dim is None:
         first = assigned.select(F.size(F.col(array_col)).alias("d")).head()
@@ -520,18 +451,7 @@ def semantic_dup_pairs(
             out_col="u",
         )
     )
-    celled = with_salted_cells(unit, max_pair_cluster_size)
-    # cosine on unit vectors == plain dot product, evaluated by the
-    # vectorized Arrow pair kernel (r15, _pairs_kernel — bit-equal to
-    # the former cell self-join + flat codegen dot, which cost ~40 µs
-    # per candidate pair); rounding applies on the surviving rows only
-    from tfm_semisup_spark.operators.lineage import release
-
-    out = truncate(
-        _pairs_kernel(celled, threshold, dim).select(
-            "doc_a", "doc_b", F.round("cos", 6).alias("cos_sim")
-        )
-    )
+    out = _pairs_from_unit(unit, threshold, dim, max_pair_cluster_size)
     release(unit)
     return out
 
@@ -542,15 +462,15 @@ def _pairs_from_unit(
     dim: int,
     max_pair_cluster_size: int = 10_000,
 ) -> DataFrame:
-    """The pair tier of ``semantic_dup_pairs`` over an ALREADY
-    normalized + materialized (id, c, u) frame (r14 fused path): salt,
-    self-join within cells, exact dot verify. Does NOT release
-    ``unit`` — the caller still reads it for the verdict join."""
+    """The pair tier over an ALREADY normalized + materialized
+    (id, c, u) frame: salt clusters into cells, score every
+    within-cell pair with the Arrow pair kernel (``_pairs_kernel`` —
+    cosine on unit vectors is the plain dot), round the surviving
+    rows, materialize. Does NOT release ``unit`` — the caller may
+    still read it (``semantic_dedup``'s verdict join)."""
     from tfm_semisup_spark.operators.lineage import truncate
 
     celled = with_salted_cells(unit, max_pair_cluster_size)
-    # r15: vectorized Arrow pair kernel replaces the cell self-join +
-    # per-pair flat codegen dot (bit-equal; see _pairs_kernel)
     return truncate(
         _pairs_kernel(celled, threshold, dim).select(
             "doc_a", "doc_b", F.round("cos", 6).alias("cos_sim")
@@ -613,6 +533,12 @@ def semantic_dedup(
         approx_n = embeddings.agg(
             F.approx_count_distinct(id_col).alias("n")
         ).head()["n"]
+    if approx_n == 0:
+        # empty corpus: no sample to train centroids on, no pairs
+        id_type = embeddings.schema[id_col].dataType.simpleString()
+        return embeddings.sparkSession.createDataFrame(
+            [], f"id {id_type}, sem_cluster int, component bigint, keep boolean"
+        )
     # single-file scans arrive as one split: spread the Arrow
     # assignment kernel, the checkpoint blocks and the pair join's
     # build across the cluster (same gotcha as the shingle tiers).

@@ -22,6 +22,12 @@ from pyspark.ml.functions import array_to_vector
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from tfm_semisup_spark.functions.vector import (
+    map_vector_batches,
+    sq_dists,
+    stack_f64,
+)
+
 
 def build_ann_index(
     embeddings: DataFrame,
@@ -200,20 +206,9 @@ def collect_train_sample(
         else:
             spark.conf.set(key, prev)
     pdf = pdf.sort_values(["__h", "__id"], kind="stable").head(max_train_rows)
-    vals = pdf["__v"].to_numpy()
-    if len(vals) == 0:
+    if len(pdf) == 0:
         return np.empty((0, 0), dtype=np.float64)
-    return np.stack([np.asarray(v, dtype=np.float64) for v in vals])
-
-
-#: bound on the (rows x centroid-block x dim) temporary inside one
-#: Lloyd distance block — ~128 MB of float64. The unblocked broadcast
-#: form allocates rows x k x dim PER ITERATION (1.4 GB at a 20k x 141
-#: x 64 training set) and turns the trainer memory-bandwidth-bound;
-#: blocking over centroids computes the IDENTICAL per-(row, centroid)
-#: values (no cross-block reduction exists), so assignments — and the
-#: trained centroids — are bit-equal to the unblocked form.
-_LLOYD_BLOCK_ELEMS = 16_777_216
+    return stack_f64(pdf["__v"])
 
 
 #: driver threads for the Lloyd distance pass. numpy's elementwise ops
@@ -238,18 +233,24 @@ def _lloyd(points, k: int, seed: int, iters: int = 25):
     """Seeded deterministic Lloyd's k-means on a driver-side numpy
     sample (the standard way PQ codebooks are trained — e.g. faiss
     trains on a bounded in-memory sample, never the full corpus).
-    Empty clusters keep their previous centroid. Distances are
-    computed in centroid blocks (see _LLOYD_BLOCK_ELEMS) — bit-equal
-    to the naive broadcast, bounded temporaries — with the row axis
-    chunked across _LLOYD_THREADS driver threads (r15; values are
-    per-cell independent, so the parallel pass is bit-equal too)."""
+    Empty clusters keep their previous centroid. Distances come from
+    ``sq_dists`` (centroid blocks — bit-equal to the naive broadcast,
+    bounded temporaries) with the row axis chunked across
+    _LLOYD_THREADS driver threads (r15; values are per-cell
+    independent, so the parallel pass is bit-equal too). An empty
+    sample raises ``ValueError``: there is nothing to cluster."""
     import os
     from concurrent.futures import ThreadPoolExecutor
 
     import numpy as np
 
-    rng = np.random.RandomState(seed)
     n = points.shape[0]
+    if n == 0:
+        raise ValueError(
+            "Lloyd's k-means got an empty training sample (0 rows): "
+            "the input has no vectors to train centroids on"
+        )
+    rng = np.random.RandomState(seed)
     centroids = points[rng.choice(n, size=min(k, n), replace=False)].copy()
     if centroids.shape[0] < k:  # degenerate tiny sample: pad by repeat
         centroids = np.vstack([centroids] * (k // centroids.shape[0] + 1))[:k]
@@ -267,31 +268,18 @@ def _lloyd(points, k: int, seed: int, iters: int = 25):
     )
     if n * k * dim < _LLOYD_THREAD_MIN_ELEMS:
         n_threads = 1
-    # row chunks per thread; each thread owns persistent diff buffers
-    # per block WIDTH (full + tail — ADVICE r14), sized by ITS chunk
+    # row chunks per thread; each thread owns one persistent block
+    # buffer (sq_dists' bufs), sized by ITS chunk
     bounds_r = [
         (i * n // n_threads, (i + 1) * n // n_threads)
         for i in range(n_threads)
     ]
     bounds_r = [(lo, hi) for lo, hi in bounds_r if hi > lo]
-    thread_bufs: list[dict[int, "np.ndarray"]] = [{} for _ in bounds_r]
+    thread_bufs: list[dict[str, "np.ndarray"]] = [{} for _ in bounds_r]
 
     def dist_chunk(ci: int) -> None:
         lo, hi = bounds_r[ci]
-        rows = points[lo:hi]
-        m = hi - lo
-        step = max(1, _LLOYD_BLOCK_ELEMS // max(1, m * dim))
-        bufs = thread_bufs[ci]
-        for s in range(0, k, step):
-            block = centroids[s : s + step]
-            key = block.shape[0]
-            diff = bufs.get(key)
-            if diff is None or diff.shape[0] != m:
-                diff = np.empty((m, key, dim), dtype=np.float64)
-                bufs[key] = diff
-            np.subtract(rows[:, None, :], block[None, :, :], out=diff)
-            np.multiply(diff, diff, out=diff)
-            d2[lo:hi, s : s + step] = diff.sum(axis=2)
+        sq_dists(points[lo:hi], centroids, out=d2[lo:hi], bufs=thread_bufs[ci])
 
     pool = ThreadPoolExecutor(max_workers=len(bounds_r)) if len(bounds_r) > 1 else None
     prev_assign = None
@@ -356,8 +344,8 @@ def build_pq_index(
       m×codes codebook. The FULL corpus is never collected — at 100 TB
       the driver sees ≤ max_train_rows vectors, period.
     - encoding is ONE narrow vectorized-Arrow pass (mapInPandas):
-      numpy broadcasts the (batch × codes × dsub) distance tensor per
-      subspace and argmins it — no shuffle, parallelism = input
+      numpy argmins the blocked (batch × codes) squared distances per
+      subspace (``sq_dists``) — no shuffle, parallelism = input
       partitions. The Catalyst alternatives both fail at this
       arithmetic density: HOF forms evaluate interpreted (~1.5 ms/row
       measured at dim 64), and the flat codegen form is a 4096-term
@@ -397,8 +385,8 @@ def build_pq_index(
     ]
 
     # Encoding kernel: one vectorized Arrow pass (mapInPandas), numpy
-    # broadcasting the (batch x codes x dsub) distance tensor per
-    # subspace — the faiss kernel shape. This is a sanctioned Arrow
+    # argmining each subspace's blocked squared distances — the faiss
+    # kernel shape. This is a sanctioned Arrow
     # boundary, not a convenience: the Catalyst alternatives both
     # fail at this arithmetic density (m*codes = 512 distance folds
     # per row). HOF forms (transform/aggregate/zip_with) evaluate
@@ -409,27 +397,15 @@ def build_pq_index(
     # CODEGEN_DIM_LIMIT rationale). Narrow op: no shuffle, parallelism
     # = input partitions. Deterministic: numpy argmin takes the first
     # minimum, matching the previous fold's strict '<'.
-    import pandas as pd
+    def encode(V):
+        out = np.empty((len(V), m), dtype=np.int32)
+        for j, ((lo, hi), cb) in enumerate(zip(bounds, codebooks)):
+            out[:, j] = sq_dists(V[:, lo:hi], cb).argmin(axis=1)
+        return None, {"pq_codes": list(out)}
 
-    fields = embeddings.schema.fields
-    out_schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in fields)
-    out_schema += ", pq_codes array<int>"
-
-    def encode_batches(batches):
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                pdf = pdf.assign(pq_codes=pd.Series([], dtype=object))
-                yield pdf
-                continue
-            V = np.stack(pdf[array_col].to_numpy()).astype(np.float64)
-            out = np.empty((n, m), dtype=np.int32)
-            for j, ((lo, hi), cb) in enumerate(zip(bounds, codebooks)):
-                d2 = ((V[:, None, lo:hi] - cb[None, :, :]) ** 2).sum(axis=2)
-                out[:, j] = d2.argmin(axis=1)
-            yield pdf.assign(pq_codes=list(out))
-
-    encoded = embeddings.mapInPandas(encode_batches, schema=out_schema)
+    encoded = map_vector_batches(
+        embeddings, [array_col], encode, "pq_codes array<int>"
+    )
     return codebooks, encoded
 
 
@@ -482,9 +458,7 @@ def pq_top_k(
     # ~m*codes + dim Py4J calls per query.
     adc_terms = []
     for j, ((lo, hi), cb) in enumerate(zip(bounds, codebooks)):
-        tbl = _sql_array1d(
-            float(np.sum((q[lo:hi] - cb[c]) ** 2)) for c in range(cb.shape[0])
-        )
+        tbl = _sql_array1d(sq_dists(q[None, lo:hi], cb)[0])
         adc_terms.append(f"get({tbl}, get(pq_codes, {j}))")
     adc = F.expr(" + ".join(adc_terms))
 

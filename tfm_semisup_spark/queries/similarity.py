@@ -539,7 +539,7 @@ def _hard_negatives_ann_pipeline(
     plan (the registered query returns a localCheckpoint scan)."""
     from pyspark.sql.window import Window
 
-    from tfm_semisup_spark.functions.vector import dot_fixed
+    from tfm_semisup_spark.functions.vector import map_vector_batches, pair_dot
     from tfm_semisup_spark.operators.lineage import release, truncate
     from tfm_semisup_spark.operators.semantic_dedup import (
         assign_clusters,
@@ -603,7 +603,7 @@ def _hard_negatives_ann_pipeline(
     # tests/test_hard_negatives_ann.py); the band dot is then evaluated
     # by a vectorized Arrow kernel instead of the flat codegen
     # expression (r15, guide §4.2 — the same ~40 µs/candidate cost the
-    # SemDeDup pair tier paid). The kernel accumulates per dimension
+    # SemDeDup pair tier paid). Its pair_dot accumulates per dimension
     # (left-associative float64, bit-equal to dot_fixed) and emits ONLY
     # in-band rows — under the window's NULLS-LAST ordering the banded
     # rows formed the rank prefix, so dropping the out-of-band rows
@@ -613,38 +613,15 @@ def _hard_negatives_ann_pipeline(
         .where(F.col("vec_id") != F.col("query_id"))
         .select("query_id", "vec_id", "qu", "u")
     )
-    import numpy as np
-    import pandas as pd
-
     floor, ceil = _HARDNEG_FLOOR, _HARDNEG_CEIL
 
-    def band_batches(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                yield pd.DataFrame(
-                    {
-                        "query_id": pd.Series([], dtype="int64"),
-                        "vec_id": pd.Series([], dtype="int64"),
-                        "bsim": pd.Series([], dtype="float64"),
-                    }
-                )
-                continue
-            Q = np.stack(pdf["qu"].to_numpy()).astype(np.float64)
-            U = np.stack(pdf["u"].to_numpy()).astype(np.float64)
-            acc = U[:, 0] * Q[:, 0]
-            for d in range(1, dim):
-                acc += U[:, d] * Q[:, d]
-            keep = (acc >= floor) & (acc < ceil)
-            yield pd.DataFrame(
-                {
-                    "query_id": pdf["query_id"].to_numpy()[keep],
-                    "vec_id": pdf["vec_id"].to_numpy()[keep],
-                    "bsim": acc[keep],
-                }
-            )
+    def band(Q, U):
+        acc = pair_dot(U, Q, dim)
+        keep = (acc >= floor) & (acc < ceil)
+        return keep, {"bsim": acc[keep]}
 
-    scored = joined.mapInPandas(
-        band_batches, schema="query_id long, vec_id long, bsim double"
+    scored = map_vector_batches(
+        joined, ["qu", "u"], band, "bsim double", drop=["qu", "u"]
     )
     w = Window.partitionBy("query_id").orderBy(
         F.round("bsim", 6).desc_nulls_last(), "vec_id"
