@@ -11,8 +11,10 @@ Usage:
 Exit code 0 iff zero mismatches. Rows-only queries are run (rows
 counted) but not compared; each ``rows-only:`` line carries a short
 sha256 of the entry's normalized, sorted rows, so row identity between
-two code versions is a diff of two outputs. Pass names to restrict the
-sweep.
+two code versions is a diff of two outputs. Before the sweep one
+``oracles: <n> sha256=<16 hex>`` line digests the sorted (name, SQL)
+pairs of the swept oracles, so oracle byte-identity is a diff too.
+Pass names to restrict the sweep.
 """
 
 from __future__ import annotations
@@ -84,6 +86,13 @@ def main() -> int:
     if unknown:
         print(f"unknown query names: {sorted(unknown)}", file=sys.stderr)
         return 2
+    # one digest over the swept oracle texts: oracle byte-identity
+    # between two code versions is a diff of this line
+    swept = sorted(
+        (name, sql) for name, sql in oracles.items() if not only or name in only
+    )
+    digest = hashlib.sha256(repr(swept).encode()).hexdigest()[:16]
+    print(f"oracles: {len(swept)} sha256={digest}")
     bad, n_ok, n_rows_only = [], 0, 0
     for name, fn in sorted(registry.items()):
         if only and name not in only:

@@ -342,9 +342,9 @@ PICKS = {
         "query-term occurrences, never the token stream"
     ),
     "ssl_isotonic_calibration": (
-        "PAVA-minimax: one fact-scale exchange to the B=20 bin grid; "
-        "segment/suffix-min/max windows all run on broadcast-sized "
-        "bounded relations"
+        "PAVA-minimax: one fact-scale aggregate to the NB contingency "
+        "grid; the B=20 bin grid is a driver-built local relation and "
+        "the segment/suffix-min/max windows all run on it"
     ),
     "similarity_hard_negatives_ann": (
         "IVF-mined hard negatives (VERDICT r9 #3): candidates arrive "

@@ -85,31 +85,49 @@ def test_brier_decomposition_bounds_and_identity(spark):
     assert abs(defect) < 0.11
 
 
+def _nb_pool_rows(select: str):
+    """Rows of ``select`` run in DuckDB after the exact-count NB
+    oracles' own per-row CTEs (base, labeled/unlabeled, prior, the f1
+    likelihoods, scored_v1, voted_v1, decided_v1) — an independent
+    per-row reference for the grid replay."""
+    import duckdb
+
+    from tfm_semisup_spark.queries.ssl_queries import (
+        _NB1_BASE_SQL,
+        _NB1_PRIOR_SQL,
+        _nb1_decided_sql,
+        _nb1_lik_sql,
+    )
+
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW orders AS SELECT * FROM '{SF}/orders.parquet'")
+    return con.execute(
+        f"""WITH {_NB1_BASE_SQL},
+{_NB1_PRIOR_SQL},
+{_nb1_lik_sql("f1", "v1")},
+{_nb1_decided_sql("f1", 5, "v1")}
+{select}"""
+    ).fetchall()
+
+
 def test_brier_matches_numpy_reference(spark):
-    """Recompute the four components from the raw (f, hit) pool —
-    the quantized-integer pipeline must agree to ~1e-6."""
+    """Recompute the four components from the raw per-row (f, hit)
+    pool — the quantized-integer pipeline must agree to ~1e-6."""
     import numpy as np
 
     from tfm_semisup_spark.queries.ssl_queries import (
         _BRIER_SCALE,
         _ISO_BINS,
-        _fd,
-        _nb1_base,
-        _nb1_decided,
         ssl_brier_decomposition,
     )
-    from pyspark.sql import functions as F
 
-    labeled, unlabeled = _nb1_base(spark, SF)
-    decided = _nb1_decided(labeled, unlabeled, "f1", 5)
-    pool = decided.select(
-        _fd(F.col("t_max") * _BRIER_SCALE, F.col("t_sum")).alias("f"),
-        F.when(F.col("pred_class") == F.col("o_orderstatus"), 1)
-        .otherwise(0)
-        .alias("hit"),
-    ).collect()
-    f = np.array([int(r["f"]) for r in pool], dtype=np.float64) / _BRIER_SCALE
-    o = np.array([r["hit"] for r in pool], dtype=np.float64)
+    pool = _nb_pool_rows(
+        f"SELECT (t_max * {_BRIER_SCALE}) // t_sum AS f, "
+        "CASE WHEN pred_class = o_orderstatus THEN 1 ELSE 0 END AS hit "
+        "FROM decided_v1"
+    )
+    f = np.array([int(r[0]) for r in pool], dtype=np.float64) / _BRIER_SCALE
+    o = np.array([r[1] for r in pool], dtype=np.float64)
     n = len(f)
     bins = np.minimum(_ISO_BINS - 1, (f * _ISO_BINS).astype(np.int64))
     obar = o.mean()
@@ -314,13 +332,8 @@ def test_bpe_merge_apply_handles_quote_and_backslash_symbols(spark):
 def test_conformal_nb_coverage_and_reference(spark):
     import numpy as np
 
-    from pyspark.sql import functions as F
-
     from tfm_semisup_spark.queries.ssl_queries import (
         _BRIER_SCALE,
-        _fd,
-        _nb1_base,
-        _nb1_voted,
         ssl_conformal_nb,
     )
 
@@ -332,26 +345,20 @@ def test_conformal_nb_coverage_and_reference(spark):
     assert row["n_covered"] == round(row["coverage"] * row["n_eval"])
 
     # numpy reference: recompute q_hat as the ceil(0.9(n+1))-th
-    # smallest calibration nonconformity
-    labeled, pool = _nb1_base(spark, SF)
-    cal = pool.where(F.col("mask").isin(1, 2))
-    v = _nb1_voted(labeled, cal, "f1", 5).withColumn(
-        "t_sum", F.col("t_F") + F.col("t_O") + F.col("t_P")
-    )
-    t_true = (
-        F.when(F.col("o_orderstatus") == "F", F.col("t_F"))
-        .when(F.col("o_orderstatus") == "O", F.col("t_O"))
-        .otherwise(F.col("t_P"))
-    )
+    # smallest per-row calibration nonconformity (masks 1-2)
+    S6 = _BRIER_SCALE
     alphas = np.sort(
         np.array(
-            v.select(
-                (
-                    _BRIER_SCALE - _fd(t_true * _BRIER_SCALE, F.col("t_sum"))
-                ).cast("bigint").alias("a")
-            )
-            .toPandas()["a"]
-            .to_numpy()
+            [
+                int(r[0])
+                for r in _nb_pool_rows(
+                    f"SELECT {S6} - (CASE v.o_orderstatus WHEN 'F' THEN t_F "
+                    f"WHEN 'O' THEN t_O ELSE t_P END * {S6}) "
+                    "// (t_F + t_O + t_P) AS a "
+                    "FROM voted_v1 v JOIN base b ON v.o_orderkey = b.o_orderkey "
+                    "WHERE b.mask IN (1, 2)"
+                )
+            ]
         )
     )
     n = len(alphas)
@@ -396,7 +403,7 @@ def test_conformal_threshold_operator_known_quantile(spark):
     # n=19, miscoverage 0.1: k = ceil(0.9*20) = 18 -> 18th smallest of
     # 1..19 is 18
     alphas = spark.createDataFrame(
-        [(i,) for i in range(1, 20)], "alpha long"
+        [(i, 1) for i in range(1, 20)], "alpha long, cnt long"
     )
     row = conformal_threshold(alphas).collect()[0]
     assert row["n_cal"] == 19
@@ -404,12 +411,16 @@ def test_conformal_threshold_operator_known_quantile(spark):
     # coarser miscoverage 0.5: k = ceil(0.5*20) = 10 -> q_hat = 10
     row = conformal_threshold(alphas, miscoverage=(1, 2)).collect()[0]
     assert row["q_hat"] == 10
-    # ties: duplicate scores collapse onto the counted grid
-    tied = spark.createDataFrame(
-        [(5,)] * 10 + [(7,)] * 9, "alpha long"
-    )
+    # ties: a score's count carries its duplicates
+    tied = spark.createDataFrame([(5, 10), (7, 9)], "alpha long, cnt long")
     row = conformal_threshold(tied).collect()[0]
-    assert row["q_hat"] == 7
+    assert row["n_cal"] == 19 and row["q_hat"] == 7
+    # a repeated score value adds up its counts
+    split = spark.createDataFrame(
+        [(5, 4), (7, 9), (5, 6)], "alpha long, cnt long"
+    )
+    row = conformal_threshold(split).collect()[0]
+    assert row["n_cal"] == 19 and row["q_hat"] == 7
 
 
 def test_conformal_threshold_small_n_infinity_convention(spark):
@@ -420,17 +431,21 @@ def test_conformal_threshold_small_n_infinity_convention(spark):
     (0 for empty input), never NULL."""
     from tfm_semisup_spark.operators.calibration import conformal_threshold
 
-    small = spark.createDataFrame([(i,) for i in range(1, 6)], "alpha long")
+    small = spark.createDataFrame(
+        [(i, 1) for i in range(1, 6)], "alpha long, cnt long"
+    )
     # default: documented NULL, but n_cal correct
     row = conformal_threshold(small).collect()[0]
     assert row["n_cal"] == 5 and row["q_hat"] is None
     row = conformal_threshold(small, infinite_score=999).collect()[0]
     assert row["n_cal"] == 5 and row["q_hat"] == 999
-    empty = spark.createDataFrame([], "alpha long")
+    empty = spark.createDataFrame([], "alpha long, cnt long")
     row = conformal_threshold(empty, infinite_score=999).collect()[0]
     assert row["n_cal"] == 0 and row["q_hat"] == 999
     # large-n behavior unchanged by the convention parameter
-    big = spark.createDataFrame([(i,) for i in range(1, 20)], "alpha long")
+    big = spark.createDataFrame(
+        [(i, 1) for i in range(1, 20)], "alpha long, cnt long"
+    )
     row = conformal_threshold(big, infinite_score=999).collect()[0]
     assert row["q_hat"] == 18
 

@@ -74,42 +74,51 @@ def test_two_round_cotrain_exercises_cross_teach(spark):
         assert tot(2, view, "n_promoted") == k2
 
     # the cross-teach refit must CHANGE view 1's round-2 verdicts:
-    # rebuild round 2 for the priority view with the UN-crossed round-1
-    # training pool on the same round-2 pool and compare promoted sets
+    # rebuild round 2 for the priority view in DuckDB (the oracle's
+    # per-row _ct2_round_sql CTEs) with the crossed and the UN-crossed
+    # round-1 training pool on the same round-2 pool and compare the
+    # promoted sets
+    import duckdb
+
     from tfm_semisup_spark.queries.ssl_queries import (
         _CT2_K_DIV,
-        _ct2_conf,
-        _ct2_kbest_flag,
-        _nb1_base,
+        _NB1_BASE_SQL,
+        _ct2_round_sql,
     )
 
-    labeled, unlabeled = _nb1_base(spark, SF_DIR)
-    train_r1 = labeled.select("f1", "f2", F.col("o_orderstatus").alias("label"))
-    pool_r1 = unlabeled.select("o_orderkey", "o_orderstatus", "f1", "f2")
-    conf_v1r1 = _ct2_conf(train_r1, pool_r1, "f1", 5).localCheckpoint()
-    conf_v2r1 = _ct2_conf(train_r1, pool_r1, "f2", 12).localCheckpoint()
-    flag1_v1 = _ct2_kbest_flag(conf_v1r1, k1)
-    flag1_v2 = _ct2_kbest_flag(conf_v2r1, k1)
-    crossed = train_r1.unionByName(
-        conf_v2r1.where(flag1_v2).select(
-            "f1", "f2", F.col("pred_class").alias("label")
-        )
-    )
-    pool_r2 = (
-        conf_v1r1.where(~flag1_v1)
-        .select("o_orderkey", "o_orderstatus", "f1", "f2")
-        .join(conf_v2r1.where(~flag1_v2).select("o_orderkey"), "o_orderkey", "semi")
-        .localCheckpoint()
-    )
-    assert pool_r2.count() == n2
+    k = f"GREATEST(1, np // {_CT2_K_DIV})"
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW orders AS SELECT * FROM '{SF_DIR}/orders.parquet'")
+    keys = con.execute(
+        f"""WITH {_NB1_BASE_SQL},
+train_r1 AS (SELECT f1, f2, o_orderstatus AS label FROM labeled),
+pool_r1 AS (SELECT o_orderkey, o_orderstatus, f1, f2 FROM unlabeled),
+{_ct2_round_sql("train_r1", "pool_r1", "f1", 5, "v1r1")},
+{_ct2_round_sql("train_r1", "pool_r1", "f2", 12, "v2r1")},
+pool_r2 AS (
+  SELECT a.o_orderkey, a.o_orderstatus, a.f1, a.f2
+  FROM ranked_v1r1 a JOIN ranked_v2r1 b ON a.o_orderkey = b.o_orderkey
+  WHERE a.rn > GREATEST(1, a.np // {_CT2_K_DIV})
+    AND b.rn > GREATEST(1, b.np // {_CT2_K_DIV})
+),
+crossed AS (
+  SELECT * FROM train_r1
+  UNION ALL SELECT f1, f2, pred_class AS label FROM ranked_v2r1 WHERE rn <= {k}
+),
+{_ct2_round_sql("crossed", "pool_r2", "f1", 5, "x")},
+{_ct2_round_sql("train_r1", "pool_r2", "f1", 5, "u")}
+SELECT 'pool', o_orderkey FROM pool_r2
+UNION ALL SELECT 'with', o_orderkey FROM ranked_x WHERE rn <= {k}
+UNION ALL SELECT 'without', o_orderkey FROM ranked_u WHERE rn <= {k}"""
+    ).fetchall()
 
-    def promoted_keys(train):
-        conf = _ct2_conf(train, pool_r2, "f1", 5).localCheckpoint()
-        flag = _ct2_kbest_flag(conf, k2)
-        return {r["o_orderkey"] for r in conf.where(flag).collect()}
+    def promoted_keys(side):
+        return {key for s, key in keys if s == side}
 
-    with_cross = promoted_keys(crossed)
-    without_cross = promoted_keys(train_r1)
+    assert len(promoted_keys("pool")) == n2
+
+    with_cross = promoted_keys("with")
+    without_cross = promoted_keys("without")
     assert len(with_cross) == k2 and len(without_cross) == k2
     assert with_cross != without_cross, (
         "cross-teach refit did not change the priority view's round-2 "

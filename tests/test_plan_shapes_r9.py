@@ -81,15 +81,29 @@ def test_assortativity_uses_checkpointed_edges(spark):
 
 
 def test_ssl_one_round_all_integer_scores(spark):
-    """Promotion decisions must carry no double columns before the
-    aggregate — the exact-arithmetic contract (DECIMAL(38,0) t-scores)."""
-    from tfm_semisup_spark.queries.ssl_queries import _nb1_base, _nb1_decided
+    """Promotion decisions must carry no doubles — the exact-arithmetic
+    contract: on a real contingency grid the replay's scores, argmax
+    and quantized confidence are Python ints (the oracles'
+    DECIMAL(38,0)/HUGEINT algebra without a magnitude bound)."""
+    from tfm_semisup_spark.queries.ssl_queries import (
+        _KBEST_CONF_SCALE,
+        _grid_split,
+        _nb_grid,
+        _nb_predictor,
+        _nb_rows,
+    )
 
-    labeled, unlabeled = _nb1_base(spark, SF_DIR)
-    decided = _nb1_decided(labeled, unlabeled, "f1", 5)
-    dtypes = dict(decided.dtypes)
-    assert dtypes["t_max"].startswith("decimal")
-    assert dtypes["t_sum"].startswith("decimal")
+    lab, pool = _grid_split(_nb_grid(_nb_rows(spark, SF_DIR)))
+    assert lab and pool
+    assert all(type(n) is int for n in lab.values())
+    for pos in ((0,), (1,), (0, 1)):
+        predict = _nb_predictor(lab, pos)
+        for cell in pool:
+            pred, conf_q, t = predict(cell)
+            assert all(type(x) is int for x in (*t, conf_q))
+            t_max = t["FOP".index(pred)]
+            assert t_max == max(t)
+            assert conf_q == t_max * _KBEST_CONF_SCALE // sum(t)
 
 
 def test_kendall_counts_are_consistent(spark):

@@ -15,8 +15,9 @@ returns a DataFrame, so both compose with any upstream scorer.
   tests/test_stats5_properties.py and tests/test_linkage_calibration.py.
 - ``conformal_threshold``: the split-conformal quantile q_hat = the
   ceil((1-miscoverage)(n+1))-th smallest nonconformity, read off the
-  COUNTED score grid (no global sort) with the rank computed by exact
-  integer ceil-division — deterministic under any partitioning.
+  caller's COUNTED (score, count) grid (no global sort) with the rank
+  computed by exact integer ceil-division — deterministic under any
+  partitioning.
 """
 
 from __future__ import annotations
@@ -70,40 +71,42 @@ def isotonic_fit_binned(
 
 
 def conformal_threshold(
-    alphas: DataFrame,
+    grid: DataFrame,
     alpha_col: str = "alpha",
+    n_col: str = "cnt",
     miscoverage: tuple[int, int] = (1, 10),
     infinite_score=None,
 ) -> DataFrame:
     """Split-conformal calibration threshold over integer
     nonconformity scores: ONE row (n_cal, q_hat) where q_hat is the
-    ceil((1 - num/den)(n_cal + 1))-th smallest score. The quantile is
-    taken from the counted value grid (bounded when scores are
-    quantized), never a global sort; the rank uses exact integer
+    ceil((1 - num/den)(n_cal + 1))-th smallest score. ``grid`` is the
+    COUNTED score grid — one row per score value ``alpha_col`` with its
+    calibration count ``n_col`` (a value may repeat; its counts add
+    up) — so the caller's one aggregate is the only pass over the
+    scores and there is no global sort. The rank uses exact integer
     ceil-division, so there is no float boundary at any n.
 
     When the conformal rank k exceeds n_cal (calibration sets smaller
-    than den/num - 1, or empty input) no score is a valid threshold and
-    the conventional answer is +infinity — every candidate enters the
-    prediction set (Vovk; ADVICE r9: the old NULL q_hat silently made
-    downstream coverage comparisons evaluate as UNcovered). Pass
+    than den/num - 1, or an empty grid) no score is a valid threshold
+    and the conventional answer is +infinity — every candidate enters
+    the prediction set (Vovk; ADVICE r9: the old NULL q_hat silently
+    made downstream coverage comparisons evaluate as UNcovered). Pass
     ``infinite_score`` = the scale's maximum possible score to adopt
     that convention on the score's own (integer) type; the default
     ``None`` keeps NULL for callers that gate on n_cal themselves.
-    ``n_cal`` itself now always reports the true calibration count
-    (0 for empty input, never NULL)."""
+    ``n_cal`` always reports the true calibration count (0 for an
+    empty grid, never NULL)."""
     num, den = miscoverage
-    grid = alphas.groupBy(F.col(alpha_col).alias("_a")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("_cnt")
-    )
-    w = Window.orderBy("_a").rowsBetween(
+    w = Window.orderBy(alpha_col).rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
-    cum = grid.select("_a", F.sum("_cnt").over(w).alias("_cum"))
+    # the first row whose running count reaches k carries the k-th
+    # smallest score; repeated values only split a level's count
+    cum = grid.select(
+        F.col(alpha_col).alias("_a"), F.sum(n_col).over(w).alias("_cum")
+    )
     # n_cal = the LAST cumulative count — an unpartitioned max window
-    # over the bounded value grid (the established exception), so the
-    # caller's alphas lineage is scanned exactly ONCE (a separate
-    # count() aggregate used to re-run it per consumer)
+    # over the bounded value grid (the established exception)
     n_cal = F.max("_cum").over(
         Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     )

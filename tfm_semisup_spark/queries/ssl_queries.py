@@ -13,6 +13,10 @@ fMeasure(1) / hard-AUC metrics are label-1-positive — BASELINE.md).
 
 from __future__ import annotations
 
+import functools
+import math
+from decimal import Decimal
+
 from pyspark.ml import Pipeline
 from pyspark.ml.classification import DecisionTreeClassifier, RandomForestClassifier
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -507,28 +511,26 @@ _ST1_MASK_SPARK = f"({md5_uniform16_spark_sql(_ST1_KEY_MD5)} % 5)"
 _ST1_MASK_SQL = f"({md5_uniform16_sql(_ST1_KEY_MD5)} % 5)"
 _ST1_V1, _ST1_V2 = 5, 12  # feature cardinalities (schema constants)
 
+# -- oracle SQL fragments shared by every NB tier ---------------------------
 
-def _st1_oracle() -> str:
-    cls = ["F", "O", "P"]
-    n1 = ", ".join(
-        f"SUM(CASE WHEN o_orderstatus = '{c}' THEN 1 ELSE 0 END)::HUGEINT AS n1_{c}"
-        for c in cls
+_NB1_CLS = ["F", "O", "P"]
+
+
+def _class_counts(col: str, prefix: str, suffix: str = "") -> str:
+    """Per-class count columns ``SUM(CASE WHEN col = 'c' ...)::HUGEINT
+    AS {prefix}c{suffix}`` — the NB fit's one aggregate shape."""
+    return ", ".join(
+        f"SUM(CASE WHEN {col} = '{c}' THEN 1 ELSE 0 END)::HUGEINT"
+        f" AS {prefix}{c}{suffix}"
+        for c in _NB1_CLS
     )
-    n2 = ", ".join(
-        f"SUM(CASE WHEN o_orderstatus = '{c}' THEN 1 ELSE 0 END)::HUGEINT AS n2_{c}"
-        for c in cls
-    )
-    pri = ", ".join(
-        f"SUM(CASE WHEN o_orderstatus = '{c}' THEN 1 ELSE 0 END)::HUGEINT AS n_{c}"
-        for c in cls
-    )
-    ab = " , ".join(
-        f"n_{c} * (COALESCE(n1_{c}, 0) + 1) * (COALESCE(n2_{c}, 0) + 1) AS a_{c}, "
-        f"(n_{c} + {_ST1_V1}) * (n_{c} + {_ST1_V2}) AS b_{c}"
-        for c in cls
-    )
-    return f"""
-WITH base AS (
+
+
+_NB1_PRIOR_SQL = (
+    f"prior AS (SELECT {_class_counts('o_orderstatus', 'n_')} FROM labeled)"
+)
+
+_NB1_BASE_SQL = f"""base AS (
   SELECT o_orderkey, o_orderstatus,
          o_orderpriority AS f1,
          EXTRACT(month FROM o_orderdate)::BIGINT AS f2,
@@ -536,10 +538,28 @@ WITH base AS (
   FROM orders
 ),
 labeled AS (SELECT * FROM base WHERE mask = 0),
-unlabeled AS (SELECT * FROM base WHERE mask <> 0),
-lik1 AS (SELECT f1, {n1} FROM labeled GROUP BY f1),
-lik2 AS (SELECT f2, {n2} FROM labeled GROUP BY f2),
-prior AS (SELECT {pri} FROM labeled),
+unlabeled AS (SELECT * FROM base WHERE mask <> 0)"""
+
+#: argmax over (t_F, t_O, t_P) with the F>=O>=P tie precedence
+_ARGMAX_SQL = """CASE WHEN t_F >= t_O AND t_F >= t_P THEN 'F'
+              WHEN t_O >= t_P THEN 'O' ELSE 'P' END AS pred_class,
+         CASE WHEN t_F >= t_O AND t_F >= t_P THEN t_F
+              WHEN t_O >= t_P THEN t_O ELSE t_P END AS t_max,
+         t_F + t_O + t_P AS t_sum"""
+
+
+def _st1_oracle() -> str:
+    cls = _NB1_CLS
+    ab = " , ".join(
+        f"n_{c} * (COALESCE(n1_{c}, 0) + 1) * (COALESCE(n2_{c}, 0) + 1) AS a_{c}, "
+        f"(n_{c} + {_ST1_V1}) * (n_{c} + {_ST1_V2}) AS b_{c}"
+        for c in cls
+    )
+    return f"""
+WITH {_NB1_BASE_SQL},
+lik1 AS (SELECT f1, {_class_counts("o_orderstatus", "n1_")} FROM labeled GROUP BY f1),
+lik2 AS (SELECT f2, {_class_counts("o_orderstatus", "n2_")} FROM labeled GROUP BY f2),
+{_NB1_PRIOR_SQL},
 scored AS (
   SELECT u.o_orderkey, u.o_orderstatus, {ab}
   FROM unlabeled u
@@ -556,11 +576,7 @@ voted AS (
 ),
 decided AS (
   SELECT o_orderkey, o_orderstatus,
-         CASE WHEN t_F >= t_O AND t_F >= t_P THEN 'F'
-              WHEN t_O >= t_P THEN 'O' ELSE 'P' END AS pred_class,
-         CASE WHEN t_F >= t_O AND t_F >= t_P THEN t_F
-              WHEN t_O >= t_P THEN t_O ELSE t_P END AS t_max,
-         t_F + t_O + t_P AS t_sum
+         {_ARGMAX_SQL}
   FROM voted
 )
 SELECT pred_class,
@@ -584,27 +600,17 @@ def ssl_selftrain_one_round_nb(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_promoted, n_promoted_correct, promoted_key_sum). Threshold stays
     the reference default 0.7 (``SelfTraining.scala:121-149``).
 
-    r14 optimization (guide §1.2/§2.4): round 1 of the two-round grid
-    replay — the prediction and the 10·t_max >= 7·t_sum flag are
-    constant per (f1, f2) cell, so the whole round is ONE fact-scale
-    contingency aggregate (``_nb_grid_rows``) plus exact Python-int
-    algebra, replacing the full-pool DECIMAL(38,0) scoring scan. The
-    oracle is unchanged."""
-    rows = _nb_grid_rows(spark, sf_dir)
-    lab, pool = _grid_split(rows)
-    prior, lik1, lik2 = _py_fit_counts(lab)
-    summary: dict = {}
-    for (f1, f2, c), (n, ks) in pool.items():
-        pred, t_max, t_sum = _py_argmax(_py_nb2_t(prior, lik1, lik2, f1, f2))
-        s = summary.setdefault(pred, [0, 0, 0, 0])
-        s[0] += n
-        if 10 * t_max >= 7 * t_sum:
-            s[1] += n
-            if pred == c:
-                s[2] += n
-            s[3] += ks
+    The prediction and the 10·t_max >= 7·t_sum flag are constant per
+    (f1, f2) cell, so the round replays from the contingency grid
+    (``_nb_grid``) on Python ints — see the grid-replay header."""
+    lab, pool = _grid_split(_nb_grid(_nb_rows(spark, sf_dir)))
+    predict = _nb_predictor(lab, (0, 1))
+    sums: dict = {}
+    for cell, (n, ks) in pool.items():
+        pred, _, t = predict(cell)
+        _tally(sums, pred, cell[-1], n, ks, 10 * max(t) >= 7 * sum(t))
     return spark.createDataFrame(
-        [(p, *summary[p]) for p in sorted(summary)],
+        _tally_rows(sums, cols=slice(0, 4)),
         "pred_class string, n_scored long, n_promoted long, "
         "n_promoted_correct long, promoted_key_sum long",
     )
@@ -643,27 +649,15 @@ def _st2_round_sql(train: str, pool: str, tag: str) -> str:
     """CTEs scoring ``pool`` with an NB fitted on ``train`` (which must
     expose f1, f2, label): lik1_{tag}, lik2_{tag}, prior_{tag},
     decided_{tag} (carrying f1/f2 for a later refit)."""
-    cls = ["F", "O", "P"]
-    n1 = ", ".join(
-        f"SUM(CASE WHEN label = '{c}' THEN 1 ELSE 0 END)::HUGEINT AS n1_{c}"
-        for c in cls
-    )
-    n2 = ", ".join(
-        f"SUM(CASE WHEN label = '{c}' THEN 1 ELSE 0 END)::HUGEINT AS n2_{c}"
-        for c in cls
-    )
-    pri = ", ".join(
-        f"SUM(CASE WHEN label = '{c}' THEN 1 ELSE 0 END)::HUGEINT AS n_{c}"
-        for c in cls
-    )
     ab = " , ".join(
         f"n_{c} * (COALESCE(n1_{c}, 0) + 1) * (COALESCE(n2_{c}, 0) + 1) AS a_{c}, "
         f"(n_{c} + {_ST1_V1}) * (n_{c} + {_ST1_V2}) AS b_{c}"
-        for c in cls
+        for c in _NB1_CLS
     )
+    n1, n2 = _class_counts("label", "n1_"), _class_counts("label", "n2_")
     return f"""lik1_{tag} AS (SELECT f1, {n1} FROM {train} GROUP BY f1),
 lik2_{tag} AS (SELECT f2, {n2} FROM {train} GROUP BY f2),
-prior_{tag} AS (SELECT {pri} FROM {train}),
+prior_{tag} AS (SELECT {_class_counts("label", "n_")} FROM {train}),
 scored_{tag} AS (
   SELECT u.o_orderkey, u.o_orderstatus, u.f1, u.f2, {ab}
   FROM {pool} u
@@ -673,11 +667,7 @@ scored_{tag} AS (
 ),
 decided_{tag} AS (
   SELECT o_orderkey, o_orderstatus, f1, f2,
-         CASE WHEN t_F >= t_O AND t_F >= t_P THEN 'F'
-              WHEN t_O >= t_P THEN 'O' ELSE 'P' END AS pred_class,
-         CASE WHEN t_F >= t_O AND t_F >= t_P THEN t_F
-              WHEN t_O >= t_P THEN t_O ELSE t_P END AS t_max,
-         t_F + t_O + t_P AS t_sum
+         {_ARGMAX_SQL}
   FROM (
     SELECT o_orderkey, o_orderstatus, f1, f2,
            a_F * b_O * b_P AS t_F, a_O * b_F * b_P AS t_O,
@@ -703,15 +693,7 @@ GROUP BY pred_class"""
 
 def _st2_oracle() -> str:
     return f"""
-WITH base AS (
-  SELECT o_orderkey, o_orderstatus,
-         o_orderpriority AS f1,
-         EXTRACT(month FROM o_orderdate)::BIGINT AS f2,
-         {_ST1_MASK_SQL} AS mask
-  FROM orders
-),
-labeled AS (SELECT * FROM base WHERE mask = 0),
-unlabeled AS (SELECT * FROM base WHERE mask <> 0),
+WITH {_NB1_BASE_SQL},
 train_r1 AS (
   SELECT f1, f2, o_orderstatus AS label FROM labeled
 ),
@@ -735,55 +717,83 @@ UNION ALL
 """
 
 
-# -- sufficient-statistics grid replay (r14 optimization) -------------------
+# -- sufficient-statistics grid replay --------------------------------------
 #
-# Every two-round NB trajectory below is a pure function of the bounded
-# (features x class) contingency grid: predictions, confidences and
-# threshold promotion flags are constant per feature cell, so the
-# entire exchange->refit->exchange unroll needs ONE map-side-combinable
-# fact aggregate (count + o_orderkey sum per cell) and data-scale-free
-# exact-integer replay — the ssl_logreg_irls_grid pattern (SCALE.md)
-# applied to the promotion trajectories. What this replaces, per
-# query: 2 full-pool scoring scans with DECIMAL(38,0) n^4..n^7
-# products per row, 2+ localCheckpoint materializations of the scored
-# pool, the o_orderkey pool-realignment joins, and 18-59 sequential
-# driver actions (measured sf0.1 medians: selftrain 4.0s -> ~1.1s,
-# threshold co-training 6.1s -> ~1.3s, tri-training 9.1s -> ~1.6s on
-# the same machine state). Python ints are arbitrary-precision, so the
-# replay is exactly the DECIMAL(38,0)/HUGEINT algebra (// is the
-# pmod-subtract floor division); the oracles are unchanged and every
-# output row is bit-identical (driver-sim verified at both gate SFs).
-# The kBest variant additionally needs the per-row o_orderkey boundary
-# inside the rank-k confidence cohort — see its bounded probe jobs.
+# All 19 oracled NB entries are pure functions of the bounded
+# (features x class) contingency grid: predictions, quantized
+# confidences, bins, nonconformity scores and threshold promotion flags
+# are constant per feature cell. So the Spark side of every NB tier is
+# ONE map-side-combinable fact aggregate (count + o_orderkey sum per
+# cell, <= 5·5·12·5·3 cells at any corpus size) and data-scale-free
+# exact-integer replay on the driver — the ssl_logreg_irls_grid pattern
+# (SCALE.md) applied to the promotion trajectories. Python ints are
+# arbitrary-precision, so the replay is exactly the oracles'
+# DECIMAL(38,0)/HUGEINT algebra (``//`` is their floor division on
+# non-negative operands). Where a tier ends in a double (means, rates,
+# kappa, AUC, t) that final expression stays a Spark expression over
+# exact DECIMAL(38,0)/BIGINT inputs built with createDataFrame, so the
+# rounding semantics are the oracles'. The kBest tiers additionally
+# need the per-row o_orderkey boundary inside the rank-k confidence
+# cohort (``_kbest_round``'s bounded probe). The replay, written once:
+#
+#   _nb_rows / _nb_grid   the masked projection and its contingency grid
+#   _grid_split           labeled/pool cells (or fold, half, cal/eval)
+#   _nb_predictor         the n-feature count fit + memoized argmax
+#   _tally / _tally_rows  the per-class promotion summary
+#   _kbest_round          the kBest cohort walk + boundary probe
+
+_KBEST_CONF_SCALE = 1_000_000_000_000  # 10^12 confidence quantization
+_NB_V = (_ST1_V1, _ST1_V2, 5)  # vocabulary size per position f1, f2, f3
+_NB_COLS = {
+    "f1": "o_orderpriority",
+    "f2": "CAST(month(o_orderdate) AS BIGINT)",
+    "mask": _ST1_MASK_SPARK,
+}
 
 
-def _py_nb1_t(prior: dict, lik: dict, V: int, fv) -> tuple:
-    """Single-feature NB integer score vector (t_F, t_O, t_P) for
-    feature value ``fv`` — ``_nb1_decided``'s algebra on Python ints."""
-    a = {c: prior[c] * (lik.get((fv, c), 0) + 1) for c in _NB1_CLS}
-    b = {c: prior[c] + V for c in _NB1_CLS}
-    return (
-        a["F"] * b["O"] * b["P"],
-        a["O"] * b["F"] * b["P"],
-        a["P"] * b["F"] * b["O"],
+def _nb_rows(spark: SparkSession, sf_dir: str, **keys: str) -> DataFrame:
+    """orders as (o_orderkey, o_orderstatus, f1, f2, mask) plus extra
+    key columns given as name=Spark SQL; ``f3`` joins customer."""
+    orders = load_table(spark, sf_dir, "orders")
+    if "f3" in keys:
+        customer = load_table(spark, sf_dir, "customer").select(
+            "c_custkey", "c_mktsegment"
+        )
+        orders = orders.join(customer, orders.o_custkey == customer.c_custkey)
+    return orders.select(
+        "o_orderkey",
+        "o_orderstatus",
+        *(F.expr(sql).alias(k) for k, sql in {**_NB_COLS, **keys}.items()),
     )
 
 
-def _py_nb2_t(prior: dict, lik1: dict, lik2: dict, f1, f2) -> tuple:
-    """Two-feature NB integer score vector — the ``_nb2_scored_sql``
-    algebra (V1=5 priorities, V2=12 months) on Python ints."""
-    a = {
-        c: prior[c]
-        * (lik1.get((f1, c), 0) + 1)
-        * (lik2.get((f2, c), 0) + 1)
-        for c in _NB1_CLS
-    }
-    b = {c: (prior[c] + _ST1_V1) * (prior[c] + _ST1_V2) for c in _NB1_CLS}
-    return (
-        a["F"] * b["O"] * b["P"],
-        a["O"] * b["F"] * b["P"],
-        a["P"] * b["F"] * b["O"],
-    )
+def _nb_grid(rows: DataFrame, lead=("mask",), feats=("f1", "f2")) -> dict:
+    """The ONE fact-scale job of every NB entry: {lead key values:
+    {(*feats, class): (n, o_orderkey sum)}}."""
+    grid: dict = {}
+    for r in (
+        rows.groupBy(*lead, *feats, "o_orderstatus")
+        .agg(F.count(F.lit(1)).alias("n"), F.sum("o_orderkey").alias("ks"))
+        .collect()
+    ):
+        cell = (*(r[f] for f in feats), r["o_orderstatus"])
+        grid.setdefault(tuple(r[k] for k in lead), {})[cell] = (r["n"], r["ks"])
+    return grid
+
+
+def _grid_split(grid: dict, train=lambda m: m == 0, pool=lambda m: m != 0):
+    """(train {cell: n}, pool {cell: (n, keysum)}) summed over the lead
+    keys ``train`` / ``pool`` accept (default: labeled / unlabeled)."""
+    tr: dict = {}
+    pl: dict = {}
+    for lead, cells in grid.items():
+        for cell, (n, ks) in cells.items():
+            if train(*lead):
+                tr[cell] = tr.get(cell, 0) + n
+            if pool(*lead):
+                pn, pks = pl.get(cell, (0, 0))
+                pl[cell] = (pn + n, pks + ks)
+    return tr, pl
 
 
 def _py_argmax(t: tuple) -> tuple:
@@ -796,53 +806,130 @@ def _py_argmax(t: tuple) -> tuple:
     return "P", t_p, t_f + t_o + t_p
 
 
-def _nb_grid_rows(spark: SparkSession, sf_dir: str):
-    """The ONE fact-scale job of the two-feature replay entries: the
-    (labeled?, f1, f2, class) contingency grid with per-cell count and
-    o_orderkey sum (<= 2 x 5 x 12 x 3 rows at any corpus size)."""
-    orders = load_table(spark, sf_dir, "orders")
-    return (
-        orders.select(
-            "o_orderkey",
-            "o_orderstatus",
-            F.col("o_orderpriority").alias("f1"),
-            F.month("o_orderdate").cast("bigint").alias("f2"),
-            F.expr(_ST1_MASK_SPARK).alias("mask"),
+def _nb_predictor(train: dict, pos: tuple, scale: int = _KBEST_CONF_SCALE):
+    """Memoized cell -> (pred_class, conf_q, t) of the add-one-smoothed
+    exact-count NB fitted on ``train`` {(*features, class): n} over the
+    feature positions ``pos``: a_c = n_c·Π(n_i[f_i, c] + 1), b_c =
+    Π(n_c + V_i), t_c = a_c·Π_{c'≠c} b_c' (the oracles' cross-multiplied
+    scores), F>=O>=P argmax, conf_q = floor(t_max·scale / t_sum)."""
+    prior = {c: 0 for c in _NB1_CLS}
+    lik: dict = {}
+    for cell, n in train.items():
+        c = cell[-1]
+        prior[c] += n
+        for i in pos:
+            lik[(i, cell[i], c)] = lik.get((i, cell[i], c), 0) + n
+    b = {c: math.prod(prior[c] + _NB_V[i] for i in pos) for c in _NB1_CLS}
+    memo: dict = {}
+
+    def predict(cell) -> tuple:
+        key = tuple(cell[i] for i in pos)
+        if key not in memo:
+            a = {
+                c: prior[c]
+                * math.prod(lik.get((i, cell[i], c), 0) + 1 for i in pos)
+                for c in _NB1_CLS
+            }
+            t = (
+                a["F"] * b["O"] * b["P"],
+                a["O"] * b["F"] * b["P"],
+                a["P"] * b["F"] * b["O"],
+            )
+            pred, t_max, t_sum = _py_argmax(t)
+            memo[key] = (pred, t_max * scale // t_sum, t)
+        return memo[key]
+
+    return predict
+
+
+def _tally(
+    sums: dict, pred: str, c: str, n: int, ks: int, promoted=True, cq=None
+) -> None:
+    """Add ``n`` pool rows of true class ``c`` (o_orderkey sum ``ks``)
+    scored ``pred`` to sums[pred] = [n_scored, n_promoted,
+    n_promoted_correct, promoted_key_sum, min_conf_q] — the per-class
+    summary the promotion oracles GROUP BY pred_class."""
+    s = sums.setdefault(pred, [0, 0, 0, 0, None])
+    s[0] += n
+    if promoted:
+        s[1] += n
+        s[2] += n if pred == c else 0
+        s[3] += ks
+        if cq is not None:
+            s[4] = cq if s[4] is None else min(s[4], cq)
+
+
+def _tally_rows(sums: dict, *lead, cols: slice) -> list:
+    """Rows (*lead, pred_class, *summary[cols]) in class order; a class
+    with no promotions reports the oracles' min_conf_q of -1."""
+    rows = []
+    for p in sorted(sums):
+        *counts, min_q = sums[p]
+        full = (*counts, -1 if min_q is None else min_q)
+        rows.append((*lead, p, *full[cols]))
+    return rows
+
+
+def _kbest_round(rows: DataFrame, pool: dict, views: dict, k: int):
+    """One kBest round: per view tag the promotion flag Column that is
+    true exactly for the pool rows ranked rn <= k under the oracles'
+    (conf_q DESC, o_orderkey) order, plus the flag-split pool grid
+    [(cell, {tag: flag}, n, keysum)]. ``views`` maps tag -> (feature
+    column, cell position, predictor); ``rows`` are the pool's rows,
+    ``pool`` its cells.
+
+    conf_q is constant per feature value, so the k-th ranked row sits
+    in one tie-confidence cohort c_star and promotion inside it is an
+    o_orderkey prefix: the levels are walked on the driver, then ONE
+    action unions a bounded TakeOrderedAndProject probe per view for
+    the prefix's last key (limit k_rem, one scalar out), and ONE
+    aggregate splits the pool grid by the flags. A pool of fewer than
+    k rows (only an empty one, k being max(1, n/10)) is promoted
+    whole."""
+    flags, ties, legs = {}, {}, []
+    for tag, (col, pos, predict) in views.items():
+        conf = {cell[pos]: predict(cell)[1] for cell in pool}
+        lvl: dict = {}
+        for cell, (n, _ks) in pool.items():
+            lvl[conf[cell[pos]]] = lvl.get(conf[cell[pos]], 0) + n
+        above_n, c_star = 0, None
+        for cq in sorted(lvl, reverse=True):
+            if above_n + lvl[cq] >= k:
+                c_star = cq
+                break
+            above_n += lvl[cq]
+        above = sorted(
+            fv for fv, cq in conf.items() if c_star is None or cq > c_star
         )
-        .groupBy(
-            (F.col("mask") == 0).alias("lab"), "f1", "f2", "o_orderstatus"
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("o_orderkey").alias("ks"),
-        )
+        flags[tag] = F.col(col).isin(above) if above else F.lit(False)
+        ties[tag] = sorted(fv for fv, cq in conf.items() if cq == c_star)
+        if ties[tag]:
+            legs.append(
+                rows.where(F.col(col).isin(ties[tag]))
+                .select("o_orderkey")
+                .orderBy("o_orderkey")
+                .limit(k - above_n)
+                .agg(F.max("o_orderkey").alias("m"))
+                .select(F.lit(tag).alias("tag"), "m")
+            )
+    if legs:
+        for r in functools.reduce(DataFrame.unionByName, legs).collect():
+            col = views[r["tag"]][0]
+            flags[r["tag"]] = flags[r["tag"]] | (
+                F.col(col).isin(ties[r["tag"]])
+                & (F.col("o_orderkey") <= F.lit(r["m"]))
+            )
+    cell = ("f1", "f2", "o_orderstatus")
+    grid = (
+        rows.groupBy(*cell, *(f.alias(t) for t, f in flags.items()))
+        .agg(F.count(F.lit(1)).alias("n"), F.sum("o_orderkey").alias("ks"))
         .collect()
     )
-
-
-def _grid_split(rows):
-    """-> (labeled {(f1,f2,c): n}, pool {(f1,f2,c): (n, keysum)})."""
-    lab, pool = {}, {}
-    for r in rows:
-        key = (r["f1"], r["f2"], r["o_orderstatus"])
-        if r["lab"]:
-            lab[key] = lab.get(key, 0) + r["n"]
-        else:
-            n, ks = pool.get(key, (0, 0))
-            pool[key] = (n + r["n"], ks + r["ks"])
-    return lab, pool
-
-
-def _py_fit_counts(train_cells: dict):
-    """(prior, lik1, lik2) count dicts from {(f1,f2,label): n}."""
-    prior: dict = {c: 0 for c in _NB1_CLS}
-    lik1: dict = {}
-    lik2: dict = {}
-    for (f1, f2, c), n in train_cells.items():
-        prior[c] += n
-        lik1[(f1, c)] = lik1.get((f1, c), 0) + n
-        lik2[(f2, c)] = lik2.get((f2, c), 0) + n
-    return prior, lik1, lik2
+    split = [
+        (tuple(r[c] for c in cell), {t: r[t] for t in views}, r["n"], r["ks"])
+        for r in grid
+    ]
+    return flags, split
 
 
 _CT2_SUMMARY_SCHEMA = (
@@ -852,23 +939,6 @@ _CT2_SUMMARY_SCHEMA = (
 )
 
 
-def _py_conf_map(tag: str, train_cells: dict):
-    """Memoized feature-value -> (pred_class, conf_q) map for one
-    co-training view (v1: f1 likelihoods, V=5; v2: f2, V=12) —
-    ``_ct2_conf``'s algebra on Python ints, conf_q = t_max·10¹²//t_sum."""
-    prior, lik1, lik2 = _py_fit_counts(train_cells)
-    lik, V = (lik1, 5) if tag == "v1" else (lik2, 12)
-    memo: dict = {}
-
-    def conf(fv):
-        if fv not in memo:
-            pred, t_max, t_sum = _py_argmax(_py_nb1_t(prior, lik, V, fv))
-            memo[fv] = (pred, t_max * _CT2_SCALE // t_sum)
-        return memo[fv]
-
-    return conf
-
-
 @register("ssl_selftrain_two_round_nb", _st2_oracle())
 def ssl_selftrain_two_round_nb(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two unrolled SelfTraining threshold rounds with an NB refit on
@@ -876,35 +946,24 @@ def ssl_selftrain_two_round_nb(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_promoted, n_promoted_correct, promoted_key_sum) — exercises the
     refit-on-promoted step no single-round oracle reaches.
 
-    r14 optimization: the threshold flag (10·t_max >= 4·t_sum) and the
-    prediction are constant per (f1, f2) cell, so both rounds replay
-    exactly from the contingency grid — one fact aggregate, zero
-    checkpoints, zero per-row DECIMAL products (see the grid-replay
-    header comment). The oracle is unchanged."""
-    rows = _nb_grid_rows(spark, sf_dir)
-    lab, pool = _grid_split(rows)
-    train = dict(lab)
+    The threshold flag (10·t_max >= 4·t_sum) and the prediction are
+    constant per (f1, f2) cell, so both rounds replay from the
+    contingency grid (see the grid-replay header)."""
+    train, pool = _grid_split(_nb_grid(_nb_rows(spark, sf_dir)))
     out_rows = []
     for rnd in (1, 2):
-        prior, lik1, lik2 = _py_fit_counts(train)
-        summary: dict = {}
+        predict = _nb_predictor(train, (0, 1))
+        sums: dict = {}
         next_pool: dict = {}
         for (f1, f2, c), (n, ks) in pool.items():
-            pred, t_max, t_sum = _py_argmax(_py_nb2_t(prior, lik1, lik2, f1, f2))
-            promoted = _ST2_THR_DEN * t_max >= _ST2_THR_NUM * t_sum
-            s = summary.setdefault(pred, [0, 0, 0, 0])
-            s[0] += n
+            pred, _, t = predict((f1, f2, c))
+            promoted = _ST2_THR_DEN * max(t) >= _ST2_THR_NUM * sum(t)
+            _tally(sums, pred, c, n, ks, promoted)
             if promoted:
-                s[1] += n
-                if pred == c:
-                    s[2] += n
-                s[3] += ks
                 train[(f1, f2, pred)] = train.get((f1, f2, pred), 0) + n
             else:
                 next_pool[(f1, f2, c)] = (n, ks)
-        for pred in sorted(summary):
-            s = summary[pred]
-            out_rows.append((rnd, pred, s[0], s[1], s[2], s[3]))
+        out_rows += _tally_rows(sums, rnd, cols=slice(0, 4))
         pool = next_pool
     return spark.createDataFrame(
         out_rows,
@@ -930,15 +989,9 @@ def ssl_selftrain_two_round_nb(spark: SparkSession, sf_dir: str) -> DataFrame:
 # bounded by n^4 (< 10^38 through sf1) and the kBest confidence
 # quantization t_max·10^12/t_sum stays inside DECIMAL(38,0)/HUGEINT.
 
-_NB1_CLS = ["F", "O", "P"]
-
 
 def _nb1_lik_sql(feat: str, tag: str) -> str:
-    cells = ", ".join(
-        f"SUM(CASE WHEN o_orderstatus = '{c}' THEN 1 ELSE 0 END)::HUGEINT"
-        f" AS nf_{c}_{tag}"
-        for c in _NB1_CLS
-    )
+    cells = _class_counts("o_orderstatus", "nf_", f"_{tag}")
     return f"lik_{tag} AS (SELECT {feat}, {cells} FROM labeled GROUP BY {feat})"
 
 
@@ -962,106 +1015,26 @@ voted_{tag} AS (
 ),
 decided_{tag} AS (
   SELECT o_orderkey, o_orderstatus,
-         CASE WHEN t_F >= t_O AND t_F >= t_P THEN 'F'
-              WHEN t_O >= t_P THEN 'O' ELSE 'P' END AS pred_class,
-         CASE WHEN t_F >= t_O AND t_F >= t_P THEN t_F
-              WHEN t_O >= t_P THEN t_O ELSE t_P END AS t_max,
-         t_F + t_O + t_P AS t_sum
-  FROM decided_src_{tag}
-)""".replace(f"decided_src_{tag}", f"voted_{tag}")
-
-
-_NB1_PRIOR_SQL = "prior AS (SELECT " + ", ".join(
-    f"SUM(CASE WHEN o_orderstatus = '{c}' THEN 1 ELSE 0 END)::HUGEINT AS n_{c}"
-    for c in _NB1_CLS
-) + " FROM labeled)"
-
-_NB1_BASE_SQL = f"""base AS (
-  SELECT o_orderkey, o_orderstatus,
-         o_orderpriority AS f1,
-         EXTRACT(month FROM o_orderdate)::BIGINT AS f2,
-         {_ST1_MASK_SQL} AS mask
-  FROM orders
-),
-labeled AS (SELECT * FROM base WHERE mask = 0),
-unlabeled AS (SELECT * FROM base WHERE mask <> 0)"""
-
-
-def _nb1_csum(c: str, alias: str):
-    return (
-        F.sum(F.when(F.col("o_orderstatus") == c, 1).otherwise(0))
-        .cast("decimal(38,0)")
-        .alias(alias)
-    )
+         {_ARGMAX_SQL}
+  FROM voted_{tag}
+)"""
 
 
 def _nb1_base(spark: SparkSession, sf_dir: str):
     from tfm_semisup_spark.operators.lineage import truncate
 
-    orders = load_table(spark, sf_dir, "orders")
-    base = orders.select(
-        "o_orderkey",
-        "o_orderstatus",
-        F.col("o_orderpriority").alias("f1"),
-        F.month("o_orderdate").cast("bigint").alias("f2"),
-        F.expr(_ST1_MASK_SPARK).alias("mask"),
-    )
-    # the masked projection (with its md5 decode) feeds every view's
-    # likelihood + prior aggregates AND the scoring join — up to 9
-    # references in the multi-view queries; checkpoint once so the
-    # scan+hash runs once (the assortativity edge-list lesson)
-    base = truncate(base, eager=True)
+    # the masked projection (with its md5 decode) is re-read by the
+    # stump entries (split grid, leaf passes) and by the kBest
+    # co-training rounds (contingency grid, boundary probes, flag-split
+    # aggregates); checkpoint once so the scan+hash runs once (the
+    # assortativity edge-list lesson)
+    base = truncate(_nb_rows(spark, sf_dir), eager=True)
     return base.where(F.col("mask") == 0), base.where(F.col("mask") != 0)
-
-
-def _nb1_voted(labeled: DataFrame, pool: DataFrame, feat: str, V: int) -> DataFrame:
-    """Single-feature exact-count NB per-class score vector over a
-    pool: (o_orderkey, o_orderstatus, t_F, t_O, t_P) — all-integer
-    DECIMAL(38,0) cross-multiplied scores."""
-    lik = labeled.groupBy(feat).agg(
-        *[_nb1_csum(c, f"nf_{c}") for c in _NB1_CLS]
-    )
-    prior = labeled.agg(*[_nb1_csum(c, f"n_{c}") for c in _NB1_CLS])
-    s = pool.join(F.broadcast(lik), feat, "left").crossJoin(
-        F.broadcast(prior)
-    )
-    for c in _NB1_CLS:
-        s = s.withColumn(
-            f"a_{c}",
-            F.col(f"n_{c}") * (F.coalesce(F.col(f"nf_{c}"), F.lit(0)) + 1),
-        ).withColumn(f"b_{c}", F.col(f"n_{c}") + V)
-    return s.select(
-        "o_orderkey",
-        "o_orderstatus",
-        (F.col("a_F") * F.col("b_O") * F.col("b_P")).alias("t_F"),
-        (F.col("a_O") * F.col("b_F") * F.col("b_P")).alias("t_O"),
-        (F.col("a_P") * F.col("b_F") * F.col("b_O")).alias("t_P"),
-    )
-
-
-def _nb1_decided(labeled: DataFrame, unlabeled: DataFrame, feat: str, V: int) -> DataFrame:
-    """Single-feature exact-count NB argmax over the unlabeled pool:
-    (o_orderkey, o_orderstatus, pred_class, t_max, t_sum) — all-integer
-    DECIMAL(38,0) scores, F>=O>=P tie precedence (class ascending)."""
-    v = _nb1_voted(labeled, unlabeled, feat, V)
-    is_f = (F.col("t_F") >= F.col("t_O")) & (F.col("t_F") >= F.col("t_P"))
-    is_o = F.col("t_O") >= F.col("t_P")
-    return v.select(
-        "o_orderkey",
-        "o_orderstatus",
-        F.when(is_f, "F").when(is_o, "O").otherwise("P").alias("pred_class"),
-        F.when(is_f, F.col("t_F"))
-        .when(is_o, F.col("t_O"))
-        .otherwise(F.col("t_P"))
-        .alias("t_max"),
-        (F.col("t_F") + F.col("t_O") + F.col("t_P")).alias("t_sum"),
-    )
 
 
 # -- kBest ------------------------------------------------------------------
 
 _KBEST_FRAC_DIV = 10  # promote top n_pool/10 this round
-_KBEST_CONF_SCALE = 1_000_000_000_000  # 10^12
 # conf_q cut: 0.37 quantized at 10^12 — shared by the one-round and
 # two-round co-training THRESHOLD entries (measurement rationale at
 # the two-round oracle builder below).
@@ -1102,96 +1075,24 @@ def ssl_selftrain_one_round_kbest(spark: SparkSession, sf_dir: str) -> DataFrame
     quantized confidence, okey tie-break): (pred_class, n_promoted,
     n_promoted_correct, promoted_key_sum, min_conf_q).
 
-    r14 optimization (guide §1.2/§2.4, the ssl_cotrain_two_round_nb
-    boundary recipe): confidence floor(t_max·10^12/t_sum) is constant
-    per f1 value (<= 5 distinct levels), so the rank-k boundary sits
-    inside ONE tie-confidence cohort and promotion there is an
-    o_orderkey prefix. Three bounded fact jobs replace the full-pool
-    DECIMAL(38,0) scoring scan + checkpoint + count + probe chain:
-    (1) the (lab, f1, class) contingency grid, (2) one
-    TakeOrderedAndProject probe for the cohort's k_rem-th smallest
-    okey, (3) one flag-split grid aggregate. Replay on Python ints;
-    the oracle (ROW_NUMBER over the same total order) is unchanged."""
-    orders = load_table(spark, sf_dir, "orders")
-
-    def _base() -> DataFrame:
-        return orders.select(
-            "o_orderkey",
-            "o_orderstatus",
-            F.col("o_orderpriority").alias("f1"),
-            F.expr(_ST1_MASK_SPARK).alias("mask"),
-        )
-
-    grid = (
-        _base()
-        .groupBy((F.col("mask") == 0).alias("lab"), "f1", "o_orderstatus")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
+    Confidence floor(t_max·10^12/t_sum) is constant per f1 value, so
+    the round is the contingency grid plus ``_kbest_round``'s bounded
+    boundary probe and flag-split aggregate; the oracle ranks the same
+    total order with ROW_NUMBER."""
+    rows = _nb_rows(spark, sf_dir)
+    lab, pool = _grid_split(_nb_grid(rows))
+    predict = _nb_predictor(lab, (0,))
+    k = max(1, sum(n for n, _ in pool.values()) // _KBEST_FRAC_DIV)
+    _, split = _kbest_round(
+        rows.where(F.col("mask") != 0), pool, {"v1": ("f1", 0, predict)}, k
     )
-    prior: dict = {c: 0 for c in _NB1_CLS}
-    lik: dict = {}
-    pool: dict = {}
-    for r in grid:
-        if r["lab"]:
-            prior[r["o_orderstatus"]] += r["n"]
-            key = (r["f1"], r["o_orderstatus"])
-            lik[key] = lik.get(key, 0) + r["n"]
-        else:
-            key = (r["f1"], r["o_orderstatus"])
-            pool[key] = pool.get(key, 0) + r["n"]
-    conf: dict = {}
-    for fv in {f1 for (f1, _c) in pool}:
-        pred, t_max, t_sum = _py_argmax(_py_nb1_t(prior, lik, 5, fv))
-        conf[fv] = (pred, t_max * _KBEST_CONF_SCALE // t_sum)
-    n_pool = sum(pool.values())
-    k = max(1, n_pool // _KBEST_FRAC_DIV)
-    # cohort walk: confidence levels descending; the k-th ranked row
-    # lands inside the c_star tie cohort, k_rem rows deep
-    lvl: dict = {}
-    for (fv, _c), n in pool.items():
-        lvl[conf[fv][1]] = lvl.get(conf[fv][1], 0) + n
-    cum = 0
-    for cq in sorted(lvl, reverse=True):
-        cum += lvl[cq]
-        if cum >= k:
-            c_star, above_n = cq, cum - lvl[cq]
-            break
-    ties = sorted(fv for fv in conf if conf[fv][1] == c_star)
-    above = sorted(fv for fv in conf if conf[fv][1] > c_star)
-    # ONE bounded probe: the (k - above_n)-th smallest okey in the
-    # tie cohort (TakeOrderedAndProject, one scalar out)
-    k_star = (
-        _base()
-        .where((F.col("mask") != 0) & F.col("f1").isin(ties))
-        .select("o_orderkey")
-        .orderBy("o_orderkey")
-        .limit(k - above_n)
-        .agg(F.max("o_orderkey").alias("m"))
-        .collect()[0]["m"]
-    )
-    tie_flag = F.col("f1").isin(ties) & (F.col("o_orderkey") <= F.lit(k_star))
-    flag = (F.col("f1").isin(above) | tie_flag) if above else tie_flag
-    # ONE flag-split grid aggregate: per-class promoted counts/keysums
-    fg = (
-        _base()
-        .where(F.col("mask") != 0)
-        .groupBy("f1", "o_orderstatus", flag.alias("fl"))
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("o_orderkey").alias("ks"))
-        .collect()
-    )
-    summary: dict = {}
-    for r in fg:
-        if not r["fl"]:
-            continue
-        pred, cq = conf[r["f1"]]
-        s = summary.setdefault(pred, [0, 0, 0, None])
-        s[0] += r["n"]
-        if pred == r["o_orderstatus"]:
-            s[1] += r["n"]
-        s[2] += r["ks"]
-        s[3] = cq if s[3] is None else min(s[3], cq)
+    sums: dict = {}
+    for cell, fl, n, ks in split:
+        if fl["v1"]:
+            pred, cq, _ = predict(cell)
+            _tally(sums, pred, cell[-1], n, ks, cq=cq)
     return spark.createDataFrame(
-        [(p, *summary[p]) for p in sorted(summary)],
+        _tally_rows(sums, cols=slice(1, 5)),
         "pred_class string, n_promoted long, n_promoted_correct long, "
         "promoted_key_sum long, min_conf_q long",
     )
@@ -1260,39 +1161,25 @@ def ssl_cotrain_one_round_nb(spark: SparkSession, sf_dir: str) -> DataFrame:
     (view_name, pred_class, n_promoted, n_promoted_correct,
     promoted_key_sum).
 
-    r14 optimization (guide §1.2/§2.4): each view's prediction and
-    conf_q > _CT2T_THR flag are constant per feature value, and the
-    agreement membership is a function of the (f1, f2) cell — so the
-    whole exchange round replays from ONE ``_nb_grid_rows`` fact
-    aggregate on Python ints (no per-row DECIMAL scoring, no row-level
-    agreement join, no checkpoint). The oracle is unchanged."""
-    rows = _nb_grid_rows(spark, sf_dir)
-    lab, pool = _grid_split(rows)
-    conf = {"v1": _py_conf_map("v1", lab), "v2": _py_conf_map("v2", lab)}
+    Each view's prediction and conf_q > _CT2T_THR flag are constant
+    per feature value and the agreement membership is a function of the
+    (f1, f2) cell, so the exchange round replays from the contingency
+    grid (see the grid-replay header)."""
+    lab, pool = _grid_split(_nb_grid(_nb_rows(spark, sf_dir)))
+    p1, p2 = _nb_predictor(lab, (0,)), _nb_predictor(lab, (1,))
     sums: dict = {"priority": {}, "month": {}, "agreement": {}}
-
-    def _add(view: str, pred: str, c: str, n: int, ks: int) -> None:
-        s = sums[view].setdefault(pred, [0, 0, 0])
-        s[0] += n
-        if pred == c:
-            s[1] += n
-        s[2] += ks
-
-    for (f1, f2, c), (n, ks) in pool.items():
-        p1, q1 = conf["v1"](f1)
-        p2, q2 = conf["v2"](f2)
-        fl1, fl2 = q1 > _CT2T_THR, q2 > _CT2T_THR
-        if fl1:
-            _add("priority", p1, c, n, ks)
-        if fl2:
-            _add("month", p2, c, n, ks)
-        if fl1 and fl2 and p1 == p2:
-            _add("agreement", p1, c, n, ks)
-    out_rows = [
-        (view, pred, *sums[view][pred])
-        for view in ("priority", "month", "agreement")
-        for pred in sorted(sums[view])
-    ]
+    for cell, (n, ks) in pool.items():
+        (a, qa, _), (b, qb, _) = p1(cell), p2(cell)
+        c = cell[-1]
+        if qa > _CT2T_THR:
+            _tally(sums["priority"], a, c, n, ks)
+        if qb > _CT2T_THR:
+            _tally(sums["month"], b, c, n, ks)
+        if qa > _CT2T_THR and qb > _CT2T_THR and a == b:
+            _tally(sums["agreement"], a, c, n, ks)
+    out_rows = []
+    for view, s in sums.items():
+        out_rows += _tally_rows(s, view, cols=slice(1, 4))
     return spark.createDataFrame(
         out_rows,
         "view_name string, pred_class string, n_promoted long, "
@@ -1312,6 +1199,31 @@ _NB1_BASE3_SQL = f"""base AS (
 ),
 labeled AS (SELECT * FROM base WHERE mask = 0),
 unlabeled AS (SELECT * FROM base WHERE mask <> 0)"""
+
+#: tri-training views: target view -> (agreeing views, pseudo-label source)
+_TT_VIEWS = {"priority": (1, 2, 1), "month": (0, 2, 0), "segment": (0, 1, 0)}
+
+
+def _tt_grid(spark: SparkSession, sf_dir: str):
+    """(labeled, pool) cells over (f1, f2, f3, class) — orders ⋈ customer."""
+    rows = _nb_rows(spark, sf_dir, f3="c_mktsegment")
+    return _grid_split(_nb_grid(rows, feats=("f1", "f2", "f3")))
+
+
+def _tt_round(pool: dict, preds: list, trains=None) -> dict:
+    """One tri-training pass: per target view, tally the pool cells the
+    OTHER two views agree on, pseudo-labelled with that class; with
+    ``trains`` (one training dict per view) also add them there."""
+    sums: dict = {view: {} for view in _TT_VIEWS}
+    for cell, (n, ks) in pool.items():
+        p = [predict(cell)[0] for predict in preds]
+        for i, (view, (ja, jb, lbl)) in enumerate(_TT_VIEWS.items()):
+            if p[ja] == p[jb]:
+                _tally(sums[view], p[lbl], cell[-1], n, ks)
+                if trains is not None:
+                    key = (*cell[:-1], p[lbl])
+                    trains[i][key] = trains[i].get(key, 0) + n
+    return sums
 
 
 def _tritrain_oracle() -> str:
@@ -1355,77 +1267,15 @@ def ssl_tritrain_one_round_nb(spark: SparkSession, sf_dir: str) -> DataFrame:
     agree on. (target_view, pred_class, n_promoted,
     n_promoted_correct, promoted_key_sum).
 
-    r14 optimization (guide §1.2/§2.4): every view's prediction is
-    constant per feature value, so the agreement predicates are
-    functions of the (f1, f2, f3) cell — ONE fact-scale contingency
-    aggregate over orders ⋈ customer (<= 2·5·12·5·3 cells at any
-    corpus size) and exact Python-int replay replace the checkpoint,
-    the three full-pool DECIMAL scoring scans, and the two row-level
-    joins. The oracle is unchanged."""
-    orders = load_table(spark, sf_dir, "orders")
-    customer = load_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_mktsegment"
-    )
-    grid = (
-        orders.join(customer, orders.o_custkey == customer.c_custkey)
-        .select(
-            "o_orderkey",
-            "o_orderstatus",
-            F.col("o_orderpriority").alias("f1"),
-            F.month("o_orderdate").cast("bigint").alias("f2"),
-            F.col("c_mktsegment").alias("f3"),
-            F.expr(_ST1_MASK_SPARK).alias("mask"),
-        )
-        .groupBy(
-            (F.col("mask") == 0).alias("lab"), "f1", "f2", "f3", "o_orderstatus"
-        )
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("o_orderkey").alias("ks"))
-        .collect()
-    )
-    prior: dict = {c: 0 for c in _NB1_CLS}
-    liks: dict = {"f1": {}, "f2": {}, "f3": {}}
-    pool: dict = {}
-    for r in grid:
-        key = (r["f1"], r["f2"], r["f3"], r["o_orderstatus"])
-        if r["lab"]:
-            prior[r["o_orderstatus"]] += r["n"]
-            for feat in ("f1", "f2", "f3"):
-                k = (r[feat], r["o_orderstatus"])
-                liks[feat][k] = liks[feat].get(k, 0) + r["n"]
-        else:
-            n, ks = pool.get(key, (0, 0))
-            pool[key] = (n + r["n"], ks + r["ks"])
-    vcard = {"f1": 5, "f2": 12, "f3": 5}
-    memo: dict = {"f1": {}, "f2": {}, "f3": {}}
-
-    def _pred(feat: str, fv) -> str:
-        m = memo[feat]
-        if fv not in m:
-            m[fv] = _py_argmax(_py_nb1_t(prior, liks[feat], vcard[feat], fv))[0]
-        return m[fv]
-
-    sums: dict = {"priority": {}, "month": {}, "segment": {}}
-
-    def _add(view: str, pred: str, c: str, n: int, ks: int) -> None:
-        s = sums[view].setdefault(pred, [0, 0, 0])
-        s[0] += n
-        if pred == c:
-            s[1] += n
-        s[2] += ks
-
-    for (f1, f2, f3, c), (n, ks) in pool.items():
-        p1, p2, p3 = _pred("f1", f1), _pred("f2", f2), _pred("f3", f3)
-        if p2 == p3:
-            _add("priority", p2, c, n, ks)
-        if p1 == p3:
-            _add("month", p1, c, n, ks)
-        if p1 == p2:
-            _add("segment", p1, c, n, ks)
-    out_rows = [
-        (view, pred, *sums[view][pred])
-        for view in ("priority", "month", "segment")
-        for pred in sorted(sums[view])
-    ]
+    Every view's prediction is constant per feature value, so the
+    agreement predicates are functions of the (f1, f2, f3) cell and the
+    round replays from the orders ⋈ customer contingency grid (see the
+    grid-replay header)."""
+    lab, pool = _tt_grid(spark, sf_dir)
+    sums = _tt_round(pool, [_nb_predictor(lab, (i,)) for i in range(3)])
+    out_rows = []
+    for view, s in sums.items():
+        out_rows += _tally_rows(s, view, cols=slice(1, 4))
     return spark.createDataFrame(
         out_rows,
         "target_view string, pred_class string, n_promoted long, "
@@ -1471,48 +1321,50 @@ def ssl_nb_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     unlabeled pool — the calibration readout a promotion threshold
     presumes: (bin, n, n_correct, mean_conf, accuracy). Confidence is
     the same exact integer conf_q = floor(t_max·10^12/t_sum) the
-    kBest tier ranks by, so bin membership has no float boundary."""
-    labeled, unlabeled = _nb1_base(spark, sf_dir)
-    decided = _nb1_decided(labeled, unlabeled, "f1", 5)
-    num = F.col("t_max") * F.lit(_KBEST_CONF_SCALE)
-    conf_q = ((num - F.pmod(num, F.col("t_sum"))) / F.col("t_sum")).cast(
-        "decimal(38,0)"
+    kBest tier ranks by, so bin membership has no float boundary.
+
+    Bins and their exact counts/conf_q sums replay from the contingency
+    grid (``_nb_bins``); mean_conf and accuracy are the Spark double
+    divisions over those DECIMAL(38,0)/BIGINT sums."""
+    S = _KBEST_CONF_SCALE
+    grid = _nb_bins(spark, sf_dir, S, 10)
+    bins = spark.createDataFrame(
+        [(b, n, h, Decimal(sq)) for b, (n, h, sq, _) in grid.items()],
+        "bin long, n long, n_correct long, s_conf decimal(38,0)",
     )
-    binned = decided.select(
-        conf_q.alias("conf_q"),
-        F.when(F.col("pred_class") == F.col("o_orderstatus"), 1)
-        .otherwise(0)
-        .alias("hit"),
-    ).select(
-        # exact integer decile: (c10 - pmod(c10, S)) / S — divisible
-        # numerator, so the decimal division is exact (no floor over a
-        # rounded quotient; same closure as conf_q itself)
-        F.least(
-            F.lit(9).cast("bigint"),
-            (
-                (
-                    F.col("conf_q") * 10
-                    - F.pmod(F.col("conf_q") * 10, F.lit(_KBEST_CONF_SCALE))
-                )
-                / F.lit(_KBEST_CONF_SCALE)
-            ).cast("bigint"),
-        ).alias("bin"),
-        "conf_q",
-        "hit",
-    )
-    return binned.groupBy("bin").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum("hit").cast("bigint").alias("n_correct"),
+    return bins.select(
+        "bin",
+        "n",
+        "n_correct",
         F.round(
-            F.sum("conf_q").cast("double")
-            / F.count(F.lit(1)).cast("double")
-            / F.lit(float(_KBEST_CONF_SCALE)),
+            F.col("s_conf").cast("double")
+            / F.col("n").cast("double")
+            / F.lit(float(S)),
             6,
         ).alias("mean_conf"),
         F.round(
-            F.sum("hit").cast("double") / F.count(F.lit(1)).cast("double"), 6
+            F.col("n_correct").cast("double") / F.col("n").cast("double"), 6
         ).alias("accuracy"),
     )
+
+
+def _nb_bins(spark: SparkSession, sf_dir: str, scale: int, n_bins: int) -> dict:
+    """Per-bin exact sums of the f1-view NB's quantized confidence
+    q = floor(t_max·scale/t_sum) over the unlabeled pool, bin =
+    min(n_bins - 1, floor(q·n_bins/scale)): {bin: [n, n_correct, Σq,
+    Σ(q - hit·scale)²]} — the calibration, isotonic and Brier grids."""
+    lab, pool = _grid_split(_nb_grid(_nb_rows(spark, sf_dir)))
+    predict = _nb_predictor(lab, (0,), scale)
+    bins: dict = {}
+    for cell, (n, _ks) in pool.items():
+        pred, q, _ = predict(cell)
+        hit = int(pred == cell[-1])
+        b = bins.setdefault(min(n_bins - 1, q * n_bins // scale), [0, 0, 0, 0])
+        b[0] += n
+        b[1] += n * hit
+        b[2] += n * q
+        b[3] += n * (q - hit * scale) ** 2
+    return bins
 
 
 # ---------------------------------------------------------------------------
@@ -1593,34 +1445,19 @@ def ssl_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Isotonic (PAVA) recalibration of the exact-count NB scorer via
     the closed minimax form on B=20 confidence vigintiles:
     (bin, n, n_correct, rate_raw, rate_iso); rate_iso is the L2
-    monotone fit of accuracy-vs-confidence."""
-    labeled, unlabeled = _nb1_base(spark, sf_dir)
-    decided = _nb1_decided(labeled, unlabeled, "f1", 5)
-    S = F.lit(_KBEST_CONF_SCALE)
-    num = F.col("t_max") * S
-    conf_q = ((num - F.pmod(num, F.col("t_sum"))) / F.col("t_sum")).cast(
-        "decimal(38,0)"
-    )
-    cb = conf_q * _ISO_BINS
-    conf = decided.select(
-        F.least(
-            F.lit(_ISO_BINS - 1).cast("bigint"),
-            ((cb - F.pmod(cb, S)) / S).cast("bigint"),
-        ).alias("bin"),
-        F.when(F.col("pred_class") == F.col("o_orderstatus"), 1)
-        .otherwise(0)
-        .alias("hit"),
-    )
-    bins = conf.groupBy("bin").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_k"),
-        F.sum("hit").cast("bigint").alias("h_k"),
+    monotone fit of accuracy-vs-confidence. The counted bin grid
+    replays from the contingency grid (``_nb_bins``)."""
+    grid = _nb_bins(spark, sf_dir, _KBEST_CONF_SCALE, _ISO_BINS)
+    bins = spark.createDataFrame(
+        [(b, n, h) for b, (n, h, _, _) in grid.items()],
+        "bin long, n_k long, h_k long",
     )
     # bounded-grid minimax fit: <= B rows in, broadcast-sized windows
     # throughout (operators/calibration.py — the reusable API form)
     from tfm_semisup_spark.operators.calibration import isotonic_fit_binned
 
     iso = isotonic_fit_binned(bins)
-    return bins.join(iso, "bin").select(
+    return bins.join(F.broadcast(iso), "bin").select(
         "bin",
         F.col("n_k").alias("n"),
         F.col("h_k").alias("n_correct"),
@@ -1643,9 +1480,9 @@ def ssl_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
 # forecast is quantized to an exact integer grid f = floor(t_max·10^6
 # / t_sum); every sum (per-bin and global) is an exact integer; each
 # per-bin fraction is quantized to floor(num·10^9/den) with an EXACT
-# integer floor-division (pmod-subtract on Spark, ``//`` HUGEINT in
-# DuckDB) and summed as integers; ONE double division per output
-# column. Bin count is fixed (20), so every magnitude is bounded:
+# integer floor-division (Python ints in the grid replay, ``//``
+# HUGEINT in DuckDB) and summed as integers; ONE double division per
+# output column. Bin count is fixed (20), so every magnitude is bounded:
 # (s_fk − 10^6·s_ok)²·10^9 <= (n·10^6)²·10^9 < 10^34 at sf1 —
 # inside DECIMAL(38,0)/HUGEINT.
 
@@ -1698,82 +1535,57 @@ FROM tot t CROSS JOIN terms x
 """
 
 
-def _fd(num, den):
-    """Exact integer floor-division on DECIMAL(38,0) (operands
-    nonnegative): (num - pmod(num, den)) / den — the divisible
-    numerator makes the decimal division exact (never F.floor over a
-    rounded quotient)."""
-    return ((num - F.pmod(num, den)) / den).cast("decimal(38,0)")
-
-
 @register("ssl_brier_decomposition", _brier_oracle())
 def ssl_brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Murphy decomposition of the quantized NB confidence forecast's
     Brier score over B=20 bins: one row (n, base_rate, brier,
-    reliability, resolution, uncertainty)."""
-    labeled, unlabeled = _nb1_base(spark, sf_dir)
-    decided = _nb1_decided(labeled, unlabeled, "f1", 5)
-    S, Q, B = _BRIER_SCALE, _BRIER_Q, _ISO_BINS
-    f = _fd(F.col("t_max") * S, F.col("t_sum"))
-    conf = decided.select(
-        f.alias("f"),
-        F.when(F.col("pred_class") == F.col("o_orderstatus"), 1)
-        .otherwise(0)
-        .alias("hit"),
-    )
-    per_bin = conf.groupBy(
-        F.least(F.lit(B - 1).cast("bigint"), _fd(F.col("f") * B, F.lit(S)).cast("bigint")).alias("bin")
-    ).agg(
-        F.count(F.lit(1)).cast("decimal(38,0)").alias("n_k"),
-        F.sum("hit").cast("decimal(38,0)").alias("s_ok"),
-        F.sum("f").cast("decimal(38,0)").alias("s_fk"),
-        F.sum((F.col("f") - F.col("hit") * S) * (F.col("f") - F.col("hit") * S))
-        .cast("decimal(38,0)")
-        .alias("sq_k"),
-    )
-    tot = per_bin.agg(
-        F.sum("n_k").cast("decimal(38,0)").alias("n"),
-        F.sum("s_ok").cast("decimal(38,0)").alias("s_o"),
-        F.sum("sq_k").cast("decimal(38,0)").alias("brier_num"),
-    )
-    joined = per_bin.crossJoin(F.broadcast(tot))
-    rel_num = (F.col("s_fk") - S * F.col("s_ok")) * (
-        F.col("s_fk") - S * F.col("s_ok")
-    ) * Q
-    res_num = (F.col("n") * F.col("s_ok") - F.col("n_k") * F.col("s_o")) * (
-        F.col("n") * F.col("s_ok") - F.col("n_k") * F.col("s_o")
-    ) * Q
-    terms = joined.agg(
-        F.sum(_fd(rel_num, F.col("n_k") * S * S)).alias("rel_q"),
-        F.sum(_fd(res_num, F.col("n_k") * F.col("n") * F.col("n"))).alias(
-            "res_q"
-        ),
-    )
-    return (
-        tot.crossJoin(F.broadcast(terms))
-        .select(
-            F.col("n").cast("bigint").alias("n"),
-            F.round(F.col("s_o").cast("double") / F.col("n").cast("double"), 6)
-            .alias("base_rate"),
-            F.round(
-                F.col("brier_num").cast("double")
-                / (F.col("n") * S * S).cast("double"),
-                6,
-            ).alias("brier"),
-            F.round(
-                F.col("rel_q").cast("double") / (F.col("n") * Q).cast("double"),
-                6,
-            ).alias("reliability"),
-            F.round(
-                F.col("res_q").cast("double") / (F.col("n") * Q).cast("double"),
-                6,
-            ).alias("resolution"),
-            F.round(
-                (F.col("s_o") * (F.col("n") - F.col("s_o"))).cast("double")
-                / (F.col("n") * F.col("n")).cast("double"),
-                6,
-            ).alias("uncertainty"),
+    reliability, resolution, uncertainty). The per-bin sums and the
+    quantized rel/res terms replay from the contingency grid
+    (``_nb_bins``); the six outputs are the Spark double divisions over
+    those exact DECIMAL(38,0) values (all NULL on an empty pool, like
+    the oracle's SUMs)."""
+    S, Q = _BRIER_SCALE, _BRIER_Q
+    bins = _nb_bins(spark, sf_dir, S, _ISO_BINS).values()
+    vals = [None] * 5
+    if bins:
+        n = sum(b[0] for b in bins)
+        s_o = sum(b[1] for b in bins)
+        rel_q = sum(
+            (s_fk - S * s_ok) ** 2 * Q // (n_k * S * S)
+            for n_k, s_ok, s_fk, _ in bins
         )
+        res_q = sum(
+            (n * s_ok - n_k * s_o) ** 2 * Q // (n_k * n * n)
+            for n_k, s_ok, _, _ in bins
+        )
+        brier_num = sum(b[3] for b in bins)
+        vals = [Decimal(v) for v in (n, s_o, brier_num, rel_q, res_q)]
+    dec = "decimal(38,0)"
+    return spark.createDataFrame(
+        [tuple(vals)],
+        f"n {dec}, s_o {dec}, brier_num {dec}, rel_q {dec}, res_q {dec}",
+    ).select(
+        F.col("n").cast("bigint").alias("n"),
+        F.round(F.col("s_o").cast("double") / F.col("n").cast("double"), 6)
+        .alias("base_rate"),
+        F.round(
+            F.col("brier_num").cast("double")
+            / (F.col("n") * S * S).cast("double"),
+            6,
+        ).alias("brier"),
+        F.round(
+            F.col("rel_q").cast("double") / (F.col("n") * Q).cast("double"),
+            6,
+        ).alias("reliability"),
+        F.round(
+            F.col("res_q").cast("double") / (F.col("n") * Q).cast("double"),
+            6,
+        ).alias("resolution"),
+        F.round(
+            (F.col("s_o") * (F.col("n") - F.col("s_o"))).cast("double")
+            / (F.col("n") * F.col("n")).cast("double"),
+            6,
+        ).alias("uncertainty"),
     )
 
 
@@ -1894,61 +1706,58 @@ _CONF_ALPHA_NUM, _CONF_ALPHA_DEN = 1, 10  # miscoverage alpha = 0.1
 def ssl_conformal_nb(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Split-conformal prediction sets for the exact-count NB scorer
     (calibration = masks 1-2, eval = masks 3-4): one row (n_cal,
-    q_hat, n_eval, n_covered, coverage, avg_set_size)."""
-    labeled, pool = _nb1_base(spark, sf_dir)
-    cal = pool.where(F.col("mask").isin(1, 2))
-    ev = pool.where(F.col("mask").isin(3, 4))
-    S6 = _BRIER_SCALE
+    q_hat, n_eval, n_covered, coverage, avg_set_size).
 
-    def _alphas(df: DataFrame) -> DataFrame:
-        v = _nb1_voted(labeled, df, "f1", 5)
-        t_sum = F.col("t_F") + F.col("t_O") + F.col("t_P")
-        out = v.withColumn("t_sum", t_sum)
-        for c in _NB1_CLS:
-            out = out.withColumn(
-                f"al_{c}",
-                (S6 - _fd(F.col(f"t_{c}") * S6, F.col("t_sum"))).cast(
-                    "bigint"
-                ),
-            )
-        t_true = (
-            F.when(F.col("o_orderstatus") == "F", F.col("al_F"))
-            .when(F.col("o_orderstatus") == "O", F.col("al_O"))
-            .otherwise(F.col("al_P"))
-        )
-        return out.withColumn("al_true", t_true)
-
-    acal = _alphas(cal)
-    # q_hat from the counted alpha-value grid (bounded, <= 15 cells;
-    # operators/calibration.py — the reusable API form)
+    The nonconformity scores are constant per f1 value, so both splits
+    replay from the contingency grid: q_hat is ``conformal_threshold``
+    over the counted (alpha, cnt) calibration grid, and coverage and
+    set size are Spark aggregates over the count-weighted eval cells."""
     from tfm_semisup_spark.operators.calibration import conformal_threshold
 
+    S6 = _BRIER_SCALE
+    grid = _nb_grid(_nb_rows(spark, sf_dir))
+    lab, cal = _grid_split(grid, pool=lambda m: m in (1, 2))
+    _, ev = _grid_split(grid, pool=lambda m: m in (3, 4))
+    predict = _nb_predictor(lab, (0,))
+
+    def alphas(cell) -> tuple:
+        t = predict(cell)[2]
+        al = [S6 - t_c * S6 // sum(t) for t_c in t]
+        return (*al, al[{"F": 0, "O": 1}.get(cell[-1], 2)])
+
+    counted: dict = {}
+    for cell, (n, _ks) in cal.items():
+        a = alphas(cell)[3]
+        counted[a] = counted.get(a, 0) + n
     # infinite_score = S6: alpha = S6 - p·S6/total is bounded by the
     # Brier scale, so S6 is this scale's +infinity — with a tiny
     # calibration pool every label enters the set (coverage 1) instead
     # of NULL comparisons silently reading as uncovered (ADVICE r9);
     # the oracle's qh CTE carries the same COALESCE
     qhat = conformal_threshold(
-        acal.select(F.col("al_true").alias("alpha")),
+        spark.createDataFrame(list(counted.items()), "alpha long, cnt long"),
         miscoverage=(_CONF_ALPHA_NUM, _CONF_ALPHA_DEN),
-        infinite_score=_BRIER_SCALE,
+        infinite_score=S6,
     )
-    aev = _alphas(ev).crossJoin(F.broadcast(qhat))
+    aev = spark.createDataFrame(
+        [(*alphas(cell), n) for cell, (n, _ks) in ev.items()],
+        "al_F long, al_O long, al_P long, al_true long, n long",
+    ).crossJoin(F.broadcast(qhat))
     in_set = [
         F.when(F.col(f"al_{c}") <= F.col("q_hat"), 1).otherwise(0)
         for c in _NB1_CLS
     ]
     set_size = in_set[0] + in_set[1] + in_set[2]
-    covered = F.when(F.col("al_true") <= F.col("q_hat"), 1).otherwise(0)
+    covered = F.when(F.col("al_true") <= F.col("q_hat"), F.col("n")).otherwise(0)
     return aev.groupBy("n_cal", "q_hat").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_eval"),
+        F.sum("n").cast("bigint").alias("n_eval"),
         F.sum(covered).cast("bigint").alias("n_covered"),
         F.round(
-            F.sum(covered).cast("double") / F.count(F.lit(1)).cast("double"),
-            6,
+            F.sum(covered).cast("double") / F.sum("n").cast("double"), 6
         ).alias("coverage"),
         F.round(
-            F.sum(set_size).cast("double") / F.count(F.lit(1)).cast("double"),
+            F.sum(set_size * F.col("n")).cast("double")
+            / F.sum("n").cast("double"),
             6,
         ).alias("avg_set_size"),
     )
@@ -2081,22 +1890,14 @@ def _ct2_round_sql(train: str, pool: str, feat: str, V: int, tag: str) -> str:
     (f1, f2, label) and ranking ``pool`` (o_orderkey, o_orderstatus,
     f1, f2) by quantized confidence: lik_{tag}, prior_{tag},
     scored_{tag}, ranked_{tag} (rn over conf_q DESC / okey, np)."""
-    cls = ["F", "O", "P"]
-    lik = ", ".join(
-        f"SUM(CASE WHEN label = '{c}' THEN 1 ELSE 0 END)::HUGEINT AS nf_{c}"
-        for c in cls
-    )
-    pri = ", ".join(
-        f"SUM(CASE WHEN label = '{c}' THEN 1 ELSE 0 END)::HUGEINT AS n_{c}"
-        for c in cls
-    )
     ab = ", ".join(
         f"p.n_{c} * (COALESCE(l.nf_{c}, 0) + 1) AS a_{c}, "
         f"(p.n_{c} + {V}) AS b_{c}"
-        for c in cls
+        for c in _NB1_CLS
     )
+    lik = _class_counts("label", "nf_")
     return f"""lik_{tag} AS (SELECT {feat}, {lik} FROM {train} GROUP BY {feat}),
-prior_{tag} AS (SELECT {pri} FROM {train}),
+prior_{tag} AS (SELECT {_class_counts("label", "n_")} FROM {train}),
 scored_{tag} AS (
   SELECT u.o_orderkey, u.o_orderstatus, u.f1, u.f2, {ab}
   FROM {pool} u
@@ -2180,114 +1981,35 @@ UNION ALL
 """
 
 
-def _ct2_conf(train: DataFrame, pool: DataFrame, feat: str, V: int) -> DataFrame:
-    """Spark mirror of one ``_ct2_round_sql`` fit+score: single-feature
-    exact-count NB fitted on ``train`` (f1, f2, label), pool rows with
-    (pred_class, conf_q) — conf_q = floor(t_max * 10^12 / t_sum) via
-    the pmod-subtract exact floor-division pattern."""
-    lik = train.groupBy(feat).agg(
-        *[
-            F.sum(F.when(F.col("label") == c, 1).otherwise(0))
-            .cast("decimal(38,0)")
-            .alias(f"nf_{c}")
-            for c in _NB1_CLS
-        ]
-    )
-    prior = train.agg(
-        *[
-            F.sum(F.when(F.col("label") == c, 1).otherwise(0))
-            .cast("decimal(38,0)")
-            .alias(f"n_{c}")
-            for c in _NB1_CLS
-        ]
-    )
-    s = pool.join(F.broadcast(lik), feat, "left").crossJoin(F.broadcast(prior))
-    for c in _NB1_CLS:
-        s = s.withColumn(
-            f"a_{c}",
-            F.col(f"n_{c}") * (F.coalesce(F.col(f"nf_{c}"), F.lit(0)) + 1),
-        ).withColumn(f"b_{c}", F.col(f"n_{c}") + V)
-    v = s.select(
-        "o_orderkey",
-        "o_orderstatus",
-        "f1",
-        "f2",
-        (F.col("a_F") * F.col("b_O") * F.col("b_P")).alias("t_F"),
-        (F.col("a_O") * F.col("b_F") * F.col("b_P")).alias("t_O"),
-        (F.col("a_P") * F.col("b_F") * F.col("b_O")).alias("t_P"),
-    )
-    is_f = (F.col("t_F") >= F.col("t_O")) & (F.col("t_F") >= F.col("t_P"))
-    is_o = F.col("t_O") >= F.col("t_P")
-    t_max = (
-        F.when(is_f, F.col("t_F")).when(is_o, F.col("t_O")).otherwise(F.col("t_P"))
-    )
-    t_sum = F.col("t_F") + F.col("t_O") + F.col("t_P")
-    num = t_max * F.lit(_CT2_SCALE)
-    return v.select(
-        "o_orderkey",
-        "o_orderstatus",
-        "f1",
-        "f2",
-        F.when(is_f, "F").when(is_o, "O").otherwise("P").alias("pred_class"),
-        ((num - F.pmod(num, t_sum)) / t_sum)
-        .cast("decimal(38,0)")
-        .alias("conf_q"),
-    )
+def _thr_cells(pool: dict, preds: list, thr: int) -> list:
+    """[(cell, per-view conf_q > thr flags, n, keysum)] over ``pool``."""
+    return [
+        (cell, tuple(predict(cell)[1] > thr for predict in preds), n, ks)
+        for cell, (n, ks) in pool.items()
+    ]
 
 
-def _ct2_kbest_flag(conf: DataFrame, k: int):
-    """Promotion predicate column equal to rn <= k under the
-    (conf_q DESC, o_orderkey ASC) total order — found with
-    orderBy+limit (TakeOrderedAndProject: per-partition heaps, no
-    global sort shuffle) + one bounded scalar collect, the
-    ``ssl_selftrain_one_round_kbest`` boundary pattern."""
-    bound = (
-        conf.orderBy(F.col("conf_q").desc(), F.col("o_orderkey"))
-        .limit(k)
-        .agg(
-            F.min(
-                F.struct(
-                    F.col("conf_q").alias("c"),
-                    (-F.col("o_orderkey")).alias("neg_k"),
-                )
-            ).alias("b")
-        )
-        .collect()[0]["b"]
-    )
-    c_star, k_star = bound["c"], -bound["neg_k"]
-    return (F.col("conf_q") > F.lit(c_star)) | (
-        (F.col("conf_q") == F.lit(c_star)) & (F.col("o_orderkey") <= F.lit(k_star))
-    )
-
-
-def _ct2_summary(conf: DataFrame, flag, rnd: int, view: str) -> DataFrame:
-    correct = F.col("pred_class") == F.col("o_orderstatus")
-    return (
-        conf.groupBy("pred_class")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_scored"),
-            F.sum(F.when(flag, 1).otherwise(0)).cast("bigint").alias("n_promoted"),
-            F.sum(F.when(flag & correct, 1).otherwise(0))
-            .cast("bigint")
-            .alias("n_promoted_correct"),
-            F.sum(F.when(flag, F.col("o_orderkey")).otherwise(0))
-            .cast("bigint")
-            .alias("promoted_key_sum"),
-            F.coalesce(F.min(F.when(flag, F.col("conf_q"))), F.lit(-1))
-            .cast("bigint")
-            .alias("min_conf_q"),
-        )
-        .select(
-            F.lit(rnd).cast("bigint").alias("rnd"),
-            F.lit(view).alias("view_name"),
-            "pred_class",
-            "n_scored",
-            "n_promoted",
-            "n_promoted_correct",
-            "promoted_key_sum",
-            "min_conf_q",
-        )
-    )
+def _ct2_exchange(cells, preds: list, trains=None):
+    """One two-view exchange over the pool cells [(cell, (flag_v1,
+    flag_v2), n, keysum)]: each view tallies its scores and
+    promotions; with ``trains`` (one training dict per view) each
+    view's promotions also join the OTHER view's training cells under
+    their predicted class (the cross-teach). Unflagged cells stay in
+    the pool. -> ((sums_v1, sums_v2), next_pool)."""
+    sums: tuple = ({}, {})
+    next_pool: dict = {}
+    for cell, fl, n, ks in cells:
+        out = [predict(cell) for predict in preds]
+        for v in (0, 1):
+            pred, cq, _ = out[v]
+            _tally(sums[v], pred, cell[-1], n, ks, fl[v], cq)
+            if trains is not None and fl[1 - v]:
+                key = (*cell[:-1], out[1 - v][0])
+                trains[v][key] = trains[v].get(key, 0) + n
+        if not any(fl):
+            pn, pks = next_pool.get(cell, (0, 0))
+            next_pool[cell] = (pn + n, pks + ks)
+    return sums, next_pool
 
 
 @register("ssl_cotrain_two_round_nb", _cotrain2_oracle())
@@ -2300,155 +2022,29 @@ def ssl_cotrain_two_round_nb(spark: SparkSession, sf_dir: str) -> DataFrame:
     (cross-teach :172-173,215-216) the way
     ``ssl_selftrain_two_round_nb`` mirrors ``SelfTraining.scala``.
 
-    r14 optimization (grid replay + bounded boundary probes): the
-    kBest trajectory is a function of the contingency grid EXCEPT for
-    the rank-k o_orderkey boundary inside each view's tie-confidence
-    cohort (confidence has <= |f| distinct values, so the k-th ranked
-    row sits inside one confidence level and promotion there is an
-    okey prefix). Per round: ONE unioned TakeOrderedAndProject probe
-    finds both views' boundary okeys (bounded: limit k, one scalar
-    out), then ONE flag-split grid aggregate (cells x both promotion
-    flags) feeds the exact-integer driver replay of summaries, the
-    cross-teach refits and the next pool. Replaces two full-pool
-    DECIMAL scoring scans + checkpoints + the o_orderkey pool
-    semi-join per round; the base checkpoint stays (5 consumers).
-    The oracle is unchanged."""
+    The kBest trajectory is a function of the contingency grid EXCEPT
+    for the rank-k o_orderkey boundary inside each view's
+    tie-confidence cohort: per round ``_kbest_round`` runs ONE unioned
+    boundary probe and ONE flag-split grid aggregate over the
+    checkpointed pool, and the summaries, cross-teach refits and next
+    pool replay on the driver (see the grid-replay header)."""
     labeled, unlabeled = _nb1_base(spark, sf_dir)
-    # one action: both contingency grids (labeled counts + pool
-    # counts/keysums) union-collected
-    lab_g = (
-        labeled.groupBy("f1", "f2", "o_orderstatus")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(
-            F.lit(True).alias("lab"),
-            "f1",
-            "f2",
-            "o_orderstatus",
-            "n",
-            F.lit(0).cast("bigint").alias("ks"),
-        )
-    )
-    pool_g = (
-        unlabeled.groupBy("f1", "f2", "o_orderstatus")
-        .agg(
-            F.count(F.lit(1)).alias("n"), F.sum("o_orderkey").alias("ks")
-        )
-        .select(F.lit(False).alias("lab"), "f1", "f2", "o_orderstatus", "n", "ks")
-    )
-    lab, pool = _grid_split(lab_g.unionByName(pool_g).collect())
-    trains = {"v1": dict(lab), "v2": dict(lab)}
-    pool_pred = F.lit(True)
+    lab, pool = _grid_split(_nb_grid(labeled.unionByName(unlabeled)))
+    trains = [dict(lab), dict(lab)]
     out_rows = []
     for rnd in (1, 2):
-        conf = {
-            "v1": _py_conf_map("v1", trains["v1"]),
-            "v2": _py_conf_map("v2", trains["v2"]),
-        }
-        n_pool = sum(n for n, _ in pool.values())
-        k = max(1, n_pool // _CT2_K_DIV)
-        # per view: confidence levels over the pool's feature values,
-        # ranked desc — the k-th row's level is the tie cohort
-        bounds = {}
-        for tag, idx in (("v1", 0), ("v2", 1)):
-            lvl: dict = {}
-            for (f1, f2, c), (n, _ks) in pool.items():
-                cq = conf[tag]((f1, f2)[idx])[1]
-                lvl[cq] = lvl.get(cq, 0) + n
-            cum = 0
-            for cq in sorted(lvl, reverse=True):
-                cum += lvl[cq]
-                if cum >= k:
-                    c_star = cq
-                    above = cum - lvl[cq]
-                    break
-            fvals = sorted(
-                {
-                    (f1, f2)[idx]
-                    for (f1, f2, c) in pool
-                }
-            )
-            bounds[tag] = {
-                "c_star": c_star,
-                "k_rem": k - above,
-                "above": [
-                    fv for fv in fvals if conf[tag](fv)[1] > c_star
-                ],
-                "ties": [
-                    fv for fv in fvals if conf[tag](fv)[1] == c_star
-                ],
-            }
-        # ONE probe action: the k_rem-th smallest o_orderkey inside
-        # each view's tie cohort (TakeOrderedAndProject legs, unioned)
-        legs = None
-        for tag, col in (("v1", "f1"), ("v2", "f2")):
-            b = bounds[tag]
-            leg = (
-                unlabeled.where(pool_pred & F.col(col).isin(b["ties"]))
-                .select("o_orderkey")
-                .orderBy("o_orderkey")
-                .limit(b["k_rem"])
-                .agg(F.max("o_orderkey").alias("m"))
-                .select(F.lit(tag).alias("tag"), "m")
-            )
-            legs = leg if legs is None else legs.unionByName(leg)
-        k_star = {r["tag"]: r["m"] for r in legs.collect()}
-        flags = {}
-        for tag, col in (("v1", "f1"), ("v2", "f2")):
-            b = bounds[tag]
-            tie_part = F.col(col).isin(b["ties"]) & (
-                F.col("o_orderkey") <= F.lit(k_star[tag])
-            )
-            flags[tag] = (
-                (F.col(col).isin(b["above"]) | tie_part)
-                if b["above"]
-                else tie_part
-            )
-        # ONE flag-split grid action: cells x (flag_v1, flag_v2)
-        fg = (
-            unlabeled.where(pool_pred)
-            .groupBy(
-                "f1",
-                "f2",
-                "o_orderstatus",
-                flags["v1"].alias("fl1"),
-                flags["v2"].alias("fl2"),
-            )
-            .agg(F.count(F.lit(1)).alias("n"), F.sum("o_orderkey").alias("ks"))
-            .collect()
+        preds = [_nb_predictor(tr, (i,)) for i, tr in enumerate(trains)]
+        k = max(1, sum(n for n, _ in pool.values()) // _CT2_K_DIV)
+        views = {"v1": ("f1", 0, preds[0]), "v2": ("f2", 1, preds[1])}
+        flags, split = _kbest_round(unlabeled, pool, views, k)
+        sums, pool = _ct2_exchange(
+            [(cell, (fl["v1"], fl["v2"]), n, ks) for cell, fl, n, ks in split],
+            preds,
+            trains,
         )
-        summary = {"v1": {}, "v2": {}}
-        next_pool: dict = {}
-        for r in fg:
-            f1, f2, c, n, ks = r["f1"], r["f2"], r["o_orderstatus"], r["n"], r["ks"]
-            fl = {"v1": r["fl1"], "v2": r["fl2"]}
-            cell = {"v1": conf["v1"](f1), "v2": conf["v2"](f2)}
-            for tag, other in (("v1", "v2"), ("v2", "v1")):
-                pred, cq = cell[tag]
-                s = summary[tag].setdefault(pred, [0, 0, 0, 0, None])
-                s[0] += n
-                if fl[tag]:
-                    s[1] += n
-                    if pred == c:
-                        s[2] += n
-                    s[3] += ks
-                    s[4] = cq if s[4] is None else min(s[4], cq)
-                if fl[other]:
-                    opred = cell[other][0]
-                    trains[tag][(f1, f2, opred)] = (
-                        trains[tag].get((f1, f2, opred), 0) + n
-                    )
-            if not fl["v1"] and not fl["v2"]:
-                pn, pks = next_pool.get((f1, f2, c), (0, 0))
-                next_pool[(f1, f2, c)] = (pn + n, pks + ks)
-        for tag, view in (("v1", "priority"), ("v2", "month")):
-            for pred in sorted(summary[tag]):
-                s = summary[tag][pred]
-                out_rows.append(
-                    (rnd, view, pred, s[0], s[1], s[2], s[3],
-                     s[4] if s[4] is not None else -1)
-                )
-        pool = next_pool
-        pool_pred = pool_pred & ~flags["v1"] & ~flags["v2"]
+        out_rows += _tally_rows(sums[0], rnd, "priority", cols=slice(0, 5))
+        out_rows += _tally_rows(sums[1], rnd, "month", cols=slice(0, 5))
+        unlabeled = unlabeled.where(~flags["v1"] & ~flags["v2"])
     return spark.createDataFrame(out_rows, _CT2_SUMMARY_SCHEMA)
 
 
@@ -2521,56 +2117,18 @@ def ssl_cotrain_two_round_threshold(
     (rnd, view_name, pred_class, n_scored, n_promoted,
     n_promoted_correct, promoted_key_sum, min_conf_q).
 
-    r14 optimization: predictions and quantized confidences are
-    constant per feature value (view 1 a function of f1, view 2 of
-    f2), and the fixed-cut flag needs no per-row boundary — both
-    rounds replay exactly from the contingency grid (one fact
-    aggregate, zero checkpoints; see the grid-replay header comment).
-    The oracle is unchanged."""
-    rows = _nb_grid_rows(spark, sf_dir)
-    lab, pool = _grid_split(rows)
-    trains = {"v1": dict(lab), "v2": dict(lab)}
+    Predictions and quantized confidences are constant per feature
+    value (view 1 a function of f1, view 2 of f2) and the fixed-cut
+    flag needs no per-row boundary, so both rounds replay from the
+    contingency grid (see the grid-replay header)."""
+    lab, pool = _grid_split(_nb_grid(_nb_rows(spark, sf_dir)))
+    trains = [dict(lab), dict(lab)]
     out_rows = []
     for rnd in (1, 2):
-        conf = {
-            "v1": _py_conf_map("v1", trains["v1"]),
-            "v2": _py_conf_map("v2", trains["v2"]),
-        }
-        summary = {"v1": {}, "v2": {}}
-        next_pool: dict = {}
-        for (f1, f2, c), (n, ks) in pool.items():
-            cell = {"v1": conf["v1"](f1), "v2": conf["v2"](f2)}
-            flags = {
-                tag: cell[tag][1] > _CT2T_THR for tag in ("v1", "v2")
-            }
-            for tag, other in (("v1", "v2"), ("v2", "v1")):
-                pred, cq = cell[tag]
-                s = summary[tag].setdefault(pred, [0, 0, 0, 0, None])
-                s[0] += n
-                if flags[tag]:
-                    s[1] += n
-                    if pred == c:
-                        s[2] += n
-                    s[3] += ks
-                    s[4] = cq if s[4] is None else min(s[4], cq)
-                if flags[other]:
-                    # cross-teach: the OTHER view's promotions join
-                    # this view's round-2 training pool, labeled with
-                    # the other view's prediction
-                    opred = cell[other][0]
-                    trains[tag][(f1, f2, opred)] = (
-                        trains[tag].get((f1, f2, opred), 0) + n
-                    )
-            if not flags["v1"] and not flags["v2"]:
-                next_pool[(f1, f2, c)] = (n, ks)
-        for tag, view in (("v1", "priority"), ("v2", "month")):
-            for pred in sorted(summary[tag]):
-                s = summary[tag][pred]
-                out_rows.append(
-                    (rnd, view, pred, s[0], s[1], s[2], s[3],
-                     s[4] if s[4] is not None else -1)
-                )
-        pool = next_pool
+        preds = [_nb_predictor(tr, (i,)) for i, tr in enumerate(trains)]
+        sums, pool = _ct2_exchange(_thr_cells(pool, preds, _CT2T_THR), preds, trains)
+        out_rows += _tally_rows(sums[0], rnd, "priority", cols=slice(0, 5))
+        out_rows += _tally_rows(sums[1], rnd, "month", cols=slice(0, 5))
     return spark.createDataFrame(out_rows, _CT2_SUMMARY_SCHEMA)
 
 
@@ -2600,42 +2158,18 @@ def _nb2_scored_sql() -> str:
     (model A: a_c/b_c cross-multiply terms) and its f1-only ablation
     (model B: sa_c/sb_c) over the shared unlabeled pool — consumed by
     the paired-decided builder below AND the PR-curve entry."""
-    cls = ["F", "O", "P"]
-    n1 = ", ".join(
-        f"SUM(CASE WHEN o_orderstatus = '{c}' THEN 1 ELSE 0 END)::HUGEINT"
-        f" AS n1_{c}"
-        for c in cls
-    )
-    n2 = ", ".join(
-        f"SUM(CASE WHEN o_orderstatus = '{c}' THEN 1 ELSE 0 END)::HUGEINT"
-        f" AS n2_{c}"
-        for c in cls
-    )
-    pri = ", ".join(
-        f"SUM(CASE WHEN o_orderstatus = '{c}' THEN 1 ELSE 0 END)::HUGEINT"
-        f" AS n_{c}"
-        for c in cls
-    )
     ab = " , ".join(
         f"n_{c} * (COALESCE(n1_{c}, 0) + 1) * (COALESCE(n2_{c}, 0) + 1)"
         f" AS a_{c}, "
         f"(n_{c} + {_ST1_V1}) * (n_{c} + {_ST1_V2}) AS b_{c}, "
         f"n_{c} * (COALESCE(n1_{c}, 0) + 1) AS sa_{c}, "
         f"(n_{c} + {_ST1_V1}) AS sb_{c}"
-        for c in cls
+        for c in _NB1_CLS
     )
-    return f"""base AS (
-  SELECT o_orderkey, o_orderstatus,
-         o_orderpriority AS f1,
-         EXTRACT(month FROM o_orderdate)::BIGINT AS f2,
-         {_ST1_MASK_SQL} AS mask
-  FROM orders
-),
-labeled AS (SELECT * FROM base WHERE mask = 0),
-unlabeled AS (SELECT * FROM base WHERE mask <> 0),
-lik1 AS (SELECT f1, {n1} FROM labeled GROUP BY f1),
-lik2 AS (SELECT f2, {n2} FROM labeled GROUP BY f2),
-prior AS (SELECT {pri} FROM labeled),
+    return f"""{_NB1_BASE_SQL},
+lik1 AS (SELECT f1, {_class_counts("o_orderstatus", "n1_")} FROM labeled GROUP BY f1),
+lik2 AS (SELECT f2, {_class_counts("o_orderstatus", "n2_")} FROM labeled GROUP BY f2),
+{_NB1_PRIOR_SQL},
 scored AS (
   SELECT u.o_orderkey, u.o_orderstatus, {ab}
   FROM unlabeled u
@@ -2668,23 +2202,17 @@ decided AS (
 
 
 def _py_paired_counts(spark: SparkSession, sf_dir: str) -> dict:
-    """Grid replay of ``_paired_decided_sql`` (r14, guide §1.2): both
-    predictions — model A's two-feature NB argmax and model B's
-    f1-only ablation — are constant per (f1, f2) cell, so the paired
-    confusion counts are exact sums over the ``_nb_grid_rows``
-    contingency grid. Returns {(pred_a, pred_b, status): n}."""
-    lab, pool = _grid_split(_nb_grid_rows(spark, sf_dir))
-    prior, lik1, lik2 = _py_fit_counts(lab)
-    memo: dict = {}
+    """Grid replay of ``_paired_decided_sql``: both predictions — model
+    A's two-feature NB argmax and model B's f1-only ablation — are
+    constant per (f1, f2) cell, so the paired confusion counts are
+    exact sums over the contingency grid. Returns {(pred_a, pred_b,
+    status): n}."""
+    lab, pool = _grid_split(_nb_grid(_nb_rows(spark, sf_dir)))
+    pred_a, pred_b = _nb_predictor(lab, (0, 1)), _nb_predictor(lab, (0,))
     out: dict = {}
-    for (f1, f2, c), (n, _ks) in pool.items():
-        if (f1, f2) not in memo:
-            memo[(f1, f2)] = (
-                _py_argmax(_py_nb2_t(prior, lik1, lik2, f1, f2))[0],
-                _py_argmax(_py_nb1_t(prior, lik1, _ST1_V1, f1))[0],
-            )
-        pa, pb = memo[(f1, f2)]
-        out[(pa, pb, c)] = out.get((pa, pb, c), 0) + n
+    for cell, (n, _ks) in pool.items():
+        key = (pred_a(cell)[0], pred_b(cell)[0], cell[-1])
+        out[key] = out.get(key, 0) + n
     return out
 
 
@@ -2726,27 +2254,24 @@ def ssl_mcnemar_feature_ablation(
     (n_pool, n_correct_a, n_correct_b, n_agree, disc_b, disc_c,
     mcnemar_chi2).
 
-    r14 optimization (guide §1.2): the confusion counts replay from
-    the contingency grid (``_py_paired_counts``) — one fact aggregate
-    instead of the full-pool DECIMAL scoring scan; the final chi2
-    expression is unchanged Spark SQL over the exact integer counts,
-    so the oracle and double semantics are untouched."""
+    The confusion counts replay from the contingency grid
+    (``_py_paired_counts``); the chi2 expression is Spark SQL over the
+    exact integer counts. Over an empty pool the sums are NULL, as the
+    oracle's SUMs are."""
     pc = _py_paired_counts(spark, sf_dir)
-    n_pool = n_a = n_b = n_agree = disc_b = disc_c = 0
-    for (pa, pb, c), n in pc.items():
-        n_pool += n
-        if pa == c:
-            n_a += n
-        if pb == c:
-            n_b += n
-        if pa == pb:
-            n_agree += n
-        if pa == c and pb != c:
-            disc_b += n
-        if pa != c and pb == c:
-            disc_c += n
+    tests = (
+        lambda a, b, c: a == c,  # n_correct_a
+        lambda a, b, c: b == c,  # n_correct_b
+        lambda a, b, c: a == b,  # n_agree
+        lambda a, b, c: a == c != b,  # disc_b: A right, B wrong
+        lambda a, b, c: b == c != a,  # disc_c: A wrong, B right
+    )
     counts = spark.createDataFrame(
-        [(n_pool, n_a, n_b, n_agree, disc_b, disc_c)],
+        [(
+            sum(pc.values()),
+            *(sum(n for key, n in pc.items() if t(*key)) if pc else None
+              for t in tests),
+        )],
         "n_pool long, n_correct_a long, n_correct_b long, n_agree long, "
         "disc_b long, disc_c long",
     )
@@ -2799,16 +2324,8 @@ def _tt2_train_sql(feat: str, tag: str, pred: str) -> str:
 
 
 def _tt2_decided_sql(feat: str, V: int, tag: str) -> str:
-    cells = ", ".join(
-        f"SUM(CASE WHEN o_orderstatus = '{c}' THEN 1 ELSE 0 END)::HUGEINT"
-        f" AS nf_{c}_{tag}2"
-        for c in _NB1_CLS
-    )
-    pri = ", ".join(
-        f"SUM(CASE WHEN o_orderstatus = '{c}' THEN 1 ELSE 0 END)::HUGEINT"
-        f" AS n_{c}"
-        for c in _NB1_CLS
-    )
+    cells = _class_counts("o_orderstatus", "nf_", f"_{tag}2")
+    pri = _class_counts("o_orderstatus", "n_")
     ab = ", ".join(
         f"p.n_{c} * (COALESCE(nf_{c}_{tag}2, 0) + 1) AS a_{c}, "
         f"(p.n_{c} + {V}) AS b_{c}"
@@ -2896,101 +2413,19 @@ def ssl_tritrain_two_round_nb(spark: SparkSession, sf_dir: str) -> DataFrame:
     agreement sets: (rnd, target_view, pred_class, n_promoted,
     n_promoted_correct, promoted_key_sum).
 
-    r14 optimization: every per-view prediction is constant per
-    feature value and the agreement sets are therefore constant per
-    (f1, f2, f3) cell, so both rounds replay exactly from the
-    (labeled?, f1, f2, f3, class) contingency grid — ONE fact
-    aggregate (orders ⋈ customer, map-side combinable, <= 2·5·12·5·3
-    rows at any corpus size) instead of six scoring scans re-aligned
-    by four full-pool o_orderkey joins and three checkpoints (see the
-    grid-replay header comment). The oracle is unchanged."""
-    orders = load_table(spark, sf_dir, "orders")
-    customer = load_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_mktsegment"
-    )
-    rows = (
-        orders.join(customer, orders.o_custkey == customer.c_custkey)
-        .select(
-            "o_orderkey",
-            "o_orderstatus",
-            F.col("o_orderpriority").alias("f1"),
-            F.month("o_orderdate").cast("bigint").alias("f2"),
-            F.col("c_mktsegment").alias("f3"),
-            F.expr(_ST1_MASK_SPARK).alias("mask"),
-        )
-        .groupBy(
-            (F.col("mask") == 0).alias("lab"), "f1", "f2", "f3", "o_orderstatus"
-        )
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("o_orderkey").alias("ks"))
-        .collect()
-    )
-    lab: dict = {}
-    pool: dict = {}
-    for r in rows:
-        key = (r["f1"], r["f2"], r["f3"], r["o_orderstatus"])
-        if r["lab"]:
-            lab[key] = lab.get(key, 0) + r["n"]
-        else:
-            n, ks = pool.get(key, (0, 0))
-            pool[key] = (n + r["n"], ks + r["ks"])
-
-    views = [("v1", 0, 5), ("v2", 1, 12), ("v3", 2, 5)]
-
-    def fit_pred(pairs: dict, V: int):
-        """Memoized fv -> pred for a single-feature NB from
-        {(fv, label): n} counts — ``_nb1_decided``'s algebra."""
-        prior = {c: 0 for c in _NB1_CLS}
-        for (fv, c), n in pairs.items():
-            prior[c] += n
-        memo: dict = {}
-
-        def pred(fv):
-            if fv not in memo:
-                memo[fv] = _py_argmax(_py_nb1_t(prior, pairs, V, fv))[0]
-            return memo[fv]
-
-        return pred
-
-    # round-1 training pairs per view: labeled counts on that feature
-    trains = {
-        tag: {} for tag, _, _ in views
-    }
-    for (f1, f2, f3, c), n in lab.items():
-        fv = (f1, f2, f3)
-        for tag, idx, _ in views:
-            k = (fv[idx], c)
-            trains[tag][k] = trains[tag].get(k, 0) + n
-    # agreement condition and pseudo-label source per TARGET view:
-    # v1 promotes when v2/v3 agree (label p2), v2 when v1/v3 (p1),
-    # v3 when v1/v2 (p1)
-    agree = {"v1": (1, 2, 1), "v2": (0, 2, 0), "v3": (0, 1, 0)}
-    view_name = {"v1": "priority", "v2": "month", "v3": "segment"}
+    Every per-view prediction is constant per feature value, so the
+    agreement sets are constant per (f1, f2, f3) cell and both rounds
+    replay from the orders ⋈ customer contingency grid (see the
+    grid-replay header). Round 2 refits each view on labeled ∪ its
+    round-1 pseudo-labels and re-scores the full pool."""
+    lab, pool = _tt_grid(spark, sf_dir)
+    trains = [dict(lab) for _ in _TT_VIEWS]
     out_rows = []
     for rnd in (1, 2):
-        preds = {tag: fit_pred(trains[tag], V) for tag, _, V in views}
-        next_trains = {tag: dict(trains[tag]) for tag, _, _ in views}
-        summary = {tag: {} for tag, _, _ in views}
-        for (f1, f2, f3, c), (n, ks) in pool.items():
-            fv = (f1, f2, f3)
-            p = [preds["v1"](f1), preds["v2"](f2), preds["v3"](f3)]
-            for tag, idx, _ in views:
-                ja, jb, lbl = agree[tag]
-                if p[ja] == p[jb]:
-                    pseudo = p[lbl]
-                    s = summary[tag].setdefault(pseudo, [0, 0, 0])
-                    s[0] += n
-                    if pseudo == c:
-                        s[1] += n
-                    s[2] += ks
-                    k = (fv[idx], pseudo)
-                    next_trains[tag][k] = next_trains[tag].get(k, 0) + n
-        for tag, _, _ in views:
-            for pred in sorted(summary[tag]):
-                s = summary[tag][pred]
-                out_rows.append(
-                    (rnd, view_name[tag], pred, s[0], s[1], s[2])
-                )
-        trains = next_trains
+        preds = [_nb_predictor(tr, (i,)) for i, tr in enumerate(trains)]
+        sums = _tt_round(pool, preds, trains)
+        for view, s in sums.items():
+            out_rows += _tally_rows(s, rnd, view, cols=slice(1, 4))
     return spark.createDataFrame(
         out_rows,
         "rnd long, target_view string, pred_class string, n_promoted long, "
@@ -3042,24 +2477,21 @@ def ssl_kappa_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     the chance-corrected agreement next to McNemar's error-rate
     contrast. Exact integer ratio, one double division.
 
-    r14 optimization (guide §1.2): the agreement/marginal counts
-    replay from the contingency grid (``_py_paired_counts``) — one
-    fact aggregate instead of the full-pool DECIMAL scoring scan; the
-    final kappa expression is unchanged Spark SQL over the same
-    DECIMAL(38,0) counts."""
-    from decimal import Decimal
-
-    cls = ["F", "O", "P"]
+    The agreement/marginal counts replay from the contingency grid
+    (``_py_paired_counts``); the kappa expression is Spark SQL over the
+    same DECIMAL(38,0) counts. Over an empty pool n_agree and kappa are
+    NULL, as in the oracle."""
+    cls = _NB1_CLS
     pc = _py_paired_counts(spark, sf_dir)
     n = sum(pc.values())
-    agree = sum(v for (pa, pb, _c), v in pc.items() if pa == pb)
+    agree = sum(v for (pa, pb, _c), v in pc.items() if pa == pb) if pc else None
     ra = {c: sum(v for (pa, _pb, _c), v in pc.items() if pa == c) for c in cls}
     rb = {c: sum(v for (_pa, pb, _c), v in pc.items() if pb == c) for c in cls}
     dec = "decimal(38,0)"
     counts = spark.createDataFrame(
         [
             tuple(
-                Decimal(v)
+                None if v is None else Decimal(v)
                 for v in (n, agree, *[ra[c] for c in cls], *[rb[c] for c in cls])
             )
         ],
@@ -3095,7 +2527,7 @@ def ssl_kappa_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
 # cardinality (|f1| x |f2| combinations), so the curve is a counted-
 # grid window cumsum — never a per-row global sort (the
 # revenue_lorenz_deciles discipline). All arithmetic exact integers:
-# score_q = t_F·10⁴ // Σt (the _ct2_conf floor-division pattern),
+# score_q = t_F·10⁴ // Σt (an exact floor division),
 # precision/recall = 10⁶-scaled integer floor divisions.
 #
 # Score-scale budget: the TWO-feature model's t terms are ~n⁷ (a_c is
@@ -3109,6 +2541,19 @@ def ssl_kappa_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _PR_SCALE = 1_000_000
 _PR_SCORE_SCALE = 10_000
+
+
+def _f_score_grid(spark: SparkSession, sf_dir: str) -> dict:
+    """{score_q: [n_F, n_other]} over the unlabeled pool, score_q =
+    floor(t_F·10⁴/t_sum) of the two-feature NB — the PR and ROC grids."""
+    lab, pool = _grid_split(_nb_grid(_nb_rows(spark, sf_dir)))
+    predict = _nb_predictor(lab, (0, 1))
+    grid: dict = {}
+    for cell, (n, _ks) in pool.items():
+        t = predict(cell)[2]
+        g = grid.setdefault(t[0] * _PR_SCORE_SCALE // sum(t), [0, 0])
+        g[0 if cell[-1] == "F" else 1] += n
+    return grid
 
 
 def _pr_curve_oracle() -> str:
@@ -3151,32 +2596,16 @@ def ssl_pr_curve_nb(spark: SparkSession, sf_dir: str) -> DataFrame:
     class 'F', one row per distinct quantized score cut: (score_q,
     n_pred_pos, n_true_pos, precision_q, recall_q).
 
-    r14 optimization (guide §1.2/§2.4): score_q is constant per
-    (f1, f2) cell, so the curve replays from the ``_nb_grid_rows``
-    contingency grid on Python ints (floor divisions are exact) — one
-    fact aggregate replaces the full-pool DECIMAL scoring scan, the
-    score-grid groupBy and the window cumsum. The oracle is
-    unchanged."""
-    lab, pool = _grid_split(_nb_grid_rows(spark, sf_dir))
-    prior, lik1, lik2 = _py_fit_counts(lab)
-    grid: dict = {}
-    memo: dict = {}
-    for (f1, f2, c), (n, _ks) in pool.items():
-        if (f1, f2) not in memo:
-            t_f, t_o, t_p = _py_nb2_t(prior, lik1, lik2, f1, f2)
-            memo[(f1, f2)] = t_f * _PR_SCORE_SCALE // (t_f + t_o + t_p)
-        sq = memo[(f1, f2)]
-        g = grid.setdefault(sq, [0, 0])
-        g[0] += n
-        if c == "F":
-            g[1] += n
-    p_tot = sum(v[1] for v in grid.values())
+    score_q is constant per (f1, f2) cell, so the curve replays from
+    the contingency grid on Python ints (``_f_score_grid``)."""
+    grid = _f_score_grid(spark, sf_dir)
+    p_tot = sum(p for p, _ in grid.values())
     pp = tp = 0
     out_rows = []
     for sq in sorted(grid, reverse=True):
-        n, npos = grid[sq]
-        pp += n
-        tp += npos
+        p, g = grid[sq]
+        pp += p + g
+        tp += p
         out_rows.append(
             (
                 sq,
@@ -3287,58 +2716,29 @@ def ssl_paired_fold_ttest_nb(spark: SparkSession, sf_dir: str) -> DataFrame:
     the statistic) is driver-checked; the MLlib-model comparison stays
     on the rows-only ``ssl_paired_fold_ttest``.
 
-    r14 optimization (guide §1.2/§2.4): each fold's per-view correct
-    counts are exact sums over the (fold, f1, f2, class) contingency
-    grid (<= 3·5·12·3 cells at any corpus size), so ONE fact aggregate
-    + Python-int replay replaces the checkpoint and the 6 per-fold
-    full-scan scoring jobs. The d_q floor division is exact on Python
-    ints (the numerator is non-negative); the final double expressions
-    (mean_diff, t_stat) keep the original Spark semantics over the
-    same DECIMAL/BIGINT values. The oracle is unchanged."""
-    from decimal import Decimal
-
-    orders = load_table(spark, sf_dir, "orders")
-    grid = (
-        orders.select(
-            F.col("o_orderpriority").alias("f1"),
-            F.month("o_orderdate").cast("bigint").alias("f2"),
-            "o_orderstatus",
-            F.expr(_PFT_FOLD_SPARK).alias("fold"),
-        )
-        .groupBy("fold", "f1", "f2", "o_orderstatus")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    )
-    cells = [(r["fold"], r["f1"], r["f2"], r["o_orderstatus"], r["n"]) for r in grid]
+    Each fold's per-view correct counts are exact sums over the
+    (fold, f1, f2, class) contingency grid, replayed on Python ints
+    (d_q's floor division has a non-negative numerator); mean_diff and
+    t_stat are Spark double expressions over the exact BIGINT/DECIMAL
+    values. An empty fold has NULL counts and d_q, and the sums skip
+    it, as the oracle's SUMs do."""
+    grid = _nb_grid(_nb_rows(spark, sf_dir, fold=_PFT_FOLD_SPARK), lead=("fold",))
     fold_rows = []
     for f in range(_PFT_K):
-        train = {}
-        for fold, f1, f2, c, n in cells:
-            if fold != f:
-                train[(f1, f2, c)] = train.get((f1, f2, c), 0) + n
-        prior, lik1, lik2 = _py_fit_counts(train)
-        memo: dict = {}
-        n_test = c1 = c2 = 0
-        for fold, f1, f2, c, n in cells:
-            if fold != f:
-                continue
-            if (f1, f2) not in memo:
-                memo[(f1, f2)] = (
-                    _py_argmax(_py_nb1_t(prior, lik1, 5, f1))[0],
-                    _py_argmax(_py_nb1_t(prior, lik2, 12, f2))[0],
-                )
-            p1, p2 = memo[(f1, f2)]
-            n_test += n
-            if p1 == c:
-                c1 += n
-            if p2 == c:
-                c2 += n
-        d_q = (c1 - c2 + n_test) * _PFT_DQ_SCALE // n_test - _PFT_DQ_SCALE
+        train, test = _grid_split(grid, lambda k: k != f, lambda k: k == f)
+        p1, p2 = _nb_predictor(train, (0,)), _nb_predictor(train, (1,))
+        n_test = sum(n for n, _ in test.values())
+        c1 = c2 = d_q = None
+        if test:
+            c1 = sum(n for cell, (n, _) in test.items() if p1(cell)[0] == cell[-1])
+            c2 = sum(n for cell, (n, _) in test.items() if p2(cell)[0] == cell[-1])
+            d_q = (c1 - c2 + n_test) * _PFT_DQ_SCALE // n_test - _PFT_DQ_SCALE
         fold_rows.append((f, n_test, c1, c2, d_q))
-    t_sum = sum(r[4] for r in fold_rows)
-    s_sum = sum((_PFT_K * r[4] - t_sum) ** 2 for r in fold_rows)
+    dqs = [r[4] for r in fold_rows if r[4] is not None]
+    t_sum = sum(dqs) if dqs else None
+    s_sum = Decimal(sum((_PFT_K * d - t_sum) ** 2 for d in dqs)) if dqs else None
     d = spark.createDataFrame(
-        [(f, n, a, b, dq, t_sum, Decimal(s_sum)) for f, n, a, b, dq in fold_rows],
+        [(*r, t_sum, s_sum) for r in fold_rows],
         "fold long, n_test long, correct_f1 long, correct_f2 long, "
         "d_q long, t_sum long, s_sum decimal(38,0)",
     )
@@ -3457,87 +2857,33 @@ def ssl_cotrain_two_round_feature_split(
     including the rnd-1 'resolved' merge rows. Oracles the
     ``viewSplit='features'`` trajectory of operators/co_training.py:49
     the way ``ssl_cotrain_two_round_threshold`` oracles the
-    reference's cross-teach branch (``CoTraining.scala:158-196``)."""
-    from tfm_semisup_spark.operators.lineage import release, truncate
+    reference's cross-teach branch (``CoTraining.scala:158-196``).
 
-    thr = F.lit(_CT2T_THR).cast("decimal(38,0)")
-    labeled, unlabeled = _nb1_base(spark, sf_dir)
-    train_r1 = labeled.select("f1", "f2", F.col("o_orderstatus").alias("label"))
-    pool_r1 = unlabeled.select("o_orderkey", "o_orderstatus", "f1", "f2")
-    conf_v1r1 = truncate(_ct2_conf(train_r1, pool_r1, "f1", 5), eager=False)
-    conf_v2r1 = truncate(_ct2_conf(train_r1, pool_r1, "f2", 12))
-    flag = F.col("conf_q") > thr
-    a = conf_v1r1.where(flag).alias("a")
-    b = conf_v2r1.where(flag).alias("b")
-    a_wins = F.col("a.o_orderkey").isNotNull() & (
-        F.col("b.o_orderkey").isNull()
-        | (F.col("a.conf_q") >= F.col("b.conf_q"))
+    Both views' predictions and quantized confidences are constant per
+    feature value, so the merge, the shared refit and round 2 replay
+    from the contingency grid (see the grid-replay header)."""
+    train, pool = _grid_split(_nb_grid(_nb_rows(spark, sf_dir)))
+    preds = [_nb_predictor(train, (i,)) for i in (0, 1)]
+    cells = _thr_cells(pool, preds, _CT2T_THR)
+    sums, pool = _ct2_exchange(cells, preds)
+    resolved: dict = {}
+    for cell, fl, n, ks in cells:
+        if any(fl):
+            # disagreement resolution: higher conf_q wins, tie -> priority
+            (pa, qa, _), (pb, qb, _) = preds[0](cell), preds[1](cell)
+            pred, cq = (pa, qa) if fl[0] and (not fl[1] or qa >= qb) else (pb, qb)
+            _tally(resolved, pred, cell[-1], n, ks, cq=cq)
+            train[(*cell[:-1], pred)] = train.get((*cell[:-1], pred), 0) + n
+    out_rows = (
+        _tally_rows(sums[0], 1, "priority", cols=slice(0, 5))
+        + _tally_rows(sums[1], 1, "month", cols=slice(0, 5))
+        + _tally_rows(resolved, 1, "resolved", cols=slice(0, 5))
     )
-    resolved = truncate(
-        a.join(b, F.col("a.o_orderkey") == F.col("b.o_orderkey"), "full_outer")
-        .select(
-            F.coalesce(F.col("a.o_orderkey"), F.col("b.o_orderkey")).alias(
-                "o_orderkey"
-            ),
-            F.coalesce(
-                F.col("a.o_orderstatus"), F.col("b.o_orderstatus")
-            ).alias("o_orderstatus"),
-            F.coalesce(F.col("a.f1"), F.col("b.f1")).alias("f1"),
-            F.coalesce(F.col("a.f2"), F.col("b.f2")).alias("f2"),
-            F.when(a_wins, F.col("a.pred_class"))
-            .otherwise(F.col("b.pred_class"))
-            .alias("pred_class"),
-            F.when(a_wins, F.col("a.conf_q"))
-            .otherwise(F.col("b.conf_q"))
-            .alias("win_conf"),
-        )
-    )
-    train_r2 = train_r1.unionByName(
-        resolved.select("f1", "f2", F.col("pred_class").alias("label"))
-    )
-    pool_r2 = truncate(
-        conf_v1r1.where(~flag)
-        .select("o_orderkey", "o_orderstatus", "f1", "f2")
-        .join(conf_v2r1.where(~flag).select("o_orderkey"), "o_orderkey", "semi")
-    )
-    conf_v1r2 = truncate(_ct2_conf(train_r2, pool_r2, "f1", 5), eager=False)
-    conf_v2r2 = truncate(_ct2_conf(train_r2, pool_r2, "f2", 12))
-    res_summary = (
-        resolved.groupBy("pred_class")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_scored"),
-            F.count(F.lit(1)).cast("bigint").alias("n_promoted"),
-            F.sum(
-                F.when(
-                    F.col("pred_class") == F.col("o_orderstatus"), 1
-                ).otherwise(0)
-            )
-            .cast("bigint")
-            .alias("n_promoted_correct"),
-            F.sum("o_orderkey").cast("bigint").alias("promoted_key_sum"),
-            F.min("win_conf").cast("bigint").alias("min_conf_q"),
-        )
-        .select(
-            F.lit(1).cast("bigint").alias("rnd"),
-            F.lit("resolved").alias("view_name"),
-            "pred_class",
-            "n_scored",
-            "n_promoted",
-            "n_promoted_correct",
-            "promoted_key_sum",
-            "min_conf_q",
-        )
-    )
-    out = truncate(
-        _ct2_summary(conf_v1r1, flag, 1, "priority")
-        .unionByName(_ct2_summary(conf_v2r1, flag, 1, "month"))
-        .unionByName(res_summary)
-        .unionByName(_ct2_summary(conf_v1r2, flag, 2, "priority"))
-        .unionByName(_ct2_summary(conf_v2r2, flag, 2, "month"))
-    )
-    for df in (conf_v1r1, conf_v2r1, resolved, pool_r2, conf_v1r2, conf_v2r2):
-        release(df)
-    return out
+    preds = [_nb_predictor(train, (i,)) for i in (0, 1)]
+    sums, _ = _ct2_exchange(_thr_cells(pool, preds, _CT2T_THR), preds)
+    out_rows += _tally_rows(sums[0], 2, "priority", cols=slice(0, 5))
+    out_rows += _tally_rows(sums[1], 2, "month", cols=slice(0, 5))
+    return spark.createDataFrame(out_rows, _CT2_SUMMARY_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -3787,57 +3133,41 @@ def ssl_cotrain_two_round_instance_split(
     pools hash-halved, two copies of the same single-feature NB
     cross-teach, each consuming its own pool half. (rnd, view_name,
     pred_class, n_scored, n_promoted, n_promoted_correct,
-    promoted_key_sum, min_conf_q)."""
-    from tfm_semisup_spark.operators.lineage import release, truncate
+    promoted_key_sum, min_conf_q).
 
-    thr = F.lit(_CTI_THR).cast("decimal(38,0)")
-    half = F.expr(f"({md5_uniform16_spark_sql(_CTI_HALF_KEY_SPARK)} % 2)")
-    labeled, unlabeled = _nb1_base(spark, sf_dir)
-    labeled = labeled.withColumn("half", half)
-    unlabeled = unlabeled.withColumn("half", half)
-    lab = {
-        h: labeled.where(F.col("half") == h).select(
-            "f1", "f2", F.col("o_orderstatus").alias("label")
+    Each half's prediction and quantized confidence are constant per
+    f1 value, so both rounds replay from the (mask, half) contingency
+    grid (see the grid-replay header)."""
+    half = f"({md5_uniform16_spark_sql(_CTI_HALF_KEY_SPARK)} % 2)"
+    grid = _nb_grid(_nb_rows(spark, sf_dir, half=half), lead=("mask", "half"))
+    trains, pools = [], []
+    for h in (0, 1):
+        lab, pool = _grid_split(
+            grid,
+            lambda m, x, h=h: m == 0 and x == h,
+            lambda m, x, h=h: m != 0 and x == h,
         )
-        for h in (0, 1)
-    }
-    pool = {
-        h: unlabeled.where(F.col("half") == h).select(
-            "o_orderkey", "o_orderstatus", "f1", "f2"
-        )
-        for h in (0, 1)
-    }
-    conf1 = {
-        h: truncate(_ct2_conf(lab[h], pool[h], "f1", 5), eager=(h == 1))
-        for h in (0, 1)
-    }
-    flag = F.col("conf_q") > thr
-    prom = {
-        h: conf1[h].where(flag).select(
-            "f1", "f2", F.col("pred_class").alias("label")
-        )
-        for h in (0, 1)
-    }
-    tr2 = {h: lab[h].unionByName(prom[1 - h]) for h in (0, 1)}
-    pl2 = {
-        h: conf1[h]
-        .where(~flag)
-        .select("o_orderkey", "o_orderstatus", "f1", "f2")
-        for h in (0, 1)
-    }
-    conf2 = {
-        h: truncate(_ct2_conf(tr2[h], pl2[h], "f1", 5), eager=(h == 1))
-        for h in (0, 1)
-    }
-    out = truncate(
-        _ct2_summary(conf1[0], flag, 1, "half_a")
-        .unionByName(_ct2_summary(conf1[1], flag, 1, "half_b"))
-        .unionByName(_ct2_summary(conf2[0], flag, 2, "half_a"))
-        .unionByName(_ct2_summary(conf2[1], flag, 2, "half_b"))
-    )
-    for df in (*conf1.values(), *conf2.values()):
-        release(df)
-    return out
+        trains.append(lab)
+        pools.append(pool)
+    out_rows = []
+    for rnd in (1, 2):
+        preds = [_nb_predictor(tr, (0,)) for tr in trains]
+        for h, view in ((0, "half_a"), (1, "half_b")):
+            sums: dict = {}
+            rest: dict = {}
+            for cell, (n, ks) in pools[h].items():
+                pred, cq, _ = preds[h](cell)
+                _tally(sums, pred, cell[-1], n, ks, cq > _CTI_THR, cq)
+                if cq > _CTI_THR:
+                    # cross-teach: this half's promotions join the
+                    # other half's training pool
+                    key = (*cell[:-1], pred)
+                    trains[1 - h][key] = trains[1 - h].get(key, 0) + n
+                else:
+                    rest[cell] = (n, ks)
+            pools[h] = rest
+            out_rows += _tally_rows(sums, rnd, view, cols=slice(0, 5))
+    return spark.createDataFrame(out_rows, _CT2_SUMMARY_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -3900,33 +3230,20 @@ def ssl_roc_auc_nb(spark: SparkSession, sf_dir: str) -> DataFrame:
     (n_pos, n_neg, u2, auc). Shares the PR curve's score grid; the
     only division is the final AUC.
 
-    r14 optimization (guide §1.2/§2.4): the rank-sum replays from the
-    ``_nb_grid_rows`` contingency grid on Python ints — one fact
-    aggregate replaces the full-pool DECIMAL scoring scan, score-grid
-    groupBy and window cumsum; the final AUC division keeps the
-    original Spark double semantics. The oracle is unchanged."""
-    lab, pool = _grid_split(_nb_grid_rows(spark, sf_dir))
-    prior, lik1, lik2 = _py_fit_counts(lab)
-    grid: dict = {}
-    memo: dict = {}
-    for (f1, f2, c), (n, _ks) in pool.items():
-        if (f1, f2) not in memo:
-            t_f, t_o, t_p = _py_nb2_t(prior, lik1, lik2, f1, f2)
-            memo[(f1, f2)] = t_f * _PR_SCORE_SCALE // (t_f + t_o + t_p)
-        sq = memo[(f1, f2)]
-        g = grid.setdefault(sq, [0, 0])
-        if c == "F":
-            g[0] += n
-        else:
-            g[1] += n
-    n_pos = sum(v[0] for v in grid.values())
-    n_neg = sum(v[1] for v in grid.values())
-    u2 = 0
-    g_below = 0
-    for sq in sorted(grid):
-        p_s, g_s = grid[sq]
-        u2 += 2 * p_s * g_below + p_s * g_s
-        g_below += g_s
+    The rank-sum replays from the contingency grid on Python ints
+    (``_f_score_grid``); the AUC division keeps the Spark double
+    semantics. Over an empty pool every column is NULL, as the
+    oracle's SUMs are."""
+    grid = _f_score_grid(spark, sf_dir)
+    n_pos = n_neg = u2 = None
+    if grid:
+        n_pos = sum(p for p, _ in grid.values())
+        n_neg = sum(g for _, g in grid.values())
+        u2 = g_below = 0
+        for sq in sorted(grid):
+            p_s, g_s = grid[sq]
+            u2 += 2 * p_s * g_below + p_s * g_s
+            g_below += g_s
     return spark.createDataFrame(
         [(n_pos, n_neg, u2)], "np long, ng long, u2 long"
     ).select(
@@ -3978,6 +3295,14 @@ def ssl_roc_auc_nb(spark: SparkSession, sf_dir: str) -> DataFrame:
 # algebra. Same sufficient-statistics shape as the NB/IRLS entries.
 
 _STUMP_SCORE_SCALE = 1_000_000_000  # 10^9
+
+
+def _fd(num, den):
+    """Exact integer floor-division on DECIMAL(38,0) (operands
+    nonnegative): (num - pmod(num, den)) / den — the divisible
+    numerator makes the decimal division exact (never F.floor over a
+    rounded quotient)."""
+    return ((num - F.pmod(num, den)) / den).cast("decimal(38,0)")
 
 _STUMP_GRID_SQL = """grid AS (
   SELECT f1, f2, o_orderstatus AS cls, COUNT(*)::HUGEINT AS cnt
@@ -4124,7 +3449,7 @@ def _stump_scored(spark: SparkSession, labeled: DataFrame) -> DataFrame:
         "thr",
         "n_left",
         "n_right",
-        ((num - F.pmod(num, den)) / den).cast("decimal(38,0)").alias("score_q"),
+        _fd(num, den).alias("score_q"),
     )
 
 
@@ -4218,9 +3543,7 @@ def ssl_stump_one_round_threshold(
             "leaf",
             F.col("cls").alias("pred_class"),
             "n_leaf",
-            ((num - F.pmod(num, F.col("n_leaf"))) / F.col("n_leaf"))
-            .cast("decimal(38,0)")
-            .alias("conf_q"),
+            _fd(num, F.col("n_leaf")).alias("conf_q"),
         )
     )
     pool_leaf = unlabeled.select(leaf_col, "o_orderkey", "o_orderstatus")
