@@ -4,7 +4,8 @@
 Prints exactly ONE JSON line:
   {"metric": "...", "value": <total sec>, "unit": "sec",
    "queries": {"<name>": sec, ...}, "sf": <float>,
-   "n_queries": N, "queries_omitted": M}
+   "n_queries": N, "queries_omitted": M, "master": "local[32]",
+   "default_parallelism": 32, "spark_graft_cpus": "32" | null}
 
 The stdout ``queries`` map is CAPPED, most-expensive-first, so the
 rendered line stays under ``STDOUT_LINE_BUDGET`` chars: the driver
@@ -326,16 +327,29 @@ def calib_contaminated(calib: dict[str, list[float]]) -> bool:
     )
 
 
+def run_context(spark) -> dict:
+    """Where the bench ran: the resolved master, ``defaultParallelism``
+    and ``$SPARK_GRAFT_CPUS`` as set (None when unset)."""
+    sc = spark.sparkContext
+    return {
+        "master": sc.master,
+        "default_parallelism": sc.defaultParallelism,
+        "spark_graft_cpus": os.environ.get("SPARK_GRAFT_CPUS"),
+    }
+
+
 def stdout_payload(
     timings: dict[str, float],
     total: float,
     sf: float,
     calib: dict[str, list[float]] | None = None,
+    context: dict | None = None,
 ) -> dict:
     """The driver-parsed stdout record: headline total, the machine-
     calibration anchors (each a [min, median, max] triple over the 6
     bracketing samples — episode-aware per VERDICT r11 #3, with the
-    max/median > CALIB_EPISODE_RATIO contamination flag), and as many
+    max/median > CALIB_EPISODE_RATIO contamination flag), where the
+    run happened (``run_context``, one key per field), and as many
     of the SLOWEST per-query timings as fit in STDOUT_LINE_BUDGET
     rendered chars. Deterministic (sort by -time then name); the full
     map is in bench_spread.json. n_queries/queries_omitted make the
@@ -351,6 +365,7 @@ def stdout_payload(
         "sf": sf,
         "n_queries": len(timings),
         "queries_omitted": 0,
+        **(context or {}),
     }
     for name, sec in sorted(timings.items(), key=lambda kv: (-kv[1], kv[0])):
         payload["queries"][name] = sec
@@ -377,6 +392,7 @@ def main() -> None:
     load_all_queries()
     spark = get_spark(app_name="tfm-semisup-bench")
     spark.sparkContext.setLogLevel("ERROR")
+    context = run_context(spark)
     # JVM/codegen/classload warmup outside the timed region: run EVERY
     # headline query once at the tiny SF so steady-state throughput is
     # measured. First hits otherwise pay one-off costs per operator
@@ -537,7 +553,7 @@ def main() -> None:
     # ERROR-level shutdown log landing after the JSON would re-break
     # parsing (the BENCH_r06 failure class)
     spark.stop()
-    print(json.dumps(stdout_payload(timings, total, sf, calib)), flush=True)
+    print(json.dumps(stdout_payload(timings, total, sf, calib, context)), flush=True)
 
 
 if __name__ == "__main__":

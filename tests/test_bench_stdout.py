@@ -128,3 +128,27 @@ def test_stdout_payload_deterministic():
     a = json.dumps(bench.stdout_payload(timings, total, 0.1))
     b = json.dumps(bench.stdout_payload(dict(timings), total, 0.1))
     assert a == b
+
+
+def test_stdout_payload_says_where_it_ran():
+    """The resolved master, defaultParallelism and $SPARK_GRAFT_CPUS
+    ride the stdout line next to the existing keys, inside the budget."""
+    context = {
+        "master": "local[32]",
+        "default_parallelism": 32,
+        "spark_graft_cpus": "32",
+    }
+    timings = _worst_case_timings()
+    total = round(sum(timings.values()), 3)
+    plain = bench.stdout_payload(timings, total, 0.1, _worst_case_calib())
+    payload = bench.stdout_payload(timings, total, 0.1, _worst_case_calib(), context)
+    assert {k: payload[k] for k in context} == context
+    assert set(payload) == set(plain) | set(context)
+    assert len(json.dumps(payload)) <= bench.STDOUT_LINE_BUDGET
+
+
+def test_run_context_reads_the_session(spark):
+    context = bench.run_context(spark)
+    assert context["master"] == spark.sparkContext.master
+    assert context["default_parallelism"] == spark.sparkContext.defaultParallelism
+    assert set(context) == {"master", "default_parallelism", "spark_graft_cpus"}

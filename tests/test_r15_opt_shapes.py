@@ -276,3 +276,54 @@ def test_semantic_dedup_footer_n_matches_hll_path(spark):
     )
     assert with_footer == with_hll
     assert len(with_footer) > 0
+
+
+def test_table_row_count_reads_uris_like_local_paths(tmp_path):
+    """The footer count (and the embedding dim) answer the same for a
+    ``file://`` URI as for the plain path, on single-file and on
+    directory-shaped tables."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from tfm_semisup_spark.io import embedding_dim, table_row_count
+
+    n = table_row_count(SF_DIR, "embeddings")
+    assert n > 0
+    assert table_row_count(f"file://{SF_DIR}", "embeddings") == n
+    assert embedding_dim(f"file://{SF_DIR}") == embedding_dim(SF_DIR)
+
+    table_dir = tmp_path / "docs.parquet"
+    table_dir.mkdir()
+    for i, rows in enumerate((3, 4)):
+        pq.write_table(pa.table({"x": list(range(rows))}), table_dir / f"part-{i}.parquet")
+    (table_dir / "_SUCCESS").write_text("")
+    assert table_row_count(str(tmp_path), "docs") == 7
+    assert table_row_count(f"file://{tmp_path}", "docs") == 7
+
+
+def test_semdedup_entry_falls_back_where_pyarrow_cannot_open(spark, tmp_path, monkeypatch):
+    """A missing or unreadable table raises from the footer read, and
+    dedup_semantic_semdedup then takes semantic_dedup's Spark probes
+    (approx_n=None, dim=None) with unchanged rows."""
+    import pytest
+    from pyarrow import ArrowException
+
+    from tfm_semisup_spark import io as graft_io
+    from tfm_semisup_spark.queries.dedup import dedup_semantic_semdedup
+
+    with pytest.raises(OSError):
+        graft_io.table_row_count(str(tmp_path), "embeddings")
+    (tmp_path / "embeddings.parquet").write_text("not parquet")
+    with pytest.raises(ArrowException):
+        graft_io.table_row_count(str(tmp_path), "embeddings")
+
+    footer_rows = sorted(dedup_semantic_semdedup(spark, SF_DIR).collect())
+
+    def unreachable(path):
+        raise OSError(f"no filesystem driver for {path}")
+
+    monkeypatch.setattr(graft_io, "_parquet_files", unreachable)
+    graft_io._ARRAY_DIM_CACHE.clear()
+    probe_rows = sorted(dedup_semantic_semdedup(spark, SF_DIR).collect())
+    assert probe_rows == footer_rows
+    assert len(footer_rows) > 0

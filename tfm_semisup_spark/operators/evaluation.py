@@ -11,7 +11,13 @@ per fold, outside Catalyst. Rebuild (SURVEY.md §3 "rebuild lifecycle"):
 - ALL metrics derive from one confusion-matrix pass
   (``groupBy(prediction, label).count()`` -> a handful of cells
   collected to the driver) — one distributed job per fold instead of
-  one per metric.
+  one per metric;
+- the folds run CONCURRENTLY, ``min(k, defaultParallelism)`` in
+  flight: a fold is mostly driver-side planning between small jobs,
+  so one fold's planning overlaps the other folds' jobs (the pattern
+  of ``pyspark.ml.tuning.CrossValidator._fit``). Each fold fits its
+  own ``pipeline.copy()``; results are gathered in fold order, so the
+  averages are the serial loop's.
 
 Metric parity quirk, preserved knowingly (BASELINE.md caveat): the
 reference feeds HARD 0/1 predictions to BinaryClassificationMetrics
@@ -30,11 +36,13 @@ wanted. Positive class is label 1.0 (reference: ``metrics.fMeasure(1)``).
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 from pyspark.ml import Pipeline
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from tfm_semisup_spark.operators.lineage import release
 from tfm_semisup_spark.operators.results import SemiSupervisedSummary
@@ -244,18 +252,40 @@ def cross_validate(
 ) -> CVResult:
     """k-fold CV of a full pipeline (featurization + masking + SSC
     estimator), averaging the reference's 4 metrics + pool bookkeeping
-    over folds (``FunctionsSemiSupervised.scala:317-325``)."""
+    over folds (``FunctionsSemiSupervised.scala:317-325``).
+
+    Fold membership is checkpointed once; the k folds then fit and
+    evaluate on ``min(k, defaultParallelism)`` threads, each through
+    ``inheritable_thread_target`` so its jobs keep the caller's job
+    group and local properties. Every fold fits its own
+    ``pipeline.copy()``, made on the calling thread (the SSC copies
+    carry their own base classifier), so no estimator instance is
+    shared between threads and ``pipeline``'s stages are never fitted
+    themselves. Per-fold metrics and summaries are kept in fold order.
+    The fold checkpoint is released once every fold thread has
+    returned or failed; the first failing fold's error (in fold order)
+    then propagates."""
+    spark = data.sparkSession
     folded = assign_folds(data, k, seed, id_col).localCheckpoint(eager=True)
-    per_fold: list[ClassificationMetrics] = []
-    summaries: list[SemiSupervisedSummary] = []
-    for i in range(k):
+
+    def run_fold(i: int, fold_pipeline: Pipeline):
         train = folded.where(F.col("fold") != i).drop("fold")
         test = folded.where(F.col("fold") == i).drop("fold")
-        model = pipeline.fit(train)
-        per_fold.append(evaluate_predictions(model.transform(test)))
-        summaries.append(_find_ss_summary(model))
-    # free the fold checkpoint now, not at the next driver GC
-    release(folded)
+        model = fold_pipeline.fit(train)
+        return evaluate_predictions(model.transform(test)), _find_ss_summary(model)
+
+    copies = [pipeline.copy() for _ in range(k)]
+    threads = min(k, spark.sparkContext.defaultParallelism)
+    try:
+        with ThreadPoolExecutor(max_workers=threads) as pool:
+            run = inheritable_thread_target(spark)(run_fold)
+            folds = list(pool.map(run, range(k), copies))
+    finally:
+        # the pool's exit has joined every fold thread: free the fold
+        # checkpoint now, not at the next driver GC
+        release(folded)
+    per_fold = [m for m, _ in folds]
+    summaries = [s for _, s in folds]
 
     avg = ClassificationMetrics(
         accuracy=sum(m.accuracy for m in per_fold) / k,

@@ -153,7 +153,11 @@ class _SSCParams(Params):
         self.last_fit_summary: SemiSupervisedSummary | None = None
 
     def copy(self, extra=None):
-        new = type(self)(baseClassifier=self.baseClassifier)
+        """A copy with its own copy of the base classifier, so copies
+        fitted concurrently (the folds of ``cross_validate``) never
+        drive one Java estimator."""
+        base = self.baseClassifier
+        new = type(self)(baseClassifier=None if base is None else base.copy())
         return self._copyValues(new, extra)
 
     def _check_criterion(self) -> None:

@@ -780,6 +780,8 @@ def dedup_semantic_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     would make the grouping path vacuous here; 0.45 exercises pair
     formation + components + canonicalization on this data. Planted
     true-duplicate behavior is tested in tests/test_semantic_dedup.py."""
+    from pyarrow import ArrowException
+
     from tfm_semisup_spark.io import embedding_dim, load_table, table_row_count
     from tfm_semisup_spark.operators.semantic_dedup import semantic_dedup
 
@@ -788,12 +790,15 @@ def dedup_semantic_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # vec_id is the table key, so num_rows IS the distinct count the
     # HLL probe estimated; at every gate/bench SF both resolve the
     # same k and train_mod (verified by old-vs-new row equality at
-    # sf0.001/0.01/0.1), and the exact value is the more faithful one
+    # sf0.001/0.01/0.1), and the exact value is the more faithful one.
+    # Where pyarrow cannot open the table (a filesystem it has no
+    # driver for), None selects semantic_dedup's Spark probes instead.
+    try:
+        dim, approx_n = embedding_dim(sf_dir), table_row_count(sf_dir, "embeddings")
+    except (OSError, ArrowException):
+        dim = approx_n = None
     return semantic_dedup(
-        emb,
-        threshold=0.45,
-        dim=embedding_dim(sf_dir),
-        approx_n=table_row_count(sf_dir, "embeddings"),
+        emb, threshold=0.45, dim=dim, approx_n=approx_n
     ).orderBy("id")
 
 
