@@ -2,9 +2,9 @@
 
 ``entry(spark)`` runs the flagship star-schema query at sf0.001;
 ``queries()`` exposes every implemented operator from SURVEY.md §2 as a
-named ``(spark, sf_dir) -> DataFrame`` callable (352 entries);
+named ``(spark, sf_dir) -> DataFrame`` callable (356 entries);
 ``oracle_sql()`` maps each SQL-expressible query name to the
-equivalent DuckDB SQL (318 entries — all verified hash-matching at
+equivalent DuckDB SQL (322 entries — all verified hash-matching at
 sf0.01 AND at an alternate shuffle-partition count AND under
 codegen.fallback=false, so no oracle is driver-environment-dependent
 or silently interpreted; provenance: 296 via driver CORRECTNESS rows

@@ -10,39 +10,13 @@
 
 from __future__ import annotations
 
-import json
-import os
-
-import pytest
-
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, strict_codegen_sweep
 from tfm_semisup_spark.queries import QUERIES, load_all_queries
 
 load_all_queries()
 
 
-def _r10_new_queries() -> list[str]:
-    hist_path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "driver_history.json",
-    )
-    with open(hist_path) as fh:
-        hist = json.load(fh)
-    return sorted(
-        n for n, v in hist.items() if v.get("added") == 10 and n in QUERIES
-    )
-
-
-@pytest.fixture()
-def strict_codegen(spark):
-    spark.conf.set("spark.sql.codegen.fallback", "false")
-    yield spark
-    spark.conf.set("spark.sql.codegen.fallback", "true")
-
-
-@pytest.mark.parametrize("name", _r10_new_queries())
-def test_r10_queries_compile_under_strict_codegen(strict_codegen, name):
-    assert QUERIES[name](strict_codegen, SF_DIR).count() >= 0
+test_r10_queries_compile_under_strict_codegen = strict_codegen_sweep(10)
 
 
 def test_two_round_selftrain_exercises_refit(spark):

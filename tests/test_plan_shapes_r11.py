@@ -11,40 +11,15 @@
 
 from __future__ import annotations
 
-import json
-import os
-
-import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, strict_codegen_sweep
 from tfm_semisup_spark.queries import QUERIES, load_all_queries
 
 load_all_queries()
 
 
-def _r11_new_queries() -> list[str]:
-    hist_path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "driver_history.json",
-    )
-    with open(hist_path) as fh:
-        hist = json.load(fh)
-    return sorted(
-        n for n, v in hist.items() if v.get("added") == 11 and n in QUERIES
-    )
-
-
-@pytest.fixture()
-def strict_codegen(spark):
-    spark.conf.set("spark.sql.codegen.fallback", "false")
-    yield spark
-    spark.conf.set("spark.sql.codegen.fallback", "true")
-
-
-@pytest.mark.parametrize("name", _r11_new_queries())
-def test_r11_queries_compile_under_strict_codegen(strict_codegen, name):
-    assert QUERIES[name](strict_codegen, SF_DIR).count() >= 0
+test_r11_queries_compile_under_strict_codegen = strict_codegen_sweep(11)
 
 
 def test_two_round_cotrain_exercises_cross_teach(spark):

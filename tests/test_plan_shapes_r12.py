@@ -20,39 +20,15 @@
 
 from __future__ import annotations
 
-import json
-import math
-import os
-
 import duckdb
 import pytest
 
-from tests.conftest import SF_DIR, SF_DIR_01
+from tests.conftest import SF_DIR, SF_DIR_01, strict_codegen_sweep
 from tfm_semisup_spark.queries import QUERIES, load_all_queries
 
 load_all_queries()
 
-_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-
-def _r12_new_queries() -> list[str]:
-    with open(os.path.join(_REPO, "driver_history.json")) as fh:
-        hist = json.load(fh)
-    return sorted(
-        n for n, v in hist.items() if v.get("added") == 12 and n in QUERIES
-    )
-
-
-@pytest.fixture()
-def strict_codegen(spark):
-    spark.conf.set("spark.sql.codegen.fallback", "false")
-    yield spark
-    spark.conf.set("spark.sql.codegen.fallback", "true")
-
-
-@pytest.mark.parametrize("name", _r12_new_queries())
-def test_r12_queries_compile_under_strict_codegen(strict_codegen, name):
-    assert QUERIES[name](strict_codegen, SF_DIR).count() >= 0
+test_r12_queries_compile_under_strict_codegen = strict_codegen_sweep(12)
 
 
 @pytest.mark.parametrize(

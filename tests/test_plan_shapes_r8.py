@@ -32,15 +32,6 @@ AFFECTED = [
 ]
 
 
-@pytest.fixture()
-def strict_codegen(spark):
-    """Make janino compile failures fatal instead of a silent
-    interpreted fallback."""
-    spark.conf.set("spark.sql.codegen.fallback", "false")
-    yield spark
-    spark.conf.set("spark.sql.codegen.fallback", "true")
-
-
 @pytest.mark.parametrize("name", AFFECTED)
 def test_pair_cosine_queries_compile(strict_codegen, name):
     from tfm_semisup_spark.queries import QUERIES, load_all_queries

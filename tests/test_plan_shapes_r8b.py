@@ -14,9 +14,7 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import functions as F
-
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, strict_codegen_sweep
 from tfm_semisup_spark.queries import QUERIES, load_all_queries
 
 load_all_queries()
@@ -26,41 +24,7 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def _r8_new_queries() -> list[str]:
-    """Every oracled entry born in round 8, from the governance record
-    — the strict-codegen sweep below auto-covers future r8 additions."""
-    import json
-    import os
-
-    hist_path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "driver_history.json",
-    )
-    with open(hist_path) as fh:
-        hist = json.load(fh)
-    return sorted(
-        n for n, v in hist.items() if v.get("added") == 8 and n in QUERIES
-    )
-
-
-import pytest  # noqa: E402
-
-
-@pytest.fixture()
-def strict_codegen(spark):
-    """janino compile failures become fatal instead of a silent
-    interpreted fallback (the r7-verdict defect class)."""
-    spark.conf.set("spark.sql.codegen.fallback", "false")
-    yield spark
-    spark.conf.set("spark.sql.codegen.fallback", "true")
-
-
-@pytest.mark.parametrize("name", _r8_new_queries())
-def test_r8_queries_compile_under_strict_codegen(strict_codegen, name):
-    """No r8 query may silently run its hot stages interpreted:
-    .count() executes every codegen stage and raises on a failed
-    compile when fallback is off."""
-    assert QUERIES[name](strict_codegen, SF_DIR).count() >= 0
+test_r8_queries_compile_under_strict_codegen = strict_codegen_sweep(8)
 
 
 def test_spatial_grid_join_no_cartesian_and_exactly_once(spark):

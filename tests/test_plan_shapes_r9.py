@@ -12,13 +12,10 @@ a few closed-form invariants the oracles can't express.
 
 from __future__ import annotations
 
-import json
-import os
-
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, born_in, strict_codegen_sweep
 from tfm_semisup_spark.queries import QUERIES, load_all_queries
 
 load_all_queries()
@@ -28,37 +25,13 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def _r9_new_queries() -> list[str]:
-    hist_path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "driver_history.json",
-    )
-    with open(hist_path) as fh:
-        hist = json.load(fh)
-    return sorted(
-        n for n, v in hist.items() if v.get("added") == 9 and n in QUERIES
-    )
-
-
-@pytest.fixture()
-def strict_codegen(spark):
-    spark.conf.set("spark.sql.codegen.fallback", "false")
-    yield spark
-    spark.conf.set("spark.sql.codegen.fallback", "true")
-
-
-@pytest.mark.parametrize("name", _r9_new_queries())
-def test_r9_queries_compile_under_strict_codegen(strict_codegen, name):
-    """Every r9-born query must compile its codegen stages — .count()
-    executes every stage and raises on a failed compile when fallback
-    is off."""
-    assert QUERIES[name](strict_codegen, SF_DIR).count() >= 0
+test_r9_queries_compile_under_strict_codegen = strict_codegen_sweep(9)
 
 
 def test_r9_birth_records_exist():
     """The parametrized sweep above is only as good as the governance
     record: at least the known r9 family heads must be present."""
-    names = set(_r9_new_queries())
+    names = set(born_in(9))
     assert {
         "ssl_selftrain_one_round_nb",
         "spearman_qty_disc",

@@ -151,7 +151,8 @@ def test_session2_queries_leave_no_pinned_blocks(spark):
     """Same cache-hygiene contract for the second-session operators
     that persist/checkpoint intermediates: bloom gram hashes, CMS
     position hashes, boilerplate line table, prefix-Jaccard shingles,
-    PageRank edge/rank rounds and the co-occurrence pair checkpoint."""
+    PageRank edge/rank rounds and the co-occurrence pair checkpoint,
+    and the paired-fold t-test's fold checkpoint."""
     from tfm_semisup_spark.operators.lineage import release
     from tfm_semisup_spark.queries import QUERIES, load_all_queries
 
@@ -163,6 +164,7 @@ def test_session2_queries_leave_no_pinned_blocks(spark):
         "boilerplate_line_removal",
         "dedup_prefix_jaccard_pairs",
         "item_pagerank",
+        "ssl_paired_fold_ttest",
     ):
         before = _cached_rdd_ids(spark)
         df = QUERIES[name](spark, sf)

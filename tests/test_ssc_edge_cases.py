@@ -213,13 +213,10 @@ def test_fit_summary_same_under_both_checkpoints(pinned_input, tmp_path, case):
     is the same under localCheckpoint and under a reliable
     ``Dataset.checkpoint`` (checkpointDir), and matches explicit
     count() cross-checks on the same input."""
-    local = _pinned_estimator(case)
-    local.fit(pinned_input)
+    s = _pinned_estimator(case).fit(pinned_input).ss_summary
     reliable = _pinned_estimator(case)
     reliable.set(reliable.checkpointDir, (tmp_path / "ckpt").as_uri())
-    reliable.fit(pinned_input)
-    s = local.last_fit_summary
-    assert reliable.last_fit_summary == s
+    assert reliable.fit(pinned_input).ss_summary == s
     unlabeled = F.isnan("labelSelection")
     n_lab = pinned_input.where(~unlabeled).count()
     n_unlab = pinned_input.where(unlabeled).count()

@@ -414,6 +414,47 @@ def test_kbest_order_tie_break_partitioning_independent(spark):
     assert sum(1 for f, _ in picks[0] if f[0] >= 100.0) == 5
 
 
+def test_feature_split_threshold_rule_matches_either_view_rule(spark):
+    """The feature split promotes its merged (prediction, probMax)
+    frame through the shared threshold rule. That equals the per-view
+    rule it replaced: promote when EITHER view is confident, label from
+    view 1 iff it is confident and better than (or tied with) view 2 or
+    view 2 is not confident. Pinned on equal posteriors, each view alone
+    above t, both, neither and NaN posteriors."""
+    from tfm_semisup_spark.operators.co_training import _better_view
+
+    t = 0.7
+    nan = float("nan")
+    pms = [
+        (0.8, 0.8), (0.5, 0.5),  # pm1 == pm2
+        (0.9, 0.7), (0.71, 0.2),  # pm1 > t >= pm2
+        (0.7, 0.95), (0.1, 0.8),  # pm2 > t >= pm1
+        (0.8, 0.9), (0.9, 0.8),  # both views above t
+        (0.3, 0.6), (0.7, 0.7),  # neither view above t
+        (nan, 0.5), (0.9, nan), (nan, 0.9), (nan, nan),  # NaN posteriors
+    ]
+    df = spark.createDataFrame(
+        [(i, 0.0, pm1, 1.0, pm2) for i, (pm1, pm2) in enumerate(pms)],
+        "id int, __pred1 double, __pm1 double, __pred2 double, __pm2 double",
+    )
+    pm1, pm2 = F.col("__pm1"), F.col("__pm2")
+    either = (pm1 > t) | (pm2 > t)
+    winner = F.when(
+        (pm1 > t) & ((pm1 >= pm2) | (pm2 <= t)), F.col("__pred1")
+    ).otherwise(F.col("__pred2"))
+    merged = df.select("id", either.alias("either"), winner.alias("winner"), *_better_view())
+    confident = CoTraining(threshold=t)._confident()
+    rows = merged.select("id", "either", "winner", "prediction", confident.alias("c")).collect()
+    assert len(rows) == len(pms)
+    for r in rows:
+        assert r["c"] == r["either"], pms[r["id"]]
+        if r["either"]:
+            assert r["prediction"] == r["winner"], pms[r["id"]]
+    # every case is exercised: both outcomes of the rule, both labels
+    assert {r["c"] for r in rows} == {True, False}
+    assert {r["winner"] for r in rows if r["either"]} == {0.0, 1.0}
+
+
 def test_paired_fold_ttest_deterministic_and_sane(spark):
     from tfm_semisup_spark.queries import QUERIES, load_all_queries
 

@@ -47,13 +47,12 @@ def fitted(masked):
 
 
 def test_summary_bookkeeping(fitted, masked):
-    model, tt = fitted
+    model, _ = fitted
     s = model.ss_summary
     assert s.labeled_initial + s.unlabeled_initial == masked.count()
     assert 1 <= s.iterations <= 4
     assert s.labeled_final >= s.labeled_initial
     assert s.labeled_final + s.unlabeled_final == masked.count()
-    assert tt.last_fit_summary is s
 
 
 def test_transform_majority_vote(fitted, masked):

@@ -14,10 +14,13 @@ disjoint feature-column views over one shared pool (VERDICT r5 #7).
 
 Same promotion criteria as SelfTraining (threshold / kBest; in kBest
 the per-iteration budget comes from the TOTAL unlabeled count,
-``CoTraining.scala:199``, and applies to each view). Same physical
-re-engineering, through the same ``_SSCParams`` steps: isnan
-complementary-filter split, localCheckpoint per iteration, arithmetic
-pool-size bookkeeping, codegen'd probMax.
+``CoTraining.scala:199``, and applies to each view). Both view
+constructions promote through the same ``_SSCParams`` steps as
+SelfTraining; the feature split first merges its two views' scores
+into one (prediction, probMax) frame, the higher posterior winning.
+Same physical re-engineering: isnan complementary-filter split,
+localCheckpoint per iteration, arithmetic pool-size bookkeeping,
+codegen'd probMax.
 """
 
 from __future__ import annotations
@@ -29,6 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from tfm_semisup_spark.operators.lineage import release
+from tfm_semisup_spark.operators.results import SemiSupervisedSummary
 from tfm_semisup_spark.operators.self_training import (
     SelfTrainingModel,
     _SSCParams,
@@ -36,6 +40,20 @@ from tfm_semisup_spark.operators.self_training import (
 )
 
 _SPLIT_SEED = 8  # reference: `CoTraining.scala:137,140`
+
+
+def _better_view() -> list:
+    """The feature split's two view scores (``__pred1``, ``__pm1``,
+    ``__pred2``, ``__pm2``) merged into (prediction, probMax): the
+    higher posterior and its view's label, view 1's on ties. Since
+    ``greatest(pm1, pm2) > t`` iff ``pm1 > t or pm2 > t`` (also under
+    Spark's NaN-is-largest ordering), the threshold rule on the merged
+    frame promotes exactly the rows where either view is confident."""
+    pm1, pm2 = F.col("__pm1"), F.col("__pm2")
+    return [
+        F.when(pm1 >= pm2, F.col("__pred1")).otherwise(F.col("__pred2")).alias("prediction"),
+        F.greatest(pm1, pm2).alias("probMax"),
+    ]
 
 
 class CoTraining(Estimator, _SSCParams):
@@ -145,7 +163,7 @@ class CoTraining(Estimator, _SSCParams):
                 model2 = base.fit(lab2)
                 it += 1
 
-        summary = self._summarize(
+        summary = SemiSupervisedSummary(
             n_lab_ini, n_unlab_ini, n_lab1 + n_lab2, n_unlab1 + n_unlab2, it
         )
         # final model: fit on the union of both views' pools
@@ -161,12 +179,15 @@ class CoTraining(Estimator, _SSCParams):
         """Classic Blum-Mitchell co-training (viewSplit='features'):
         the feature vector is sliced into two disjoint halves; one
         shared labeled pool trains two classifiers, each seeing only
-        its half. Both score the SHARED unlabeled pool; a row is
-        promoted when either view is confident (threshold) or lands in
-        the global top-k by the better view's posterior (kBest), with
-        the higher-posterior view supplying the pseudo-label. The
-        final model is fit on the FULL feature vector so it is usable
-        downstream exactly like the instance-split model.
+        its half. Both score the SHARED unlabeled pool into one frame
+        whose prediction is the higher-posterior view's label (view 1
+        on ties) and whose probMax is the higher posterior; that frame
+        promotes through the shared ``_checkpoint_scored`` and
+        ``_promote`` steps, so a row is promoted when either view is
+        confident (threshold) or lands in the global top k of
+        ``kbest_order`` (kBest). The final model is fit on the FULL
+        feature vector so it is usable downstream exactly like the
+        instance-split model.
 
         Physical shape matches the instance-split loop: per-iteration
         lineage truncation, complementary filters, arithmetic pool
@@ -174,10 +195,8 @@ class CoTraining(Estimator, _SSCParams):
         each iteration costs two narrow model scans plus the MLlib
         fits."""
         from pyspark.ml.feature import VectorSlicer
-        from pyspark.ml.functions import vector_to_array
 
         base = self.baseClassifier
-        criterion = self.getOrDefault(self.criterion)
         max_iter = self.getOrDefault(self.maxIter)
         feats = self.getOrDefault(self.featuresCol)
         label = self.getOrDefault(self.labelCol)
@@ -213,8 +232,6 @@ class CoTraining(Estimator, _SSCParams):
         model2 = base2.fit(labeled)
         it = 1
         k = self._kbest_budget(n_unlab_ini)
-        t = self.getOrDefault(self.threshold)
-        either = (F.col("__pm1") > t) | (F.col("__pm2") > t)
 
         pool_src = unlabeled
         while it < max_iter and n_unlab > 0:
@@ -225,60 +242,24 @@ class CoTraining(Estimator, _SSCParams):
                 F.col("prediction").alias("__pred1"),
                 posterior(model1).alias("__pm1"),
             )
-            # the threshold branch's promoted count comes out of this
-            # checkpoint job
-            scored, n = self._truncate_counting(
-                model2.transform(scored).select(
-                    feats,
-                    "__v1",
-                    "__v2",
-                    "__pred1",
-                    "__pm1",
-                    F.col("prediction").alias("__pred2"),
-                    posterior(model2).alias("__pm2"),
-                ),
-                "scored pool",
-                confident=either,
+            scored = model2.transform(scored).select(
+                feats,
+                "__v1",
+                "__v2",
+                "__pred1",
+                "__pm1",
+                F.col("prediction").alias("__pred2"),
+                posterior(model2).alias("__pm2"),
+            )
+            preds, n_confident = self._checkpoint_scored(
+                scored.select(feats, "__v1", "__v2", *_better_view())
             )
             release(pool_src)
-            pool_src = scored
-
-            if criterion == "threshold":
-                # view 1 supplies the label iff it is confident AND
-                # (better than view 2 OR view 2 is not confident)
-                winner = F.when(
-                    (F.col("__pm1") > t)
-                    & ((F.col("__pm1") >= F.col("__pm2")) | (F.col("__pm2") <= t)),
-                    F.col("__pred1"),
-                ).otherwise(F.col("__pred2"))
-                promoted = scored.where(either)
-                rest = scored.where(~either)
-                n_promoted = n["confident"]
-            else:
-                # the better-posterior view supplies the pseudo-label
-                winner = F.when(
-                    F.col("__pm1") >= F.col("__pm2"), F.col("__pred1")
-                ).otherwise(F.col("__pred2"))
-                with_best = scored.withColumn(
-                    "__best", F.greatest("__pm1", "__pm2")
-                )
-                order = [
-                    F.desc("__best"),
-                    F.xxhash64(
-                        vector_to_array(F.col(feats)),
-                        F.col("__pred1"),
-                        F.col("__pred2"),
-                    ),
-                ]
-                promoted = with_best.orderBy(*order).limit(k).drop("__best")
-                rest = scored.exceptAll(promoted)
-                n_promoted = min(k, n_unlab)
-
-            as_labeled = promoted.select(
-                feats, "__v1", "__v2", winner.alias(label)
+            pool_src = preds
+            promoted, unlabeled, n_promoted = self._promote(
+                preds, n_confident, k, n_unlab
             )
-            unlabeled = rest.select(feats, "__v1", "__v2")
-            grown = self._truncate_lineage(labeled.unionAll(as_labeled))
+            grown = self._truncate_lineage(labeled.unionAll(promoted))
             release(labeled)
             labeled = grown
             n_unlab -= n_promoted
@@ -289,7 +270,7 @@ class CoTraining(Estimator, _SSCParams):
                 model2 = base2.fit(labeled)
                 it += 1
 
-        summary = self._summarize(n_lab_ini, n_unlab_ini, n_lab, n_unlab, it)
+        summary = SemiSupervisedSummary(n_lab_ini, n_unlab_ini, n_lab, n_unlab, it)
         final_model = base.fit(labeled.select(feats, label))
         release(pool_src)
         release(labeled)

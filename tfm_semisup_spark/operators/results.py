@@ -5,12 +5,11 @@ side-channel (``SemiSupervisedDataResults.scala:3-11``, written from
 inside estimators at ``SelfTraining.scala:199-203``). A shared mutable
 object is not reproducible under concurrent fits; instead each fit
 returns its bookkeeping as an immutable summary attached to the model
-(``model.ss_summary``) and to the estimator (``estimator.last_fit_summary``).
-
-Under ``evaluation.cross_validate`` every fold fits its own copy of
-the pipeline (the folds run concurrently), so the caller's estimator
-never receives ``last_fit_summary`` from a CV: read the per-fold
-summaries off the fold models, or the averaged ``CVResult.ss_summary``.
+it returns (``model.ss_summary``), the one place the summary lives.
+Estimators keep no state from a fit, so the folds of
+``evaluation.cross_validate``, which fit concurrently, share nothing:
+read the per-fold summaries off the fold models, or the averaged
+``CVResult.ss_summary``.
 """
 
 from __future__ import annotations

@@ -150,7 +150,6 @@ class _SSCParams(Params):
             **defaults,
         )
         self._set(**kwargs)
-        self.last_fit_summary: SemiSupervisedSummary | None = None
 
     def copy(self, extra=None):
         """A copy with its own copy of the base classifier, so copies
@@ -166,15 +165,6 @@ class _SSCParams(Params):
         criterion = self.getOrDefault(self.criterion)
         if criterion not in CRITERIA:
             raise ValueError(f"criterion must be one of {CRITERIA}, got {criterion!r}")
-
-    def _summarize(
-        self, n_lab_ini: int, n_unlab_ini: int, n_lab: int, n_unlab: int, iterations: int
-    ) -> SemiSupervisedSummary:
-        """The fit's pool bookkeeping, also kept as ``last_fit_summary``."""
-        self.last_fit_summary = SemiSupervisedSummary(
-            n_lab_ini, n_unlab_ini, n_lab, n_unlab, iterations
-        )
-        return self.last_fit_summary
 
     # -- pseudo-labelling steps ------------------------------------------
 
@@ -226,20 +216,28 @@ class _SSCParams(Params):
         return labeled, unlabeled, n["labeled"], n["unlabeled"]
 
     def _score(self, model, pool: DataFrame):
-        """(preds, n_confident): the pool scored into (features,
-        prediction, probMax), truncated so each round's plan starts
-        from materialized data, not the whole history, and the number
-        of its rows with ``probMax > threshold``, counted inside that
-        checkpoint job."""
+        """``_checkpoint_scored`` of the pool scored into (features,
+        prediction, probMax)."""
         feats = self.getOrDefault(self.featuresCol)
-        preds, n = self._truncate_counting(
+        return self._checkpoint_scored(
             model.transform(pool)
             .withColumn("probMax", posterior(model))
-            .select(feats, "prediction", "probMax"),
-            "scored pool",
-            confident=F.col("probMax") > self.getOrDefault(self.threshold),
+            .select(feats, "prediction", "probMax")
+        )
+
+    def _checkpoint_scored(self, scored: DataFrame):
+        """(preds, n_confident): a scored pool (any columns plus
+        prediction and probMax) truncated so each round's plan starts
+        from materialized data, not the whole history, and the number
+        of its ``_confident`` rows, counted inside that checkpoint job."""
+        preds, n = self._truncate_counting(
+            scored, "scored pool", confident=self._confident()
         )
         return preds, n["confident"]
+
+    def _confident(self):
+        """The threshold rule: ``probMax > threshold`` (``SelfTraining.scala:146-170``)."""
+        return F.col("probMax") > self.getOrDefault(self.threshold)
 
     def _kbest_budget(self, n_unlabeled: int) -> int:
         """Rows promoted per round under kBest, fixed up front from the
@@ -255,25 +253,25 @@ class _SSCParams(Params):
 
     def _promote(self, preds: DataFrame, n_confident: int, k: int, n_pool: int):
         """Split a scored pool into (promoted, rest, n_promoted), both
-        frames as (features, label = prediction); no Spark job. threshold:
-        ``probMax > threshold`` (``SelfTraining.scala:146-170``), whose
-        size ``_score`` already counted (``n_confident``). kBest: the
-        global top k in ``kbest_order`` (``:172-196``), min(k, pool)
-        rows; rest is ``exceptAll`` because its multiset semantics are
-        load-bearing."""
-        feats = self.getOrDefault(self.featuresCol)
-        label = self.getOrDefault(self.labelCol)
+        frames carrying every column of ``preds`` but prediction and
+        probMax, plus label = prediction; no Spark job. threshold: the
+        ``_confident`` rows, which ``_checkpoint_scored`` already counted
+        (``n_confident``). kBest: the global top k in ``kbest_order``
+        (``SelfTraining.scala:172-196``), min(k, pool) rows; rest is
+        ``exceptAll`` because its multiset semantics are load-bearing."""
         if self.getOrDefault(self.criterion) == "threshold":
-            confident = F.col("probMax") > self.getOrDefault(self.threshold)
+            confident = self._confident()
             promoted = preds.where(confident)
             rest = preds.where(~confident)
             n_promoted = n_confident
         else:
+            feats = self.getOrDefault(self.featuresCol)
             promoted = preds.orderBy(*kbest_order(feats)).limit(k)
             rest = preds.exceptAll(promoted)
             n_promoted = min(k, n_pool)
-        as_label = F.col("prediction").alias(label)
-        return promoted.select(feats, as_label), rest.select(feats, as_label), n_promoted
+        cols = [c for c in preds.columns if c not in ("prediction", "probMax")]
+        cols.append(F.col("prediction").alias(self.getOrDefault(self.labelCol)))
+        return promoted.select(*cols), rest.select(*cols), n_promoted
 
 
 class _SSCModelWriter(MLWriter):
@@ -420,5 +418,5 @@ class SelfTraining(Estimator, _SSCParams):
 
         release(prev_preds)
         release(labeled)
-        summary = self._summarize(n_lab_ini, n_unlab_ini, n_lab, n_unlab, it)
+        summary = SemiSupervisedSummary(n_lab_ini, n_unlab_ini, n_lab, n_unlab, it)
         return SelfTrainingModel(model, summary)

@@ -17,6 +17,7 @@ from pyspark.ml import Estimator
 from pyspark.sql import DataFrame
 
 from tfm_semisup_spark.operators.lineage import release
+from tfm_semisup_spark.operators.results import SemiSupervisedSummary
 from tfm_semisup_spark.operators.self_training import SelfTrainingModel, _SSCParams
 
 
@@ -35,7 +36,7 @@ class Supervised(Estimator, _SSCParams):
 
     def _fit(self, dataset: DataFrame) -> SelfTrainingModel:
         labeled, _, n_lab, n_unlab = self._split_pools(dataset)
-        summary = self._summarize(n_lab, n_unlab, n_lab, n_unlab, 0)
+        summary = SemiSupervisedSummary(n_lab, n_unlab, n_lab, n_unlab, 0)
         model = self.baseClassifier.fit(labeled)
         release(labeled)
         return SelfTrainingModel(model, summary)

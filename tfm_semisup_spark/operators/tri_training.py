@@ -55,12 +55,23 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from tfm_semisup_spark.operators.lineage import release
+from tfm_semisup_spark.operators.results import SemiSupervisedSummary
 from tfm_semisup_spark.operators.self_training import _SSCModel, _SSCParams
 
 #: deterministic stand-in for bootstrap sampling: keep rows whose
 #: content hash lands under 632/1000 (a bootstrap's expected unique
 #: fraction, 1 - 1/e).
 _BOOT_PERMILLE = 632
+
+
+def _vote_columns(models, df: DataFrame) -> DataFrame:
+    """``df`` plus each model's prediction as ``__p0``, ``__p1``, ...:
+    the models score one after another in one narrow pass."""
+    for i, m in enumerate(models):
+        df = m.transform(df).select(
+            *[F.col(c) for c in df.columns], F.col("prediction").alias(f"__p{i}")
+        )
+    return df
 
 
 class TriTrainingModel(_SSCModel):
@@ -71,13 +82,7 @@ class TriTrainingModel(_SSCModel):
         self.models = models or []
 
     def _transform(self, dataset: DataFrame) -> DataFrame:
-        out = dataset
-        for i, m in enumerate(self.models):
-            scored = m.transform(out)
-            out = scored.select(
-                *[F.col(c) for c in out.columns],
-                F.col("prediction").alias(f"__p{i}"),
-            )
+        out = _vote_columns(self.models, dataset)
         # majority: 2-of-3 agreement wins; full disagreement -> h1
         p1, p2 = F.col("__p1"), F.col("__p2")
         vote = (
@@ -130,15 +135,8 @@ class TriTraining(Estimator, _SSCParams):
         """One pass: pool + __p0/__p1/__p2 prediction columns,
         checkpointed, and the rows satisfying each condition counted
         inside that checkpoint job."""
-        out = pool
-        for i, m in enumerate(models):
-            scored = m.transform(out)
-            out = scored.select(
-                *[F.col(c) for c in out.columns], F.col("prediction").alias(f"__p{i}")
-            )
-        return self._truncate_counting(
-            out.select(*extra_cols, "__p0", "__p1", "__p2"), name, **conditions
-        )
+        votes = _vote_columns(models, pool).select(*extra_cols, "__p0", "__p1", "__p2")
+        return self._truncate_counting(votes, name, **conditions)
 
     def _fit(self, dataset: DataFrame) -> TriTrainingModel:
         base = self.baseClassifier
@@ -241,7 +239,7 @@ class TriTraining(Estimator, _SSCParams):
         # augmented training set (L ∪ L_i) any classifier ended on,
         # which keeps labeled_final + unlabeled_final == total.
         max_accept = max(n_last_accept)
-        summary = self._summarize(
+        summary = SemiSupervisedSummary(
             n_lab_ini,
             n_unlab_ini,
             n_lab_ini + max_accept,

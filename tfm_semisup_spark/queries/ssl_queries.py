@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 from tfm_semisup_spark.featurization import ArrayToVector
 from tfm_semisup_spark.io import load_table
 from tfm_semisup_spark.operators.co_training import CoTraining
-from tfm_semisup_spark.operators.evaluation import evaluate_predictions
+from tfm_semisup_spark.operators.evaluation import cross_validate, evaluate_predictions
 from tfm_semisup_spark.operators.grid import (
     RESULTS_SCHEMA,
     build_ssl_grid,
@@ -415,37 +415,28 @@ def ssl_paired_fold_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-validated t-test over k fold-accuracy differences).
 
     Rows-only by necessity (MLlib tree fits), deterministic end to
-    end: hash folds (``assign_folds``), hash label masking, seeded
-    DTs. One row: (k_folds, mean_acc_ssl, mean_acc_sup, mean_diff,
-    t_stat); t = d̄ / (s_d/√k), 0.0 when every fold ties (s_d = 0 —
-    ANSI-safe, no 0/0)."""
-    import math
-
-    from tfm_semisup_spark.operators.evaluation import assign_folds
-
+    end: ``cross_validate`` over hash folds of ``vec_id``, hash label
+    masking of each fold's training rows, seeded DTs. One row:
+    (k_folds, mean_acc_ssl, mean_acc_sup, mean_diff, t_stat);
+    t = d̄ / (s_d/√k), 0.0 when every fold ties (s_d = 0 — ANSI-safe,
+    no 0/0)."""
     k = 3
     pts = _labeled_points(spark, sf_dir)
-    folded = assign_folds(pts, k, id_col="vec_id").localCheckpoint(eager=True)
-    masker = DeterministicLabelMasker(
-        percentageLabeled=0.3, idCol="vec_id", seed=11
-    )
-    diffs, accs_ssl, accs_sup = [], [], []
-    for fold in range(k):
-        train = masker.transform(folded.where(F.col("fold") != fold))
-        test = folded.where(F.col("fold") == fold)
-        ssl = SelfTraining(
-            baseClassifier=DecisionTreeClassifier(seed=5),
-            threshold=0.75,
-            maxIter=2,
-        ).fit(train)
-        sup = Supervised(baseClassifier=DecisionTreeClassifier(seed=5)).fit(
-            train
+
+    def fold_accuracies(est) -> list[float]:
+        masker = DeterministicLabelMasker(
+            percentageLabeled=0.3, idCol="vec_id", seed=11
         )
-        a_ssl = evaluate_predictions(ssl.transform(test)).accuracy
-        a_sup = evaluate_predictions(sup.transform(test)).accuracy
-        accs_ssl.append(a_ssl)
-        accs_sup.append(a_sup)
-        diffs.append(a_ssl - a_sup)
+        cv = cross_validate(pts, Pipeline(stages=[masker, est]), k=k, id_col="vec_id")
+        return [m.accuracy for m in cv.per_fold]
+
+    accs_ssl = fold_accuracies(
+        SelfTraining(
+            baseClassifier=DecisionTreeClassifier(seed=5), threshold=0.75, maxIter=2
+        )
+    )
+    accs_sup = fold_accuracies(Supervised(baseClassifier=DecisionTreeClassifier(seed=5)))
+    diffs = [a_ssl - a_sup for a_ssl, a_sup in zip(accs_ssl, accs_sup)]
     mean_d = sum(diffs) / k
     var_d = sum((d - mean_d) ** 2 for d in diffs) / (k - 1)
     t = 0.0 if var_d == 0.0 else mean_d / math.sqrt(var_d / k)
