@@ -58,7 +58,7 @@ import sys
 import time
 
 from tfm_semisup_spark.queries import QUERIES, load_all_queries
-from tfm_semisup_spark.session import get_spark
+from tfm_semisup_spark.session import codegen_compiles, get_spark
 
 # Headline set: one-or-two representatives per operator family
 # (join+agg, wide agg, window fns, event-time windows, as-of/range
@@ -338,6 +338,36 @@ def run_context(spark) -> dict:
     }
 
 
+def spread_payload(
+    samples: dict[str, list[float]],
+    runs: int,
+    sf: float,
+    calib_samples: dict[str, list[float]],
+    compiles: dict[str, int],
+    codegen_cache_max_entries: int,
+) -> dict:
+    """The ``bench_spread.json`` record: per-query [min, median, max]
+    over the timed samples, the raw calibration samples, and the
+    codegen cost. ``codegen_compiles`` is each query's generated-class
+    compile count summed over its timed samples (0 once the session's
+    cache holds the working set); ``codegen_cache_max_entries`` is the
+    session's effective cache size."""
+    return {
+        "metric": "per_query_min_median_max_sec",
+        "runs": runs,
+        "sf": sf,
+        "calib_samples": {
+            n: [round(v, 3) for v in s] for n, s in calib_samples.items()
+        },
+        "spread": {
+            name: [round(min(s), 3), round(statistics.median(s), 3), round(max(s), 3)]
+            for name, s in samples.items()
+        },
+        "codegen_compiles": compiles,
+        "codegen_cache_max_entries": codegen_cache_max_entries,
+    }
+
+
 def stdout_payload(
     timings: dict[str, float],
     total: float,
@@ -436,6 +466,7 @@ def main() -> None:
 
     runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "5")))
     samples: dict[str, list[float]] = {name: [] for name in HEADLINE}
+    compiles = dict.fromkeys(HEADLINE, 0)
     # calibration anchors bracket the timed region: 3 sample pairs
     # before pass 1, 3 after the last pass — a machine-state episode
     # confined to one end still moves the median visibly
@@ -447,9 +478,11 @@ def main() -> None:
     for _ in range(runs):
         for name in HEADLINE:
             fn = QUERIES[name]
+            compiled = codegen_compiles(spark)
             start = time.perf_counter()
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             samples[name].append(time.perf_counter() - start)
+            compiles[name] += codegen_compiles(spark) - compiled
             # Isolate queries from each other: drop cached plans, then
             # force a py->JVM GC so the ContextCleaner frees persist()/
             # checkpoint blocks whose handles just went out of scope.
@@ -521,31 +554,26 @@ def main() -> None:
     }
     total = round(sum(timings.values()), 3)
     # variance band to a sibling file FIRST (never stdout/stderr: the
-    # driver merges both streams and parses the capture's last line)
-    spread = {
-        name: [round(min(s), 3), round(statistics.median(s), 3), round(max(s), 3)]
-        for name, s in samples.items()
-    }
+    # driver merges both streams and parses the capture's last line);
     # write-to-temp-then-rename so a crash can never leave a partial
     # file; sf + optional run id in the payload identify which bench
     # run the spread belongs to (staleness detection)
-    spread_payload = {
-        "metric": "per_query_min_median_max_sec",
-        "runs": runs,
-        "sf": sf,
-        "calib_samples": {
-            n: [round(v, 3) for v in s] for n, s in calib_samples.items()
-        },
-        "spread": spread,
-    }
+    spread = spread_payload(
+        samples,
+        runs,
+        sf,
+        calib_samples,
+        compiles,
+        int(spark.conf.get("spark.sql.codegen.cache.maxEntries")),
+    )
     if parked_timings:
-        spread_payload["parked"] = parked_timings
+        spread["parked"] = parked_timings
     run_id = os.environ.get("SPARK_GRAFT_BENCH_RUN_ID")
     if run_id:
-        spread_payload["run_id"] = run_id
+        spread["run_id"] = run_id
     tmp_path = spread_path + ".tmp"
     with open(tmp_path, "w") as f:
-        json.dump(spread_payload, f)
+        json.dump(spread, f)
         f.write("\n")
     os.replace(tmp_path, spread_path)
     # stop the session BEFORE the stdout JSON: the driver merges

@@ -152,3 +152,23 @@ def test_run_context_reads_the_session(spark):
     assert context["master"] == spark.sparkContext.master
     assert context["default_parallelism"] == spark.sparkContext.defaultParallelism
     assert set(context) == {"master", "default_parallelism", "spark_graft_cpus"}
+
+
+def test_spread_payload_carries_codegen_cost():
+    """Per headline query, the compile count over its timed samples, and
+    the session's effective generated-class cache size, ride the spread
+    file only; the stdout line's keys do not change."""
+    samples = {name: [1.0, 2.0, 3.0] for name in bench.HEADLINE}
+    compiles = {name: i % 3 for i, name in enumerate(bench.HEADLINE)}
+    calib = {"cpu_sha256_sec": [0.4, 0.5]}
+    spread = json.loads(
+        json.dumps(bench.spread_payload(samples, 3, 0.1, calib, compiles, 1000))
+    )
+    assert spread["codegen_compiles"] == compiles
+    assert spread["codegen_cache_max_entries"] == 1000
+    assert spread["spread"] == {name: [1.0, 2.0, 3.0] for name in bench.HEADLINE}
+    assert spread["calib_samples"] == calib
+    assert (spread["runs"], spread["sf"]) == (3, 0.1)
+    timings = _worst_case_timings()
+    payload = bench.stdout_payload(timings, 1.0, 0.1, _worst_case_calib())
+    assert not {"codegen_compiles", "codegen_cache_max_entries"} & set(payload)

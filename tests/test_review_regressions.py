@@ -172,3 +172,25 @@ def test_session2_queries_leave_no_pinned_blocks(spark):
         release(df)
         leaked = _cached_rdd_ids(spark) - before
         assert not leaked, f"{name} left pinned RDDs: {leaked}"
+
+
+def test_score_based_roc_auc_leaves_no_pinned_blocks(spark):
+    """The AUC's per-score checkpoint is released once its aggregate has
+    returned; a checkpoint the caller's predictions read stays pinned."""
+    from pyspark.ml.linalg import Vectors
+
+    from tfm_semisup_spark.operators.evaluation import score_based_roc_auc
+    from tfm_semisup_spark.operators.lineage import release
+
+    rows = [(Vectors.dense([1 - s / 10, s / 10]), float(s % 2)) for s in range(10)]
+    predictions = spark.createDataFrame(rows, ["probability", "label"])
+    predictions = predictions.localCheckpoint(eager=True)
+    before = _cached_rdd_ids(spark)
+    try:
+        auc = score_based_roc_auc(predictions, n_range_partitions=4)
+        leaked = _cached_rdd_ids(spark) - before
+        assert not leaked, f"score_based_roc_auc left pinned RDDs: {leaked}"
+        # the caller's checkpoint is still readable
+        assert score_based_roc_auc(predictions, n_range_partitions=4) == auc
+    finally:
+        release(predictions)

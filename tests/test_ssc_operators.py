@@ -316,17 +316,17 @@ def test_score_auc_plan_has_no_unpartitioned_window(spark):
     from pyspark.ml.linalg import Vectors
 
     from tfm_semisup_spark.operators.evaluation import midranked_score_groups
+    from tfm_semisup_spark.operators.lineage import release
 
     rows = [
         (Vectors.dense([1 - s / 10, s / 10]), float(s % 2)) for s in range(10)
     ]
     df = spark.createDataFrame(rows, ["probability", "label"])
-    plan = (
-        midranked_score_groups(df, n_range_partitions=4)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
+    per_score, groups = midranked_score_groups(df, n_range_partitions=4)
+    try:
+        plan = groups._jdf.queryExecution().executedPlan().toString()
+    finally:
+        release(per_score)
     n_windows = 0
     for line in plan.splitlines():
         m = re.search(r"\bWindow\b.*windowspecdefinition\(([^)]*)\)", line)

@@ -117,7 +117,7 @@ def midranked_score_groups(
     probability_col: str = "probability",
     label_col: str = "label",
     n_range_partitions: int = 32,
-) -> DataFrame:
+) -> tuple[DataFrame, DataFrame]:
     """(score, cnt, pos_cnt, midrank) per distinct score, computed
     WITHOUT a global-sort window (an unpartitioned ``Window.orderBy``
     moves every row to ONE partition; a scale-killer on a 100 TB
@@ -131,6 +131,9 @@ def midranked_score_groups(
     3. the midrank of each score group = its partition's offset + the
        within-partition running count (a PARTITIONED window) +
        (cnt+1)/2 — classic two-phase distributed cumulative sum.
+
+    Returns (per-score checkpoint, midranked groups): the groups read
+    the checkpoint, so the caller releases it once it is done with them.
     """
     from pyspark.ml.functions import vector_to_array
     from pyspark.sql.window import Window
@@ -167,7 +170,7 @@ def midranked_score_groups(
         .orderBy("score")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    return (
+    return per_score, (
         per_score.join(F.broadcast(offsets_df), "pid")
         .withColumn("cum_through", F.sum("cnt").over(w_part))
         .select(
@@ -196,17 +199,17 @@ def score_based_roc_auc(
     average ranks for score ties, over the distributed midranks of
     ``midranked_score_groups`` (no single-partition sort anywhere).
     """
-    agg = (
-        midranked_score_groups(
-            predictions, probability_col, label_col, n_range_partitions
-        )
-        .agg(
+    per_score, groups = midranked_score_groups(
+        predictions, probability_col, label_col, n_range_partitions
+    )
+    try:
+        agg = groups.agg(
             F.sum(F.col("pos_cnt") * F.col("midrank")).alias("r_pos"),
             F.sum("pos_cnt").alias("p"),
             F.sum(F.col("cnt") - F.col("pos_cnt")).alias("n"),
-        )
-        .head()
-    )
+        ).head()
+    finally:
+        release(per_score)
     p, n = agg["p"], agg["n"]
     if not p or not n:
         return 0.0

@@ -10,6 +10,18 @@ a 1000-executor cluster, while remaining correct on local[N]:
 - Arrow on for the few pandas boundaries (never in hot paths).
 - Parquet filter/column pushdown left at defaults (on) — all queries
   are expressed declaratively so Catalyst can push them.
+- The generated-class cache (``spark.sql.codegen.cache.maxEntries``)
+  sized to the package's working set, so each whole-stage class is
+  compiled once per application and reused by every later shard, CV
+  fold and bench sample. The conf is static: it is read when the JVM
+  first generates code, so a session built outside this factory (the
+  vanilla session of ``scripts/driver_sim.py``) must pass it at launch
+  to get the same reuse; setting it at runtime is an error. Whole-stage
+  class names leave out the codegen stage id
+  (``spark.sql.codegen.useIdInClassName``, a runtime conf): the cache is
+  keyed by source text, and AQE numbers a query's stages in the order
+  its shuffle stages finish, so with the id in the name a repeated plan
+  can miss the cache on a renumbered stage.
 """
 
 from __future__ import annotations
@@ -19,6 +31,14 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
+# One corpus-dedup shard (pipeline, cascade report, semantic dedup)
+# generates 179 distinct classes against Spark's default of 100
+# entries: with the default every steady-state shard compiled 175 of
+# them again (CodegenMetrics compile count, 4 cores), and each
+# recompiled class is loaded, interpreted and JIT-compiled again.
+# Without the stage id in class names the shard needs 171, and a
+# repeated shard compiles none.
+CODEGEN_CACHE_MAX_ENTRIES = 1000
 
 
 def get_spark(
@@ -53,7 +73,18 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_MAX_ENTRIES))
+        .config("spark.sql.codegen.useIdInClassName", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Classes the JVM's code generator has compiled so far: the
+    process-wide count of ``CodegenMetrics.METRIC_COMPILATION_TIME``,
+    which grows by one per generated-class cache miss. Read it before
+    and after a unit of work; the delta is what that unit compiled."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())
